@@ -7,8 +7,9 @@ larger sf by replicating an existing sf dir N times with disjoint key
 spaces:
 
 * int64 primary keys and their foreign-key references into replicated
-  tables get `key + copy * 10**12`, so joins stay 1:1-shaped (no
-  cross-copy fan-out) and every copy's keys are globally unique;
+  tables get `key + copy * 10**7` (`doc_id`: `+ copy * 10**5`), so joins
+  stay 1:1-shaped (no cross-copy fan-out) and every copy's keys are
+  globally unique; the source keys must stay below those offsets;
 * the tiny fixed dimensions (region, nation) are copied once, and the
   int32 nation/region FK columns are left untouched so those joins keep
   their original fan-in;
@@ -60,14 +61,23 @@ def scale_table(src: str, dst: str, name: str, copies: int) -> int:
     if name in SINGLETON:
         pq.write_table(t, dst)
         return t.num_rows
+    offsets = {
+        col: DOC_OFFSET if col == "doc_id" else OFFSET for col in REMAP.get(name, ())
+    }
+    for col, off in offsets.items():
+        top = pc.max(t.column(col)).as_py() or 0
+        # keys at or above the offset would collide with the next copy's
+        if top >= off:
+            raise ValueError(f"{name}.{col}: max key {top} >= offset {off}")
+        if col == "doc_id" and top + (copies - 1) * off >= 10**6:
+            raise ValueError(f"{name}.doc_id: {copies} copies exceed lpad(6)")
     parts = []
     for c in range(copies):
         cols = {}
         for field in t.schema:
             col = t.column(field.name)
-            if c and field.name in REMAP.get(name, ()):
-                off = DOC_OFFSET if field.name == "doc_id" else OFFSET
-                col = pc.add(col, pa.scalar(c * off, type=field.type))
+            if c and field.name in offsets:
+                col = pc.add(col, pa.scalar(c * offsets[field.name], type=field.type))
             elif c and name == "documents" and field.name == "text":
                 col = pc.binary_join_element_wise(col, f"kopie{c:02d}", " ")
             cols[field.name] = col

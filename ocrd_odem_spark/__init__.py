@@ -5,6 +5,8 @@ post-processing/extraction semantics over interleaved text+media span
 tables.  See README.md for the architecture.
 """
 
-from . import constants, schema  # noqa: F401
+# no pyspark import here: ``python -m ocrd_odem_spark.worker_daemon`` runs this
+# first, and the daemon must prune the worker's path before pyspark loads
+from . import constants  # noqa: F401
 
 __version__ = "0.1.0"

@@ -94,11 +94,12 @@ def extract(
     ``mode``:
       * ``"hof"``   — pure-JVM higher-order expressions (zero Python, zero
         shuffle; HOFs are CodegenFallback-interpreted).
-      * ``"arrow"`` — Arrow-batched ``mapInPandas`` executing the oracle
-        semantics directly (measured ~2.7x faster on the bench corpus; the
-        span payload crosses the Arrow boundary once each way).  Metrics
-        and metadata joins are only available in hof mode; both modes are
-        proven byte-identical in tests.
+      * ``"arrow"`` — one columnar ``mapInArrow`` stage executing the
+        oracle semantics directly (measured ~2.7x faster on the bench
+        corpus; the span payload crosses the Arrow boundary once each way).
+        It supports ``dehyphenate`` and ``with_metrics``; the metadata joins
+        are only available in hof mode.  Both modes are proven
+        byte-identical in tests.
 
     * ``page_meta``: optional page dimension with ``label`` / ``log_types``;
       blacklisted pages (Colorchecker/Leerseite labels, cover_* log types)
@@ -276,7 +277,9 @@ def extract_arrow(
             out_t: list = []
             out_r: list = []
             out_o: list[int] = []
-            list_off = np.empty(n + 1, dtype=np.int32)
+            # int64 here; pa.array(..., pa.int32()) below raises rather
+            # than wraps should one batch ever exceed 2**31 output spans
+            list_off = np.empty(n + 1, dtype=np.int64)
             list_off[0] = 0
             metrics = (
                 np.empty((5, n), dtype=np.int64) if with_metrics else None

@@ -3,6 +3,20 @@
 Sized for the sandbox (single JVM, local[N]) but every knob is the one you
 would set on a 1000-executor cluster: AQE with skew-join handling, Arrow for
 any pandas-UDF exchange, shuffle partitions matched to parallelism.
+
+Python workers start from ``ocrd_odem_spark.worker_daemon``.  Spark puts its
+own archives (``pyspark.zip``, the py4j zip, the 37 MB spark-core jar) first
+on the worker's ``PYTHONPATH``, and a reused worker calls
+``importlib.invalidate_caches()`` at the start of every task, which makes
+CPython 3.11 re-read each cached zip importer's central directory: 0.2-0.5 s
+per task, against ~2 ms for the extract's own ``mapInArrow`` function.  The
+daemon imports ``pyspark`` from the installed package instead.  The
+``jobs/*.py`` spark-submit entry points build their own session and are left
+alone: they ship this package with ``--py-files``, so it is not importable
+when a worker daemon starts.
+
+Spark's ``pythonInitTime`` SQL metric also counts the time a reused worker
+waits for its next task, so it is not pure worker set-up time.
 """
 
 from __future__ import annotations
@@ -24,8 +38,9 @@ def get_spark(
     if shuffle_partitions is None:
         shuffle_partitions = max(cores, 8)
     # Python workers resolve imports from PYTHONPATH, not the driver's
-    # sys.path — make the engine importable on executors regardless of cwd
-    # (cluster deployments ship the package via spark-submit --py-files).
+    # sys.path — make the engine (and its worker daemon) importable on
+    # executors regardless of cwd (cluster deployments ship the package via
+    # spark-submit --py-files).
     pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     existing = os.environ.get("PYTHONPATH", "")
     if pkg_root not in existing.split(os.pathsep):
@@ -45,6 +60,7 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "ocrd_odem_spark.worker_daemon")
         .config("spark.sql.session.timeZone", "UTC")
     )
     # JVM tuning hook (e.g. GC choice) — local mode runs everything in the
