@@ -6,8 +6,10 @@ empty-line drop, optional de-hyphenation fold, re-offset — all Catalyst
 higher-order functions inside one whole-stage-codegen span.  The only wide
 operation in the flagship plan is an optional broadcast join against the
 (small) page-blacklist dimension.  At 100 TB this means: zero shuffles of
-the fact table, linear scaling with input splits, and skew from oversized
-"book" documents bounded by single-row cost rather than hot shuffle keys.
+the fact table, linear scaling with input splits (an input smaller than
+one split reaches the Arrow extract's Python stage as one task per core,
+see ``extract_arrow``), and skew from oversized "book" documents bounded by
+single-row cost rather than hot shuffle keys.
 
 Stage order reproduces the reference (``ocr_files.py:62-91``): blacklist
 filters precede token ops; the trailing-punct split precedes the min-length
@@ -179,8 +181,23 @@ def extract_arrow(
     Why this exists alongside the HOF plan: Spark's higher-order array
     functions are CodegenFallback (interpreted, per-element object churn),
     while this path moves each Arrow batch into Python once and runs plain
-    tight loops.  It is still narrow (no shuffle), still per-partition
-    parallel, and the payload crosses the Arrow boundary exactly twice.
+    tight loops.  It is still narrow (no shuffle), and the payload crosses
+    the Arrow boundary exactly twice.
+
+    Python tasks are sized by input bytes when the whole input fits in one
+    scan split (``spark.sql.files.maxPartitionBytes``) and is read straight
+    from its source (only filters and projections above the relation): such
+    an input is coalesced to ``defaultParallelism`` tasks.  A file scan
+    charges every file ``openCostInBytes`` (4 MB by default) on top of its
+    bytes, so a table of many small files reaches the Python stage as many
+    tiny splits; 1000 one-document files give 32 tasks on 4 cores with the
+    default settings.  Every Python task costs about 47 ms of worker time
+    (the daemon's per-task ``gc.collect()``) plus about 28 ms of JVM CPU on
+    4 vCPUs, whatever it carries.  ``coalesce`` merges adjacent partitions
+    without looking at their bytes, so the size guard keeps a merged task
+    within one split.  Larger inputs, inputs of unknown size and inputs
+    whose partitions come from a repartition (``repartition_for_scale``),
+    join, union or aggregate keep their partitions.
 
     r6.2 boundary rewrite (guide §4.2): the earlier ``mapInPandas`` form
     paid one Python dict per SPAN on the way in (pyarrow's
@@ -333,15 +350,31 @@ def extract_arrow(
     span_t = (
         "array<struct<kind:string,text:string,media_ref:string,offset:int>>"
     )
+    schema = f"doc_id string, spans {span_t}"
     if with_metrics:
-        schema = (
-            f"doc_id string, spans {span_t}, n_pages long, n_lines_in long, "
-            "n_lines_out long, n_tokens_out long, n_dehyphenated long"
+        schema += (
+            ", n_pages long, n_lines_in long, n_lines_out long, "
+            "n_tokens_out long, n_dehyphenated long"
         )
-        return docs.select("doc_id", "spans").mapInArrow(run, schema=schema)
-    return docs.select("doc_id", "spans").mapInArrow(
-        run, schema=f"doc_id string, spans {span_t}"
+    return _python_sized(docs.select("doc_id", "spans")).mapInArrow(
+        run, schema=schema
     )
+
+
+def _python_sized(df: DataFrame) -> DataFrame:
+    """``df`` coalesced to ``defaultParallelism`` tasks when it is read
+    straight from its source and its estimated size is at most one scan
+    split; otherwise ``df`` itself (see ``extract_arrow``).  An unknown
+    size is estimated at ``Long.MaxValue`` and so never coalesced."""
+    jdf = df._jdf
+    node = jdf.queryExecution().optimizedPlan()
+    size = int(node.stats().sizeInBytes())
+    while node.nodeName() in ("Project", "Filter"):
+        node = node.children().apply(0)
+    split = jdf.sparkSession().sessionState().conf().filesMaxPartitionBytes()
+    if size > split or not node.children().isEmpty():
+        return df
+    return df.coalesce(df.sparkSession.sparkContext.defaultParallelism)
 
 
 def relevance_filter(doc_meta: DataFrame) -> DataFrame:

@@ -293,3 +293,64 @@ def test_extract_arrow_boundary_edge_shapes(spark):
             ).collect()
         }
         assert arrow == hof
+
+
+def test_extract_arrow_sizes_python_tasks_by_bytes(spark, corpus, tmp_path):
+    """The Arrow extract runs an input that fits in one scan split
+    (``maxPartitionBytes``) as ``defaultParallelism`` Python tasks, and
+    leaves larger inputs and explicitly repartitioned inputs alone; the
+    output still equals the oracle."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from ocrd_odem_spark import oracle
+    from ocrd_odem_spark.plans import pipeline
+    from ocrd_odem_spark.schema import DOCS_SCHEMA
+
+    table = pa.Table.from_pylist(corpus, schema=to_arrow_schema(DOCS_SCHEMA))
+    n_files = 32
+    bounds = [i * len(corpus) // n_files for i in range(n_files + 1)]
+    files = []
+    for i in range(n_files):
+        files.append(str(tmp_path / f"part-{i:05d}.parquet"))
+        pq.write_table(table.slice(bounds[i], bounds[i + 1] - bounds[i]), files[-1])
+    sizes = [os.path.getsize(f) for f in files]
+
+    keys = ("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
+    saved = {k: spark.conf.get(k) for k in keys}
+    try:
+        # one split per file, as on a many-small-files input
+        for k in keys:
+            spark.conf.set(k, str(4 * 1024 * 1024))
+        docs = spark.read.parquet(str(tmp_path))
+        assert docs.rdd.getNumPartitions() == n_files
+        out = pipeline.extract(docs, dehyphenate=True, mode="arrow")
+        assert out.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+        got = {
+            r["doc_id"]: [tuple(s) for s in r["spans"]] for r in out.collect()
+        }
+        assert got == {
+            d["doc_id"]: [
+                (s["kind"], s["text"], s["media_ref"], s["offset"])
+                for s in oracle.extract_document_dehyphenated(d["spans"])
+            ]
+            for d in corpus
+        }
+
+        # an explicit range repartition keeps its partitions
+        ranged = pipeline.repartition_for_scale(docs, n_files)
+        out = pipeline.extract(ranged, dehyphenate=True, mode="arrow")
+        assert out.rdd.getNumPartitions() == n_files
+
+        # ceil(size / split) >= 32, so more than one split: left alone
+        spark.conf.set(keys[0], str(sum(sizes) // n_files))
+        docs = spark.read.parquet(str(tmp_path))
+        assert docs.rdd.getNumPartitions() >= n_files
+        out = pipeline.extract(docs, dehyphenate=True, mode="arrow")
+        assert out.rdd.getNumPartitions() == docs.rdd.getNumPartitions()
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
