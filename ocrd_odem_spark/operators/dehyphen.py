@@ -17,7 +17,7 @@ would pay an Arrow round-trip per document.
 
 Page boundaries (media spans / media_ref changes) terminate merge chains,
 matching the reference's per-page invocation (``textlines2data`` receives one
-page's lines).
+page's lines).  Two null media_refs are the same page, as in the oracle.
 
 SCALE NOTE: the fold's array-append accumulator copies the output array each
 step — O(n²) per document.  ``dehyphenate_spans`` therefore dispatches:
@@ -97,7 +97,7 @@ def _merge_scope(eff: Column, cur: Column, nxt: Column) -> Column:
         (cur["kind"] == "text")
         & nxt.isNotNull()
         & (nxt["kind"] == "text")
-        & (nxt["media_ref"] == cur["media_ref"])
+        & nxt["media_ref"].eqNullSafe(cur["media_ref"])
         & F.endswith(eff, F.lit("-"))
     )
 
@@ -293,7 +293,7 @@ def _dehyphenate_fold(spans: Column) -> Column:
             (cur["kind"] == "text")
             & nxt.isNotNull()
             & (nxt["kind"] == "text")
-            & (nxt["media_ref"] == cur["media_ref"])
+            & nxt["media_ref"].eqNullSafe(cur["media_ref"])
             & F.endswith(eff, F.lit("-"))
         )
         merged_text = F.concat(

@@ -176,7 +176,7 @@ def extract_arrow(
     docs: DataFrame, dehyphenate: bool = False, with_metrics: bool = False
 ) -> DataFrame:
     """Arrow-batched extraction: ``mapInArrow`` running the exact oracle
-    loops per document over flat columnar buffers.
+    line functions over each batch's flat columnar buffers.
 
     Why this exists alongside the HOF plan: Spark's higher-order array
     functions are CodegenFallback (interpreted, per-element object churn),
@@ -201,21 +201,29 @@ def extract_arrow(
 
     r6.2 boundary rewrite (guide §4.2): the earlier ``mapInPandas`` form
     paid one Python dict per SPAN on the way in (pyarrow's
-    list<struct>→pandas conversion) and one tuple per span on the way out —
-    at the driver's sf1.0 that is ~240 M dict/tuple constructions around
-    ~6 s of real loop work.  ``mapInArrow`` hands us the list<struct>
-    column directly: the per-doc offset sort collapses to ONE stable
-    ``np.lexsort`` per batch, field access is flat-array indexing, and the
-    output list<struct> is assembled from four flat arrays + a lengths
-    vector (`pa.ListArray.from_arrays`).  The per-document loop itself is
-    unchanged oracle semantics (``postprocess_line_tokens`` /
-    ``dehyphenate_lines``), proven identical by the dual-mode equality
-    tests and the seed-sweep oracle invariant.
+    list<struct>→pandas conversion) and one tuple per span on the way out.
+    ``mapInArrow`` hands us the list<struct> column directly: the per-doc
+    offset sort is ONE stable ``np.lexsort`` per batch, and only the text
+    lines enter Python, as plain ``str`` through Arrow's C++ conversion
+    (``to_numpy(zero_copy_only=False).tolist()``; ``to_pylist()`` builds a
+    pyarrow scalar per element first and cost ~7x as much).  One flat loop
+    per batch runs ``postprocess_line_tokens`` on every line.  Pages are
+    found with numpy (a run of kept lines of one doc and one ``media_ref``
+    with no media span between), and ``dehyphenate_lines`` runs only on
+    pages with a ``-``-terminated line before their last line, the only
+    lines it acts on.  Everything else in the output list<struct> —
+    media spans, ``kind``, ``media_ref``, dense offsets and list offsets —
+    is Arrow ``take``/compute and numpy over the list offsets, with no
+    per-span Python.  Output equals the oracle (dual-mode equality tests
+    and the seed-sweep oracle tests).  On one 250-doc, 22k-span batch of
+    ``gen.make_corpus`` this cut the function from ~120-160 ms to
+    ~60-75 ms on 4 vCPUs, about 45 ms of which is
+    ``postprocess_line_tokens`` itself.
 
-    ``with_metrics`` (r6): the same per-document loop also counts the hof
-    tier's metric columns — pages/lines/tokens out, input text lines, and
-    the de-hyphenation merge count — value-identical to the hof
-    expressions (pinned by ``test_r06_optimizations``).
+    ``with_metrics`` (r6): the same pass also counts the hof tier's metric
+    columns — pages/lines/tokens out and input text lines from the list
+    offsets, the de-hyphenation merge count in the page loop — value-identical
+    to the hof expressions (pinned by ``test_r06_optimizations``).
     """
     import numpy as np
     import pyarrow as pa
@@ -223,55 +231,11 @@ def extract_arrow(
 
     from ..oracle import dehyphenate_lines, postprocess_line_tokens
 
-    def extract_doc(is_media, texts, refs, lo, hi):
-        """Oracle loops for one document's spans at flat positions
-        [lo, hi), already offset-sorted (stable, matching the previous
-        ``sorted(spans, key=offset)``)."""
-        out: list[tuple] = []
-        n_lines_in = 0
-        n_merges = 0
-        for j in range(lo, hi):
-            if is_media[j]:
-                out.append(("media", texts[j], refs[j]))
-                continue
-            n_lines_in += 1
-            toks = postprocess_line_tokens((texts[j] or "").split(" "))
-            if toks:
-                out.append(("text", " ".join(toks), refs[j]))
-        if dehyphenate:
-            merged: list[tuple] = []
-            page_lines: list[str] = []
-            page_ref: str | None = None
-
-            def flush() -> int:
-                n = 0
-                if page_lines:
-                    lines, n = dehyphenate_lines(page_lines)
-                    for text in lines:
-                        merged.append(("text", text, page_ref))
-                    page_lines.clear()
-                return n
-
-            for row in out:
-                if row[0] == "media":
-                    n_merges += flush()
-                    page_ref = row[2]
-                    merged.append(row)
-                else:
-                    if row[2] != page_ref:
-                        n_merges += flush()
-                        page_ref = row[2]
-                    page_lines.append(row[1])
-            n_merges += flush()
-            out = merged
-        return out, n_lines_in, n_merges
-
     def run(batches):
         for batch in batches:
             n = batch.num_rows
             if n == 0:
                 continue
-            doc_ids = batch.column(0)
             spans_col = batch.column(1)
             lengths = pc.list_value_length(spans_col)
             lengths = (
@@ -279,65 +243,110 @@ def extract_arrow(
             )
             flat = spans_col.flatten()
             offs = flat.field("offset").to_numpy(zero_copy_only=False)
+            # nondecreasing, so it also holds in the sorted order below
             doc_idx = np.repeat(np.arange(n, dtype=np.int64), lengths)
             # one stable sort for the whole batch == per-doc sorted(key=offset)
-            perm = pa.array(np.lexsort((offs, doc_idx)))
-            texts = flat.field("text").take(perm).to_pylist()
-            refs = flat.field("media_ref").take(perm).to_pylist()
-            # plain Python lists: per-span numpy scalar indexing in the hot
-            # loop costs ~3x a list index
-            is_media = (
-                pc.equal(flat.field("kind"), "media").take(perm).to_pylist()
-            )
-            bounds = np.concatenate(([0], np.cumsum(lengths))).tolist()
-            out_k: list[str] = []
-            out_t: list = []
-            out_r: list = []
-            out_o: list[int] = []
+            perm = np.lexsort((offs, doc_idx))
+            texts = flat.field("text")
+            refs = flat.field("media_ref")
+            is_media = pc.equal(flat.field("kind"), "media").fill_null(False)
+            is_media = is_media.to_numpy(zero_copy_only=False)[perm]
+            line_pos = np.flatnonzero(~is_media)
+            # to_numpy().tolist() converts in C++; to_pylist() builds one
+            # pyarrow scalar per element first (~7x slower here)
+            lines = texts.take(perm[line_pos]).to_numpy(zero_copy_only=False)
+            done = []
+            for line in lines.tolist():
+                toks = postprocess_line_tokens((line or "").split(" "))
+                done.append(" ".join(toks) if toks else None)
+            done_arr = pa.array(done, pa.string())
+            line_pos = line_pos[done_arr.is_valid().to_numpy(zero_copy_only=False)]
+            out_lines = done_arr.drop_null()
+            merges = np.zeros(n, dtype=np.int64)
+            if dehyphenate:
+                # a page is a run of kept lines of one doc and one media_ref
+                # (null equals null, as in the oracle) with no media between
+                a, b = line_pos[:-1], line_pos[1:]
+                ref_key = refs.take(perm[line_pos]).dictionary_encode().indices
+                ref_key = ref_key.fill_null(-1).to_numpy()
+                media_seen = np.cumsum(is_media)
+                same_page = (
+                    (doc_idx[a] == doc_idx[b])
+                    & (media_seen[a] == media_seen[b])
+                    & (ref_key[:-1] == ref_key[1:])
+                )
+                # dehyphenate_lines only acts on a '-' line with a successor
+                # on its page; every other page passes through unchanged
+                hyph = pc.ends_with(out_lines, "-").to_numpy(zero_copy_only=False)
+                page_start = np.concatenate(([True], ~same_page))
+                page_id = np.cumsum(page_start) - 1
+                pages = np.unique(page_id[np.flatnonzero(hyph[:-1] & same_page)])
+                if len(pages):
+                    starts = np.flatnonzero(page_start)
+                    ends = np.append(starts[1:], len(line_pos))
+                    kept = [t for t in done if t is not None]
+                    for lo, hi in zip(starts[pages].tolist(), ends[pages].tolist()):
+                        merged, n_merged = dehyphenate_lines(kept[lo:hi])
+                        # post-processed lines are never blank, so the
+                        # oracle's drop of a '-' line before a blank one
+                        # cannot happen here; should it, the page's last
+                        # slot goes (all its slots share doc and media_ref)
+                        merged += [None] * (hi - lo - len(merged))
+                        kept[lo:hi] = merged
+                        merges[doc_idx[line_pos[lo]]] += n_merged
+                    out_lines = pa.array(kept, pa.string())
+                    if out_lines.null_count:
+                        line_pos = line_pos[
+                            out_lines.is_valid().to_numpy(zero_copy_only=False)
+                        ]
+                        out_lines = out_lines.drop_null()
+            keep = is_media.copy()
+            keep[line_pos] = True
+            out_pos = np.flatnonzero(keep)
+            src = pa.array(perm[out_pos])
+            out_media = is_media[out_pos]
+            out_doc = doc_idx[out_pos]
+            counts = np.bincount(out_doc, minlength=n)
             # int64 here; pa.array(..., pa.int32()) below raises rather
             # than wraps should one batch ever exceed 2**31 output spans
-            list_off = np.empty(n + 1, dtype=np.int64)
-            list_off[0] = 0
-            metrics = (
-                np.empty((5, n), dtype=np.int64) if with_metrics else None
-            )
-            for i in range(n):
-                rows, n_lines_in, n_merges = extract_doc(
-                    is_media, texts, refs, bounds[i], bounds[i + 1]
-                )
-                for o, (k, t, r) in enumerate(rows):
-                    out_k.append(k)
-                    out_t.append(t)
-                    out_r.append(r)
-                    out_o.append(o)
-                list_off[i + 1] = len(out_k)
-                if metrics is not None:
-                    n_pages = sum(1 for row in rows if row[0] == "media")
-                    # split(' ') semantics: n_tokens = count(' ') + 1/line
-                    n_tokens_out = sum(
-                        row[1].count(" ") + 1 for row in rows if row[0] == "text"
-                    )
-                    metrics[0, i] = n_pages
-                    metrics[1, i] = n_lines_in
-                    metrics[2, i] = len(rows) - n_pages
-                    metrics[3, i] = n_tokens_out
-                    metrics[4, i] = n_merges
+            list_off = np.concatenate(([0], np.cumsum(counts)))
+            media_mask = pa.array(out_media)
             struct = pa.StructArray.from_arrays(
                 [
-                    pa.array(out_k, pa.string()),
-                    pa.array(out_t, pa.string()),
-                    pa.array(out_r, pa.string()),
-                    pa.array(out_o, pa.int32()),
+                    pc.if_else(media_mask, "media", "text"),
+                    pc.replace_with_mask(
+                        texts.take(src), pc.invert(media_mask), out_lines
+                    ),
+                    refs.take(src),
+                    pa.array(
+                        np.arange(len(out_pos)) - np.repeat(list_off[:-1], counts),
+                        pa.int32(),
+                    ),
                 ],
                 names=["kind", "text", "media_ref", "offset"],
             )
             spans_out = pa.ListArray.from_arrays(
                 pa.array(list_off, pa.int32()), struct
             )
-            cols = [doc_ids, spans_out]
+            cols = [batch.column(0), spans_out]
             names = ["doc_id", "spans"]
-            if metrics is not None:
-                cols += [pa.array(metrics[m]) for m in range(5)]
+            if with_metrics:
+                n_pages = np.bincount(out_doc[out_media], minlength=n)
+                n_lines_out = counts - n_pages
+                # split(' ') semantics: n_tokens = count(' ') + 1 per line
+                tokens = pc.count_substring(out_lines, " ").to_numpy() + 1
+                token_sum = np.concatenate(([0], np.cumsum(tokens)))
+                line_off = np.concatenate(([0], np.cumsum(n_lines_out)))
+                cols += [
+                    pa.array(m, pa.int64())
+                    for m in (
+                        n_pages,
+                        lengths - n_pages,
+                        n_lines_out,
+                        token_sum[line_off[1:]] - token_sum[line_off[:-1]],
+                        merges,
+                    )
+                ]
                 names += [
                     "n_pages",
                     "n_lines_in",

@@ -9,11 +9,12 @@ own archives (``pyspark.zip``, the py4j zip, the 37 MB spark-core jar) first
 on the worker's ``PYTHONPATH``, and a reused worker calls
 ``importlib.invalidate_caches()`` at the start of every task, which makes
 CPython 3.11 re-read each cached zip importer's central directory: 0.2-0.5 s
-per task, against ~2 ms for the extract's own ``mapInArrow`` function.  The
-daemon imports ``pyspark`` from the installed package instead.  The
-``jobs/*.py`` spark-submit entry points build their own session and are left
-alone: they ship this package with ``--py-files``, so it is not importable
-when a worker daemon starts.
+per task, more than a 250-document extract task spends in the extract's
+own ``mapInArrow`` function (README "Python workers" splits such a task by
+phase).  The daemon imports ``pyspark`` from the installed package instead.
+The ``jobs/*.py`` spark-submit entry points build their own session and are
+left alone: they ship this package with ``--py-files``, so it is not
+importable when a worker daemon starts.
 
 Spark's ``pythonInitTime`` SQL metric also counts the time a reused worker
 waits for its next task, so it is not pure worker set-up time.

@@ -103,3 +103,22 @@ def test_seed_sweep_matches_oracle(spark):
         actual = _spark_result(pipeline.extract(df, dehyphenate=True))
         expected = _oracle_result(corpus, oracle.extract_document_dehyphenated)
         _assert_equal(actual, expected)
+
+
+def test_arrow_seed_sweep_matches_oracle(spark):
+    """The Arrow tier matches the oracle directly, bare and de-hyphenated,
+    on fresh feature mixes that include oversized "book" documents."""
+    from ocrd_odem_spark import gen
+    from ocrd_odem_spark.schema import DOCS_SCHEMA
+
+    for seed in (1, 99, 2026):
+        corpus = gen.make_corpus(seed, 60, oversized_every=20, oversized_pages=50)
+        df = spark.createDataFrame(corpus, DOCS_SCHEMA)
+        for dehyph, fn in (
+            (False, oracle.extract_document),
+            (True, oracle.extract_document_dehyphenated),
+        ):
+            actual = _spark_result(
+                pipeline.extract(df, dehyphenate=dehyph, mode="arrow")
+            )
+            _assert_equal(actual, _oracle_result(corpus, fn))

@@ -265,7 +265,15 @@ def test_extract_arrow_boundary_edge_shapes(spark):
     """r6.2 mapInArrow boundary: flat-columnar in/out must survive the
     degenerate list shapes the dict-per-span form handled implicitly —
     empty span arrays, media-only docs, null text cells, unsorted
-    offsets, and a batch whose every doc is empty."""
+    offsets, and a batch whose every doc is empty — and the page shapes
+    the batch-wide de-hyphenation pass must find: null media_refs (also
+    in a book long enough for the hof marks tier), a hyphen on a page's
+    last line only, a three-line chain, a hyphen line whose successor
+    post-processing empties, two text runs of different pages with no
+    media span between them, a media span between lines of one
+    media_ref, and a '-' line that ends its doc.  Spans and metric
+    columns both equal the hof tier, and spans equal the oracle."""
+    from ocrd_odem_spark import oracle
     from ocrd_odem_spark.plans import pipeline
     from ocrd_odem_spark.schema import DOCS_SCHEMA
 
@@ -279,20 +287,72 @@ def test_extract_arrow_boundary_edge_shapes(spark):
                       ("media", "", "00000001", 0)]),
         ("plain", [("media", "", "00000001", 0),
                    ("text", "ein wort ...", "00000001", 1)]),
+        ("null_ref", [("media", "", None, 0),
+                      ("text", "ein wort-", None, 1),
+                      ("text", "teil hier", None, 2),
+                      ("text", "noch eine zeile-", "00000002", 3),
+                      ("text", "ende gut", None, 4)]),
+        ("last_hyphen", [("media", "", "00000001", 0),
+                         ("text", "ein wort", "00000001", 1),
+                         ("text", "am ende-", "00000001", 2),
+                         ("media", "", "00000002", 3),
+                         ("text", "neue seite", "00000002", 4)]),
+        ("chain", [("media", "", "00000001", 0),
+                   ("text", "wort-", "00000001", 1),
+                   ("text", "teil-", "00000001", 2),
+                   ("text", "rest hier", "00000001", 3)]),
+        ("hyphen_dots", [("media", "", "00000001", 0),
+                         ("text", "zwei-", "00000001", 1),
+                         ("text", "...", "00000001", 2),
+                         ("text", "teilig hier", "00000001", 3)]),
+        ("two_runs", [("media", "", "00000001", 0),
+                      ("text", "erste seite-", "00000001", 1),
+                      ("text", "zweite seite", "00000002", 2),
+                      ("text", "noch mehr-", "00000002", 3),
+                      ("text", "wort hier", "00000002", 4)]),
+        ("repeat_ref", [("media", "", "00000001", 0),
+                        ("text", "ein wort-", "00000001", 1),
+                        ("media", "", "00000001", 2),
+                        ("text", "teil hier", "00000001", 3)]),
+        # a doc ending in a '-' line, then one starting with a text line
+        # of the same media_ref: a doc boundary also ends the page
+        ("ends_hyphen", [("media", "", "00000001", 0),
+                         ("text", "ein wort-", "00000001", 1)]),
+        ("starts_text", [("text", "teil hier", "00000001", 0)]),
+        # over 512 spans: the hof tier's marks path
+        ("null_ref_book", [("media", "", None, 0)] + [
+            ("text", "ein wort-" if i % 3 else "teil hier", None, i + 1)
+            for i in range(600)
+        ]),
     ]
     docs = spark.createDataFrame(rows, DOCS_SCHEMA)
-    for dehyph in (False, True):
-        hof = {
-            r["doc_id"]: [tuple(s) for s in r["spans"]]
-            for r in pipeline.extract(docs, dehyphenate=dehyph, mode="hof").collect()
+
+    def by_doc(df):
+        return {
+            r["doc_id"]: tuple(
+                [tuple(s) for s in v] if k == "spans" else v
+                for k, v in r.asDict().items()
+            )
+            for r in df.collect()
         }
-        arrow = {
-            r["doc_id"]: [tuple(s) for s in r["spans"]]
-            for r in pipeline.extract(
-                docs, dehyphenate=dehyph, mode="arrow"
-            ).collect()
+
+    for dehyph, fn in (
+        (False, oracle.extract_document),
+        (True, oracle.extract_document_dehyphenated),
+    ):
+        expected = {
+            doc_id: [
+                tuple(s[f] for f in pipeline.SPAN_FIELDS)
+                for s in fn([dict(zip(pipeline.SPAN_FIELDS, s)) for s in spans])
+            ]
+            for doc_id, spans in rows
         }
-        assert arrow == hof
+        for metrics in (False, True):
+            kwargs = dict(dehyphenate=dehyph, with_metrics=metrics)
+            hof = by_doc(pipeline.extract(docs, mode="hof", **kwargs))
+            arrow = by_doc(pipeline.extract(docs, mode="arrow", **kwargs))
+            assert arrow == hof, (dehyph, metrics)
+            assert {d: v[1] for d, v in arrow.items()} == expected
 
 
 def test_extract_arrow_sizes_python_tasks_by_bytes(spark, corpus, tmp_path):
