@@ -23,12 +23,10 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship: full extract + de-hyphenation over the derived interleaved
     span corpus at sf0.001 (narrow, shuffle-free fact-table plan).
 
-    r6: the arrow tier is the production default (VERDICT r5 item 2) —
-    byte-identical to the hof tier (dual-mode equality tests) and ~10x
-    faster on the hot path; the hof tier remains for metadata joins and
-    the N-vs-4N scaling probe."""
+    The extract is the single Arrow stage of ``pipeline.extract``, checked
+    span for span against the Python oracle."""
     docs = _q.docs_nested_df(spark, "/root/testdata/sf0.001")
-    out = pipeline.extract(docs, dehyphenate=True, mode="arrow")
+    out = pipeline.extract(docs, dehyphenate=True)
     return pipeline.to_flat(out.select("doc_id", "spans"))
 
 

@@ -5,7 +5,7 @@
         --output <output table path> \
         --state  <watermark state table path> \
         [--page-meta <page dimension>] [--doc-meta <doc dimension>] \
-        [--dehyphenate] [--mode hof|arrow] [--buckets 512] \
+        [--dehyphenate] [--buckets 512] \
         [--range-partitions 0] \
         [--export-dir <share> --export-format flat|saf \
          --export-prefix <p> --export-collection <handle>]
@@ -37,7 +37,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--page-meta")
     ap.add_argument("--doc-meta")
     ap.add_argument("--dehyphenate", action="store_true")
-    ap.add_argument("--mode", default="hof", choices=["hof", "arrow"])
     ap.add_argument("--buckets", type=int, default=512)
     ap.add_argument("--range-partitions", type=int, default=0)
     ap.add_argument("--export-dir")
@@ -61,8 +60,6 @@ def main(argv: list[str] | None = None) -> int:
     doc_meta = spark.read.parquet(args.doc_meta) if args.doc_meta else None
 
     def transform(df):
-        if args.mode == "arrow" and page_meta is None and doc_meta is None:
-            return pipeline.extract(df, dehyphenate=args.dehyphenate, mode="arrow")
         return pipeline.extract(
             df,
             page_meta=page_meta,

@@ -60,6 +60,19 @@ BAD_CHARS_SANITIZE: str = "0123456789“„\"'?!*.;:-=[]()|"
 #: long s normalised to plain s on the quality path
 LONG_S = "ſ"
 
+#: F1 relevance: METS types and PICA 2nd characters of a relevant document
+#: (reference ``mets.py:17-18,107-122``)
+RELEVANT_METS_TYPES = ("monograph", "volume", "issue", "additional")
+RELEVANT_PICA_CHARS = ("a", "f", "F", "Z", "B")
+
+#: F3/F4 page blacklist: substrings of the page label, and logical types
+#: (reference ``mets.py:417-420``)
+BLACKLIST_LABELS = ("Colorchecker", "Leerseite")
+BLACKLIST_LOG_TYPES = ("cover_front", "cover_back")
+
+#: languages whose lines are folded right-to-left (reference O3/T8)
+RTL_LANGUAGES = ("ara", "heb", "fas")
+
 #: span kinds of the interleaved input table
 KIND_MEDIA = "media"
 KIND_TEXT = "text"

@@ -19,7 +19,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ..constants import BAD_CHARS_SANITIZE, LONG_S
-from .dehyphen import _let
 
 _WS_TOKENS = lambda s: F.filter(F.split(F.trim(s), r"\s+"), lambda x: x != "")  # noqa: E731
 
@@ -35,176 +34,16 @@ def sanitize_line(line: Column) -> Column:
     return F.array_join(toks, " ")
 
 
-def _line_pairs(lines: Column) -> Column:
-    """(cur, nxt) pairs of token-decomposed lines (nxt null for the last)."""
-    enriched = F.transform(
-        lines,
-        lambda l: _let(
-            _WS_TOKENS(l),
-            lambda toks: F.struct(
-                l.alias("text"),
-                F.get(toks, 0).alias("first_tok"),
-                F.array_join(
-                    F.slice(toks, 2, F.greatest(F.size(toks) - 1, F.lit(0))), " "
-                ).alias("rest"),
-            ),
-        ),
-    )
-    n = F.size(enriched)
-    successors = F.concat(
-        F.slice(enriched, 2, F.greatest(n - 1, F.lit(0))),
-        F.array(F.lit(None).cast("struct<text:string,first_tok:string,rest:string>")),
-    )
-    return F.filter(
-        F.zip_with(enriched, successors, lambda c, x: F.struct(c.alias("cur"), x.alias("nxt"))),
-        lambda p: p["cur"].isNotNull(),
-    )
-
-
-def dehyphenate_line_array(lines: Column) -> Column:
-    """Wrap-merge fold over a plain line-text array (one page).
-
-    Same carried-state trick as ``dehyphen.dehyphenate_spans`` — see there
-    for why a fold (not a window) is required.  Returns
-    ``struct<out: array<string>, n_merges: int>``.
-
-    Two-tier dispatch by size, mirroring ``dehyphen.dehyphenate_spans``:
-    pages up to 512 lines take the exact fold (fastest at small n); an
-    oversized single page (a 10^4-line table digitisation) takes the marks
-    tier, whose array work is linear — the fold's immutable output-array
-    append is O(n²) per page.  Both tiers proven equal in tests.
-    """
-    return F.when(
-        F.size(lines) <= F.lit(512), _line_fold(lines)
-    ).otherwise(_line_marks(lines))
-
-
-def _line_fold(lines: Column) -> Column:
-    """Exact sequential fold tier (chain-correct for any input)."""
-    pairs = _line_pairs(lines)
-    init = F.struct(
-        F.array().cast("array<string>").alias("out"),
-        F.lit(False).alias("took"),
-        F.lit(0).alias("n_merges"),
-    )
-
-    def step(acc, p):
-        eff = F.when(acc["took"], p["cur"]["rest"]).otherwise(p["cur"]["text"])
-        merge_scope = p["nxt"].isNotNull() & F.endswith(eff, F.lit("-"))
-        merged = F.concat(F.substr(eff, F.lit(1), F.length(eff) - 1), p["nxt"]["first_tok"])
-        return (
-            F.when(
-                merge_scope & (F.trim(p["nxt"]["text"]) == ""),
-                F.struct(acc["out"].alias("out"), F.lit(False).alias("took"), acc["n_merges"].alias("n_merges")),
-            )
-            .when(
-                merge_scope,
-                F.struct(
-                    F.concat(acc["out"], F.array(merged)).alias("out"),
-                    F.lit(True).alias("took"),
-                    (acc["n_merges"] + 1).alias("n_merges"),
-                ),
-            )
-            .otherwise(
-                F.struct(
-                    F.concat(acc["out"], F.array(eff)).alias("out"),
-                    F.lit(False).alias("took"),
-                    acc["n_merges"].alias("n_merges"),
-                )
-            )
-        )
-
-    return F.aggregate(
-        pairs, init, step,
-        lambda acc: F.struct(acc["out"].alias("out"), acc["n_merges"].alias("n_merges")),
-    )
-
-
-def _line_marks(lines: Column) -> Column:
-    """Exact chain-correct tier with LINEAR array work (oversized pages).
-
-    Pass 1 folds one decision character per line ('m' merged / 'd' dropped /
-    'k' kept) into a string accumulator; pass 2 rebuilds each output line
-    from its mark and its predecessor's mark with a pure ``transform``.
-    Same construction as ``dehyphen._dehyphenate_marks`` (see there for the
-    ``_let`` rationale), specialised to bare line strings.
-    """
-
-    from .dehyphen import _chunked_marks_fold
-
-    def with_pairs(pairs: Column) -> Column:
-        def step(acc: Column, p: Column) -> Column:
-            eff = F.when(acc["took"], p["cur"]["rest"]).otherwise(p["cur"]["text"])
-            scope = p["nxt"].isNotNull() & F.endswith(eff, F.lit("-"))
-            mark = (
-                F.when(scope & (F.trim(p["nxt"]["text"]) == ""), F.lit("d"))
-                .when(scope, F.lit("m"))
-                .otherwise(F.lit("k"))
-            )
-            return F.named_struct(
-                F.lit("marks"), F.concat(acc["marks"], mark),
-                F.lit("took"), mark == "m",
-                F.lit("n_merges"), acc["n_merges"] + (mark == "m").cast("int"),
-            )
-
-        fold = _chunked_marks_fold(pairs, step)
-
-        def with_fold(fs: Column) -> Column:
-            marks_arr = F.slice(F.split(fs["marks"], ""), 1, F.size(pairs))
-            prev_arr = F.concat(
-                F.array(F.lit("k")),
-                F.slice(
-                    F.split(fs["marks"], ""), 1,
-                    F.greatest(F.size(pairs) - 1, F.lit(0)),
-                ),
-            )
-            zipped = F.zip_with(
-                pairs, marks_arr,
-                lambda p, m: F.struct(p.alias("p"), m.alias("mark")),
-            )
-            trips = F.zip_with(
-                zipped, prev_arr,
-                lambda z, pm: F.struct(
-                    z["p"].alias("p"), z["mark"].alias("mark"), pm.alias("prev_mark")
-                ),
-            )
-
-            def build(t: Column) -> Column:
-                took = t["prev_mark"] == "m"
-                eff = F.when(took, t["p"]["cur"]["rest"]).otherwise(t["p"]["cur"]["text"])
-                merged = F.concat(
-                    F.substr(eff, F.lit(1), F.length(eff) - 1),
-                    t["p"]["nxt"]["first_tok"],
-                )
-                # zip_with pads the shorter side: an empty page yields one
-                # (p=null, prev='k') trip — the isNull guard drops it
-                return F.when(
-                    (t["mark"] == "d") | t["p"].isNull(),
-                    F.array().cast("array<string>"),
-                ).otherwise(
-                    F.array(F.when(t["mark"] == "m", merged).otherwise(eff))
-                )
-
-            out = F.flatten(F.transform(trips, build))
-            return F.struct(out.alias("out"), fs["n_merges"].alias("n_merges"))
-
-        return _let(fold, with_fold)
-
-    return _let(_line_pairs(lines), with_pairs)
-
-
 def page_text_stats_flat(flat: DataFrame, minlen: int = 2) -> DataFrame:
-    """Arrow tier of ``page_text_stats`` over FLAT text spans
+    """``page_text_stats`` over FLAT text spans
     ``(doc_id, media_ref, offset, text)``.
 
-    r6 (guide §4.2): the per-page pipeline (order lines, wrap-merge fold,
-    char scrub, densify) runs as ``oracle.textlines_to_data`` — the pinned
-    ground-truth loop — inside one ``mapInPandas`` stage after a single
-    codegen ``collect_list`` regroup.  The HOF tier interpreted the fold +
-    sanitize per element (CodegenFallback); results are value-identical
-    (``test_r06_optimizations``).  Flat input also lets callers that
-    already hold flat spans (q34/q42) skip the nest-then-explode round
-    trip, halving the exchanges.
+    The per-page pipeline (order lines, wrap-merge fold, char scrub,
+    densify) runs as ``oracle.textlines_to_data`` — the pinned ground-truth
+    loop — inside one ``mapInPandas`` stage after a single codegen
+    ``collect_list`` regroup.  Flat input also lets callers that already
+    hold flat spans (q34/q42) skip the nest-then-explode round trip,
+    halving the exchanges.
     """
     import pandas as pd
 
@@ -241,47 +80,19 @@ def page_text_stats_flat(flat: DataFrame, minlen: int = 2) -> DataFrame:
     )
 
 
-def page_text_stats(docs: DataFrame, minlen: int = 2, mode: str = "hof") -> DataFrame:
+def page_text_stats(docs: DataFrame, minlen: int = 2) -> DataFrame:
     """A3/A4 dataset: one row per page with the reference's
     ``(file_string, n_lines, n_normalized, n_sparse, n_dense)`` tuple.
 
-    Input: nested (doc_id, spans).  One shuffle (page regroup); everything
-    else is narrow per-page work.  ``mode="arrow"`` runs the page pipeline
-    through the vectorised tier (``page_text_stats_flat``) — value-identical,
-    same single-exchange shape.
+    Input: nested (doc_id, spans), exploded to its text spans and run
+    through ``page_text_stats_flat``.  One shuffle (page regroup);
+    everything else is narrow per-page work.
     """
-    flat = docs.select("doc_id", F.explode("spans").alias("s")).where(
-        F.col("s.kind") == "text"
-    )
-    if mode == "arrow":
-        return page_text_stats_flat(
-            flat.select(
-                "doc_id",
-                F.col("s.media_ref").alias("media_ref"),
-                F.col("s.offset").alias("offset"),
-                F.col("s.text").alias("text"),
-            ),
-            minlen,
-        )
-    pages = flat.groupBy("doc_id", F.col("s.media_ref").alias("media_ref")).agg(
-        F.array_sort(
-            F.collect_list(F.struct(F.col("s.offset").alias("o"), F.col("s.text").alias("t"))),
-            lambda a, b: F.when(a["o"] < b["o"], -1).when(a["o"] > b["o"], 1).otherwise(0),
-        ).alias("ordered")
-    )
-    lines = F.transform(F.col("ordered"), lambda x: x["t"])
-    non_empty = F.filter(lines, lambda l: F.length(l) > 0)
-    folded = dehyphenate_line_array(non_empty)
-    sanitized = F.transform(folded["out"], sanitize_line)
-    dense = F.filter(sanitized, lambda l: F.length(l) > minlen)
-    return pages.select(
-        "doc_id",
-        "media_ref",
-        F.array_join(dense, " ").alias("file_string"),
-        F.size(lines).cast("long").alias("n_lines"),
-        folded["n_merges"].cast("long").alias("n_normalized"),
-        (F.size(sanitized) - F.size(dense)).cast("long").alias("n_sparse"),
-        F.size(dense).cast("long").alias("n_dense"),
+    return page_text_stats_flat(
+        docs.select("doc_id", F.explode("spans").alias("s"))
+        .where(F.col("s.kind") == "text")
+        .select("doc_id", "s.media_ref", "s.offset", "s.text"),
+        minlen,
     )
 
 

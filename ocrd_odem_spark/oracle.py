@@ -44,6 +44,8 @@ from dataclasses import dataclass
 
 from .constants import (
     BAD_CHARS_SANITIZE,
+    BLACKLIST_LABELS,
+    BLACKLIST_LOG_TYPES,
     CLEAR_MARKS,
     COMBINING_SMALL_E,
     KIND_MEDIA,
@@ -52,6 +54,9 @@ from .constants import (
     MINIMUM_WORD_LEN,
     ODEM_PUNCTUATIONS,
     PUNCTUATIONS,
+    RELEVANT_METS_TYPES,
+    RELEVANT_PICA_CHARS,
+    RTL_LANGUAGES,
 )
 
 _ODEM_SET = frozenset(ODEM_PUNCTUATIONS)
@@ -294,4 +299,52 @@ def extract_document_dehyphenated(spans: list[dict]) -> list[dict]:
     flush()
     for pos, span in enumerate(out):
         span["offset"] = pos
+    return out
+
+
+def extract_corpus(
+    corpus: list[dict],
+    page_meta: list[dict] | None = None,
+    doc_meta: list[dict] | None = None,
+    dehyphenate: bool = False,
+) -> dict[str, list[dict]]:
+    """Corpus-level oracle of ``pipeline.extract``: doc_id -> output spans.
+
+    With ``doc_meta``, only docs passing the METS-type / PICA relevance
+    filter (F1) remain, and each text line of an RTL-language doc has its
+    marks stripped and is folded right-to-left.  With ``page_meta``, every
+    span of a blacklisted page (label substring or logical type, F3/F4) is
+    dropped; a span with a null ``media_ref`` never is.  The remaining spans
+    run through ``extract_document`` (``extract_document_dehyphenated``).
+    """
+    black: dict[str, set] = {}
+    for page in page_meta or ():
+        if any(t in (page["label"] or "") for t in BLACKLIST_LABELS) or any(
+            t in BLACKLIST_LOG_TYPES for t in page["log_types"] or ()
+        ):
+            black.setdefault(page["doc_id"], set()).add(page["media_ref"])
+    meta = {d["doc_id"]: d for d in doc_meta or ()}
+    fn = extract_document_dehyphenated if dehyphenate else extract_document
+    out = {}
+    for doc in corpus:
+        rtl = False
+        if doc_meta is not None:
+            m = meta.get(doc["doc_id"])
+            if (
+                m is None
+                or m["mets_type"] not in RELEVANT_METS_TYPES
+                or (m["pica_type"] or "")[1:2] not in RELEVANT_PICA_CHARS
+            ):
+                continue
+            rtl = any(lang in RTL_LANGUAGES for lang in m["languages"] or ())
+        drop = black.get(doc["doc_id"], set())
+        spans = []
+        for span in doc["spans"]:
+            if span["media_ref"] is not None and span["media_ref"] in drop:
+                continue
+            if rtl and span["kind"] == KIND_TEXT:
+                line = strip_marks(span["text"] or "")
+                span = {**span, "text": fold_rtl(line.split(" "))}
+            spans.append(span)
+        out[doc["doc_id"]] = fn(spans)
     return out

@@ -1,14 +1,14 @@
 """The end-to-end extraction plan (reference lifecycle §3.4 of SURVEY.md).
 
-Design: the whole extract path is a chain of NARROW per-document
-transformations over the nested ``spans`` array — sort, token post-process,
-empty-line drop, optional de-hyphenation fold, re-offset — all Catalyst
-higher-order functions inside one whole-stage-codegen span.  The only wide
-operation in the flagship plan is an optional broadcast join against the
-(small) page-blacklist dimension.  At 100 TB this means: zero shuffles of
-the fact table, linear scaling with input splits (an input smaller than
-one split reaches the Arrow extract's Python stage as one task per core,
-see ``extract_arrow``), and skew from oversized "book" documents bounded by
+Design: the whole extract path is NARROW per-document work over the nested
+``spans`` array — sort, token post-process, empty-line drop, optional
+de-hyphenation, re-offset — run as one columnar ``mapInArrow`` stage that
+executes the oracle's line functions (``extract_arrow``).  The only wide
+operations are broadcast joins against the (small) document relevance and
+page-blacklist dimensions.  At 100 TB this means: zero shuffles of the
+fact table, linear scaling with input splits (an input smaller than one
+split reaches the Python stage as one task per core, see
+``extract_arrow``), and skew from oversized "book" documents bounded by
 single-row cost rather than hot shuffle keys.
 
 Stage order reproduces the reference (``ocr_files.py:62-91``): blacklist
@@ -20,8 +20,15 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..constants import (
+    BLACKLIST_LABELS,
+    BLACKLIST_LOG_TYPES,
+    RELEVANT_METS_TYPES,
+    RELEVANT_PICA_CHARS,
+    RTL_LANGUAGES,
+)
 from ..operators.dehyphen import dehyphenate_spans
-from ..operators.tokens import postprocess_line, reversed_line, strip_marks
+from ..operators.tokens import postprocess_line
 
 SPAN_FIELDS = ("kind", "text", "media_ref", "offset")
 
@@ -53,34 +60,12 @@ def reoffset(spans: Column) -> Column:
     )
 
 
-def postprocess_spans(spans: Column, rtl: Column | None = None) -> Column:
-    """Token post-processing of every text span + empty-line cascade drop.
-
-    ``rtl`` (optional boolean column): fold the line right-to-left first,
-    after stripping directional marks (reference O3/T8).
-    """
-
-    def fix_text(s: Column) -> Column:
-        line = s["text"]
-        if rtl is not None:
-            line = F.when(rtl, reversed_line(strip_marks(line))).otherwise(line)
-        return _span(
-            s["kind"],
-            F.when(s["kind"] == "text", postprocess_line(line)).otherwise(s["text"]),
-            s["media_ref"],
-            s["offset"],
-        )
-
-    processed = F.transform(spans, fix_text)
+def postprocess_spans(spans: Column) -> Column:
+    """Token post-processing of every text span + empty-line cascade drop."""
     return F.filter(
-        processed, lambda s: (s["kind"] == "media") | (s["text"] != "")
+        map_text(spans, postprocess_line),
+        lambda s: (s["kind"] == "media") | (s["text"] != ""),
     )
-
-
-def drop_blacklisted(spans: Column, blacklisted_refs: Column) -> Column:
-    """Remove every span of a blacklisted page (F3/F4 net effect)."""
-    refs = F.coalesce(blacklisted_refs, F.array().cast("array<string>"))
-    return F.filter(spans, lambda s: ~F.array_contains(refs, s["media_ref"]))
 
 
 def extract(
@@ -89,105 +74,79 @@ def extract(
     doc_meta: DataFrame | None = None,
     dehyphenate: bool = False,
     with_metrics: bool = False,
-    mode: str = "hof",
+    mode: str = "arrow",
 ) -> DataFrame:
     """Full extraction plan: (doc_id, spans) -> (doc_id, spans[, metrics]).
 
-    ``mode``:
-      * ``"hof"``   — pure-JVM higher-order expressions (zero Python, zero
-        shuffle; HOFs are CodegenFallback-interpreted).
-      * ``"arrow"`` — one columnar ``mapInArrow`` stage executing the
-        oracle semantics directly (measured ~2.7x faster on the bench
-        corpus; the span payload crosses the Arrow boundary once each way).
-        It supports ``dehyphenate`` and ``with_metrics``; the metadata joins
-        are only available in hof mode.  Both modes are proven
-        byte-identical in tests.
+    One columnar ``mapInArrow`` stage (``extract_arrow``) runs the oracle's
+    line functions; per doc the output equals ``oracle.extract_document``
+    (``extract_document_dehyphenated`` with ``dehyphenate``) over the spans
+    that survive the metadata filters below.
 
     * ``page_meta``: optional page dimension with ``label`` / ``log_types``;
       blacklisted pages (Colorchecker/Leerseite labels, cover_* log types)
       are aggregated per doc and BROADCAST-joined — the fact table never
-      shuffles.
+      shuffles — and every span of such a page is dropped.  A span with a
+      null ``media_ref`` is never dropped.
     * ``doc_meta``: optional doc dimension; docs failing the METS-type /
-      PICA relevance filter (F1) are dropped; RTL language docs ('ara',
-      'heb', 'fas') get the mark-strip + right-to-left line fold.
-    * ``dehyphenate``: run the per-page wrap-merge fold (quality path T4).
+      PICA relevance filter (F1) are dropped (broadcast inner join); each
+      text line of an RTL-language doc (``RTL_LANGUAGES``) has its
+      directional marks stripped and is folded right-to-left before
+      post-processing.
+    * ``dehyphenate``: run the per-page wrap-merge (quality path T4).
+    * ``with_metrics``: add per-doc ``n_pages``, ``n_lines_in`` (input text
+      spans, counted before the blacklist drop), ``n_lines_out``,
+      ``n_tokens_out`` and ``n_dehyphenated``.
+
+    ``mode="hof"`` exists only for the frozen ``bench.py`` harness (its HOF
+    flagship run and ``--scaling``): the bare chain sort -> postprocess ->
+    optional ``dehyphenate_spans`` -> reoffset as JVM higher-order
+    functions.  It raises ``ValueError`` when given ``page_meta``,
+    ``doc_meta`` or ``with_metrics``.
     """
-    if mode == "arrow":
-        if page_meta is not None or doc_meta is not None:
-            raise ValueError("arrow mode supports the bare extract path only")
-        return extract_arrow(docs, dehyphenate=dehyphenate, with_metrics=with_metrics)
-    if mode != "hof":
-        raise ValueError(f"unknown mode {mode!r}")
-    out = docs
-    rtl_col = None
-
-    if doc_meta is not None:
-        relevant = relevance_filter(doc_meta).select(
-            "doc_id",
-            F.array_intersect(
-                F.col("languages"), F.array(F.lit("ara"), F.lit("heb"), F.lit("fas"))
-            ).alias("_rtl_langs"),
-        )
-        out = out.join(F.broadcast(relevant), "doc_id", "inner")
-        rtl_col = F.size("_rtl_langs") > 0
-
-    spans = sorted_spans(F.col("spans"))
-
-    if page_meta is not None:
-        bl = blacklisted_pages(page_meta)
-        out = out.join(F.broadcast(bl), "doc_id", "left")
-        spans = drop_blacklisted(spans, F.col("_blacklisted_refs"))
-
-    spans = postprocess_spans(spans, rtl=rtl_col)
-    n_lines_in = F.size(F.filter(F.col("spans"), lambda s: s["kind"] == "text"))
-
-    if dehyphenate:
-        folded = dehyphenate_spans(spans)
-        spans, n_merges = folded["spans"], folded["n_merges"]
-    else:
-        n_merges = F.lit(0)
-
-    result = out.withColumn("_out", reoffset(spans)).withColumn(
-        "_n_merges", n_merges
-    ).withColumn("_n_lines_in", n_lines_in)
-
-    cols = [F.col("doc_id"), F.col("_out").alias("spans")]
-    if with_metrics:
-        text_spans = F.filter(F.col("_out"), lambda s: s["kind"] == "text")
-        cols += [
-            F.size(F.filter(F.col("_out"), lambda s: s["kind"] == "media"))
-            .cast("long")
-            .alias("n_pages"),
-            F.col("_n_lines_in").cast("long").alias("n_lines_in"),
-            F.size(text_spans).cast("long").alias("n_lines_out"),
-            F.aggregate(
-                text_spans,
-                F.lit(0),
-                lambda acc, s: acc + F.size(F.split(s["text"], " ")),
+    if mode == "hof":
+        if page_meta is not None or doc_meta is not None or with_metrics:
+            raise ValueError(
+                "mode='hof' is the bench-only bare chain: "
+                "no page_meta, doc_meta or with_metrics"
             )
-            .cast("long")
-            .alias("n_tokens_out"),
-            F.col("_n_merges").cast("long").alias("n_dehyphenated"),
-        ]
-    return result.select(*cols)
+        spans = postprocess_spans(sorted_spans(F.col("spans")))
+        if dehyphenate:
+            spans = dehyphenate_spans(spans)["spans"]
+        return docs.select("doc_id", reoffset(spans).alias("spans"))
+    if mode != "arrow":
+        raise ValueError(f"unknown mode {mode!r}")
+    return extract_arrow(docs, page_meta, doc_meta, dehyphenate, with_metrics)
 
 
 def extract_arrow(
-    docs: DataFrame, dehyphenate: bool = False, with_metrics: bool = False
+    docs: DataFrame,
+    page_meta: DataFrame | None = None,
+    doc_meta: DataFrame | None = None,
+    dehyphenate: bool = False,
+    with_metrics: bool = False,
 ) -> DataFrame:
     """Arrow-batched extraction: ``mapInArrow`` running the exact oracle
-    line functions over each batch's flat columnar buffers.
+    line functions over each batch's flat columnar buffers (see
+    ``extract`` for the arguments).
 
-    Why this exists alongside the HOF plan: Spark's higher-order array
+    Why Arrow and not Catalyst expressions: Spark's higher-order array
     functions are CodegenFallback (interpreted, per-element object churn),
     while this path moves each Arrow batch into Python once and runs plain
-    tight loops.  It is still narrow (no shuffle), and the payload crosses
-    the Arrow boundary exactly twice.
+    tight loops.  It is still narrow (no shuffle of the fact table), and
+    the payload crosses the Arrow boundary exactly twice.
+
+    Metadata reaches the stage as per-doc columns of broadcast joins: the
+    relevance filter is an inner join on ``doc_id`` that also carries the
+    RTL flag, the page blacklist a left join carrying the doc's
+    blacklisted ``media_ref`` list.  Without metadata the stage does no
+    per-batch work for either.
 
     Python tasks are sized by input bytes when the whole input fits in one
     scan split (``spark.sql.files.maxPartitionBytes``) and is read straight
     from its source (only filters and projections above the relation): such
-    an input is coalesced to ``defaultParallelism`` tasks.  A file scan
+    an input is coalesced to ``defaultParallelism`` tasks, before the
+    joins, whose streamed side keeps its partitions.  A file scan
     charges every file ``openCostInBytes`` (4 MB by default) on top of its
     bytes, so a table of many small files reaches the Python stage as many
     tiny splits; 1000 one-document files give 32 tasks on 4 cores with the
@@ -199,44 +158,51 @@ def extract_arrow(
     whose partitions come from a repartition (``repartition_for_scale``),
     join, union or aggregate keep their partitions.
 
-    r6.2 boundary rewrite (guide §4.2): the earlier ``mapInPandas`` form
-    paid one Python dict per SPAN on the way in (pyarrow's
-    list<struct>→pandas conversion) and one tuple per span on the way out.
-    ``mapInArrow`` hands us the list<struct> column directly: the per-doc
-    offset sort is ONE stable ``np.lexsort`` per batch, and only the text
-    lines enter Python, as plain ``str`` through Arrow's C++ conversion
-    (``to_numpy(zero_copy_only=False).tolist()``; ``to_pylist()`` builds a
-    pyarrow scalar per element first and cost ~7x as much).  One flat loop
-    per batch runs ``postprocess_line_tokens`` on every line.  Pages are
-    found with numpy (a run of kept lines of one doc and one ``media_ref``
-    with no media span between), and ``dehyphenate_lines`` runs only on
-    pages with a ``-``-terminated line before their last line, the only
-    lines it acts on.  Everything else in the output list<struct> —
-    media spans, ``kind``, ``media_ref``, dense offsets and list offsets —
-    is Arrow ``take``/compute and numpy over the list offsets, with no
-    per-span Python.  Output equals the oracle (dual-mode equality tests
-    and the seed-sweep oracle tests).  On one 250-doc, 22k-span batch of
-    ``gen.make_corpus`` this cut the function from ~120-160 ms to
-    ~60-75 ms on 4 vCPUs, about 45 ms of which is
-    ``postprocess_line_tokens`` itself.
-
-    ``with_metrics`` (r6): the same pass also counts the hof tier's metric
-    columns — pages/lines/tokens out and input text lines from the list
-    offsets, the de-hyphenation merge count in the page loop — value-identical
-    to the hof expressions (pinned by ``test_r06_optimizations``).
+    The batch function: ``mapInArrow`` hands over the list<struct> column
+    directly; the per-doc offset sort is ONE stable ``np.lexsort`` per
+    batch, and only the text lines enter Python, as plain ``str`` through
+    Arrow's C++ conversion (``to_numpy(zero_copy_only=False).tolist()``;
+    ``to_pylist()`` builds a pyarrow scalar per element first and cost ~7x
+    as much).  One flat loop per batch runs ``postprocess_line_tokens`` on
+    every line.  Pages are found with numpy (a run of kept lines of one doc
+    and one ``media_ref`` with no media span between), and
+    ``dehyphenate_lines`` runs only on pages with a ``-``-terminated line
+    before their last line, the only lines it acts on.  Everything else in
+    the output list<struct> — media spans, ``kind``, ``media_ref``, dense
+    offsets and list offsets — is Arrow ``take``/compute and numpy over the
+    list offsets, with no per-span Python, and so are the ``with_metrics``
+    counts; the merge count comes from the page loop.  On one 250-doc,
+    22k-span batch of ``gen.make_corpus`` the function takes ~60-75 ms on
+    4 vCPUs, about 45 ms of which is ``postprocess_line_tokens`` itself.
     """
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    from ..oracle import dehyphenate_lines, postprocess_line_tokens
+    from ..oracle import (
+        dehyphenate_lines,
+        fold_rtl,
+        postprocess_line_tokens,
+        strip_marks,
+    )
+
+    # flags for the batch function, which must not capture a DataFrame
+    has_rtl, has_blacklist = doc_meta is not None, page_meta is not None
+    inp = _python_sized(docs.select("doc_id", "spans"))
+    if has_rtl:
+        langs = F.array(*map(F.lit, RTL_LANGUAGES))
+        rtl = F.size(F.array_intersect("languages", langs)) > 0
+        relevant = relevance_filter(doc_meta).select("doc_id", rtl.alias("_rtl"))
+        inp = inp.join(F.broadcast(relevant), "doc_id")
+    if has_blacklist:
+        inp = inp.join(F.broadcast(blacklisted_pages(page_meta)), "doc_id", "left")
 
     def run(batches):
         for batch in batches:
             n = batch.num_rows
             if n == 0:
                 continue
-            spans_col = batch.column(1)
+            spans_col = batch.column("spans")
             lengths = pc.list_value_length(spans_col)
             lengths = (
                 lengths.fill_null(0).to_numpy(zero_copy_only=False).astype(np.int64)
@@ -251,12 +217,37 @@ def extract_arrow(
             refs = flat.field("media_ref")
             is_media = pc.equal(flat.field("kind"), "media").fill_null(False)
             is_media = is_media.to_numpy(zero_copy_only=False)[perm]
+            if with_metrics:
+                n_lines_in = lengths - np.bincount(doc_idx[is_media], minlength=n)
+            if has_blacklist:
+                # drop each span whose media_ref is in its doc's blacklist:
+                # one dictionary over both, keyed (doc, ref); a null ref
+                # gets code 0, which no blacklist entry has (collect_list
+                # skips nulls), so it is never dropped
+                black = batch.column("_blacklisted_refs")
+                codes = pa.concat_arrays([refs, black.flatten()])
+                codes = codes.dictionary_encode().indices.fill_null(-1)
+                codes = codes.to_numpy().astype(np.int64) + 1
+                width = int(codes.max(initial=0)) + 1
+                black_doc = pc.list_parent_indices(black).to_numpy()
+                dropped = np.isin(
+                    doc_idx * width + codes[: len(refs)],
+                    black_doc * width + codes[len(refs):],
+                )
+                stays = ~dropped[perm]
+                perm, doc_idx, is_media = perm[stays], doc_idx[stays], is_media[stays]
             line_pos = np.flatnonzero(~is_media)
             # to_numpy().tolist() converts in C++; to_pylist() builds one
             # pyarrow scalar per element first (~7x slower here)
             lines = texts.take(perm[line_pos]).to_numpy(zero_copy_only=False)
+            lines = lines.tolist()
+            if has_rtl:
+                rtl_doc = batch.column("_rtl").fill_null(False)
+                rtl_doc = rtl_doc.to_numpy(zero_copy_only=False)
+                for i in np.flatnonzero(rtl_doc[doc_idx[line_pos]]).tolist():
+                    lines[i] = fold_rtl(strip_marks(lines[i] or "").split(" "))
             done = []
-            for line in lines.tolist():
+            for line in lines:
                 toks = postprocess_line_tokens((line or "").split(" "))
                 done.append(" ".join(toks) if toks else None)
             done_arr = pa.array(done, pa.string())
@@ -328,7 +319,7 @@ def extract_arrow(
             spans_out = pa.ListArray.from_arrays(
                 pa.array(list_off, pa.int32()), struct
             )
-            cols = [batch.column(0), spans_out]
+            cols = [batch.column("doc_id"), spans_out]
             names = ["doc_id", "spans"]
             if with_metrics:
                 n_pages = np.bincount(out_doc[out_media], minlength=n)
@@ -341,7 +332,7 @@ def extract_arrow(
                     pa.array(m, pa.int64())
                     for m in (
                         n_pages,
-                        lengths - n_pages,
+                        n_lines_in,
                         n_lines_out,
                         token_sum[line_off[1:]] - token_sum[line_off[:-1]],
                         merges,
@@ -365,9 +356,7 @@ def extract_arrow(
             ", n_pages long, n_lines_in long, n_lines_out long, "
             "n_tokens_out long, n_dehyphenated long"
         )
-    return _python_sized(docs.select("doc_id", "spans")).mapInArrow(
-        run, schema=schema
-    )
+    return inp.mapInArrow(run, schema=schema)
 
 
 def _python_sized(df: DataFrame) -> DataFrame:
@@ -390,14 +379,14 @@ def relevance_filter(doc_meta: DataFrame) -> DataFrame:
     """F1: keep docs whose METS type and PICA 2nd char mark them relevant
     (reference ``mets.py:17-18,107-122``)."""
     return doc_meta.filter(
-        F.col("mets_type").isin("monograph", "volume", "issue", "additional")
-        & F.substring("pica_type", 2, 1).isin("a", "f", "F", "Z", "B")
+        F.col("mets_type").isin(*RELEVANT_METS_TYPES)
+        & F.substring("pica_type", 2, 1).isin(*RELEVANT_PICA_CHARS)
     )
 
 
 def page_blacklist_flag(
-    label_tokens: tuple[str, ...] = ("Colorchecker", "Leerseite"),
-    type_tokens: tuple[str, ...] = ("cover_front", "cover_back"),
+    label_tokens: tuple[str, ...] = BLACKLIST_LABELS,
+    type_tokens: tuple[str, ...] = BLACKLIST_LOG_TYPES,
 ) -> Column:
     """Boolean column: this page row hits the label or logical-type
     blacklist (substring on labels, exact membership on type lists —
@@ -414,8 +403,8 @@ def page_blacklist_flag(
 
 def blacklisted_pages(
     page_meta: DataFrame,
-    label_tokens: tuple[str, ...] = ("Colorchecker", "Leerseite"),
-    type_tokens: tuple[str, ...] = ("cover_front", "cover_back"),
+    label_tokens: tuple[str, ...] = BLACKLIST_LABELS,
+    type_tokens: tuple[str, ...] = BLACKLIST_LOG_TYPES,
     ref_col: str = "media_ref",
 ) -> DataFrame:
     """F3/F4: pages whose label or linked logical types hit a blacklist.
@@ -544,7 +533,7 @@ def from_flat(flat: DataFrame, sort: bool = True) -> DataFrame:
     offset-first struct (codegen-friendly field comparison) instead of the
     interpreted per-comparison lambda; same order wherever offsets are
     unique per document (the span contract).  ``sort=False`` skips the
-    ordering for consumers that re-sort anyway (``extract`` both modes,
+    ordering for consumers that re-sort anyway (``extract``,
     ``page_text_stats``) — array order is then partition-dependent, so only
     use it when the next operator imposes its own order.
     """

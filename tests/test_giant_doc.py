@@ -109,9 +109,9 @@ def test_giant_chainy_doc_linear_marks_tier(spark):
 
 
 def test_giant_single_page_stats_linear(spark):
-    """A 10^4-line SINGLE page must take the linear marks tier inside
-    page_text_stats — the O(n²) fold would take minutes; linear runs in
-    seconds and matches the oracle exactly."""
+    """A 10^4-line SINGLE page runs through page_text_stats in linear
+    time (an O(n²) per-page fold would take minutes) and matches the
+    oracle exactly."""
     from ocrd_odem_spark.operators.quality import page_text_stats
 
     n = 10_000
@@ -141,4 +141,4 @@ def test_giant_single_page_stats_linear(spark):
     assert (
         r["file_string"], r["n_lines"], r["n_normalized"], r["n_sparse"], r["n_dense"]
     ) == (st.file_string, st.n_lines, st.n_normalized, st.n_sparse, st.n_dense)
-    assert elapsed < 60, f"marks tier should be linear, took {elapsed:.1f}s"
+    assert elapsed < 60, f"page stats should be linear, took {elapsed:.1f}s"

@@ -45,10 +45,7 @@ def test_spark_matches_oracle_on_edge_lines(spark):
     from pyspark.sql import functions as F
 
     from ocrd_odem_spark.operators.tokens import postprocess_line
-    from ocrd_odem_spark.operators.quality import (
-        dehyphenate_line_array,
-        sanitize_line,
-    )
+    from ocrd_odem_spark.operators.quality import sanitize_line
 
     lines = [
         "", "-", "--", "a", "ab", "a.", "A.", "wort.", "wort.-", ".wort",
@@ -67,79 +64,3 @@ def test_spark_matches_oracle_on_edge_lines(spark):
         assert r["post"] == want_post, (r["line"], r["post"], want_post)
         want_sane = oracle.sanitize_chars([r["line"]])[0]
         assert r["sane"] == want_sane, (r["line"], r["sane"], want_sane)
-
-    # line-array dehyphenation fold vs oracle on permutations
-    pages = [
-        ["a-", "b-", "c-", "d"],
-        ["x-", "", "y"],
-        ["wort-", "teil rest"],
-        ["nix"],
-        [],
-        ["einzel-"],
-        ["a-", " ", "b"],
-        ["end-", "x-", "", "q r s"],
-    ]
-    pdf = spark.createDataFrame([(p,) for p in pages], "lines array<string>")
-    out = pdf.select(
-        "lines", dehyphenate_line_array(F.col("lines")).alias("f")
-    ).collect()
-    for r in out:
-        got = (list(r["f"]["out"]), r["f"]["n_merges"])
-        want = oracle.dehyphenate_lines(list(r["lines"]))
-        assert got == (want[0], want[1]), (list(r["lines"]), got, want)
-
-
-def test_line_array_tiers_equal(spark):
-    """Fold and marks tiers of dehyphenate_line_array are byte-equal on
-    chain-heavy / blank-successor / single-token pages (and both match the
-    oracle) — the size gate must never change results."""
-    from pyspark.sql import functions as F
-
-    from ocrd_odem_spark.operators.quality import _line_fold, _line_marks
-
-    pages = [
-        ["a-", "b-", "c-", "d"],
-        ["x-", "", "y"],
-        ["wort-", "teil rest"],
-        ["nix"],
-        [],
-        ["einzel-"],
-        ["a-", " ", "b"],
-        ["end-", "x-", "", "q r s"],
-        ["nur-"] * 40 + ["ende"],
-        ["w1 w2 w3-", "w4-", "w5 w6", "-", "--", "a- "],
-    ]
-    pdf = spark.createDataFrame([(p,) for p in pages], "lines array<string>")
-    out = pdf.select(
-        "lines",
-        _line_fold(F.col("lines")).alias("fold"),
-        _line_marks(F.col("lines")).alias("marks"),
-    ).collect()
-    for r in out:
-        fold = (list(r["fold"]["out"]), r["fold"]["n_merges"])
-        marks = (list(r["marks"]["out"]), r["marks"]["n_merges"])
-        assert fold == marks, (list(r["lines"]), fold, marks)
-        want = oracle.dehyphenate_lines(list(r["lines"]))
-        assert fold == (want[0], want[1]), (list(r["lines"]), fold, want)
-
-
-def test_chunked_marks_cross_boundary_chains(spark):
-    """The chunk-speculative pass 1 must be exact when a donation chain
-    CROSSES chunk boundaries (entry state took=True): 2000 lines all
-    ending '-' cascade through ~4 chunks; plus a blank-drop straddling a
-    boundary."""
-    from pyspark.sql import functions as F
-
-    from ocrd_odem_spark.operators.quality import _line_marks
-
-    full_chain = [f"w{i}-" for i in range(2000)] + ["ende fertig"]
-    boundary_blank = [f"x{i}-" for i in range(511)] + [" ", "nach dem loch"] + [
-        f"y{i} z{i}" for i in range(5)
-    ]
-    pages = [full_chain, boundary_blank]
-    pdf = spark.createDataFrame([(p,) for p in pages], "lines array<string>")
-    out = pdf.select("lines", _line_marks(F.col("lines")).alias("m")).collect()
-    for r in out:
-        got = (list(r["m"]["out"]), r["m"]["n_merges"])
-        want = oracle.dehyphenate_lines(list(r["lines"]))
-        assert got == (want[0], want[1]), (len(r["lines"]), got[1], want[1])

@@ -45,20 +45,39 @@ def test_flagship_zero_shuffle(spark, docs_parquet):
     assert "Exchange" not in _plan(out)
 
 
-def test_blacklist_join_broadcasts(spark, docs_parquet, page_meta_df):
+def _nodes(node, ancestors=()):
+    """(name, ancestor names) of every node of a physical plan tree; an
+    adaptive plan is walked through its current plan."""
+    if node.nodeName() == "AdaptiveSparkPlan":
+        node = node.executedPlan()
+    yield node.nodeName(), ancestors
+    kids = node.children()
+    for i in range(kids.size()):
+        yield from _nodes(kids.apply(i), ancestors + (node.nodeName(),))
+
+
+def test_blacklist_join_broadcasts(spark, docs_parquet, page_meta_df, doc_meta_df):
+    """The meta extract is one Arrow map over broadcast joins: the fact
+    table is never exchanged, and every shuffle (the blacklist's per-doc
+    aggregation) feeds a broadcast.  The bench-only HOF chain refuses
+    metadata and metrics."""
     docs = spark.read.parquet(docs_parquet)
-    out = pipeline.extract(docs, page_meta=page_meta_df)
+    out = pipeline.extract(
+        docs, page_meta=page_meta_df, doc_meta=doc_meta_df, with_metrics=True
+    )
     plan = _plan(out)
-    assert "BroadcastHashJoin" in plan, plan
-    # the fact table itself is never exchanged for the join: the only
-    # exchanges feed the broadcast (dimension aggregation)
-    fact_exchanges = [
-        line for line in plan.splitlines()
-        if "Exchange" in line and "Broadcast" not in line
-    ]
-    assert all("hashpartitioning(doc_id" in l or "page" in l.lower() or True
-               for l in fact_exchanges)  # dimension-side only
-    assert "BroadcastExchange" in plan
+    assert plan.count("BroadcastHashJoin") == 2, plan
+    assert plan.count("BroadcastExchange") == 2, plan
+    nodes = list(_nodes(out._jdf.queryExecution().executedPlan()))
+    assert [n for n, _ in nodes].count("MapInArrow") == 1, plan
+    shuffles = [a for n, a in nodes if n == "Exchange"]
+    assert shuffles, plan  # the blacklist aggregation's exchange
+    assert all("BroadcastExchange" in a for a in shuffles), plan
+
+    for kwargs in ({"page_meta": page_meta_df}, {"doc_meta": doc_meta_df},
+                   {"with_metrics": True}):
+        with pytest.raises(ValueError, match="bench-only"):
+            pipeline.extract(docs, mode="hof", **kwargs)
 
 
 def test_relational_join_broadcasts_small_dims(spark):

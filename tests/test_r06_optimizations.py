@@ -157,29 +157,88 @@ def test_cosine_near_duplicates_matches_reference_shape(spark):
         assert r["sim"] >= 0.9
 
 
+_METRIC_COLS = ["doc_id", "n_pages", "n_lines_in", "n_lines_out",
+                "n_tokens_out", "n_dehyphenated"]
+
+
+def _oracle_metrics(corpus, dehyph, pages=None, docs=None):
+    """doc_id -> the ``with_metrics`` row, counted over oracle outputs.
+
+    ``n_lines_in`` counts a doc's input text spans, before any blacklist
+    drop; the merges are ``dehyphenate_lines`` counts over the pages of
+    ``extract_document``'s output, paged as the oracle pages them (a media
+    span or a change of ``media_ref`` starts a page)."""
+    from ocrd_odem_spark import oracle
+
+    extracted = oracle.extract_corpus(corpus, pages, docs)
+    final = (
+        oracle.extract_corpus(corpus, pages, docs, dehyphenate=True)
+        if dehyph else extracted
+    )
+    n_in = {d["doc_id"]: sum(s["kind"] == "text" for s in d["spans"]) for d in corpus}
+    out = {}
+    for doc_id, spans in final.items():
+        merges, page, ref = 0, [], None
+        for s in extracted[doc_id]:
+            if s["kind"] == "media" or s["media_ref"] != ref:
+                merges += oracle.dehyphenate_lines(page)[1]
+                page, ref = [], s["media_ref"]
+            if s["kind"] == "text":
+                page.append(s["text"])
+        merges += oracle.dehyphenate_lines(page)[1]
+        texts = [s["text"] for s in spans if s["kind"] == "text"]
+        out[doc_id] = (
+            doc_id, len(spans) - len(texts), n_in[doc_id], len(texts),
+            sum(len(t.split(" ")) for t in texts), merges if dehyph else 0,
+        )
+    return out
+
+
 def test_extract_arrow_metrics_match_hof(spark):
-    """Arrow metrics tier == hof metric expressions, value for value, on a
-    corpus with empty lines, hyphen wraps, dropped pages and multi-page
-    docs (the derived sf0.001 span corpus)."""
+    """The metric columns equal counts taken over the oracle's output, on
+    a corpus with empty lines, hyphen wraps, dropped pages and multi-page
+    docs (the derived sf0.001 span corpus), and with page and doc metadata
+    on a generated corpus, where blacklisted pages carry text lines that
+    ``n_lines_in`` still counts.  (Named for the HOF metric expressions it
+    pinned first; those are gone.)"""
+    from ocrd_odem_spark import gen, oracle
     from ocrd_odem_spark.plans import pipeline, queries
+    from ocrd_odem_spark.schema import DOC_META_SCHEMA, DOCS_SCHEMA, PAGE_META_SCHEMA
 
     docs = queries.docs_nested_df(spark, "/root/testdata/sf0.001")
-    cols = ["doc_id", "n_pages", "n_lines_in", "n_lines_out",
-            "n_tokens_out", "n_dehyphenated"]
+    corpus = [
+        {"doc_id": r["doc_id"], "spans": [s.asDict() for s in r["spans"]]}
+        for r in docs.collect()
+    ]
     for dehyph in (False, True):
-        hof = {
+        got = {
+            r["doc_id"]: tuple(r)
+            for r in pipeline.extract(docs, dehyphenate=dehyph, with_metrics=True)
+            .select(*_METRIC_COLS).collect()
+        }
+        want = _oracle_metrics(corpus, dehyph)
+        assert got == want
+        assert any(m[-1] for m in want.values()) == dehyph
+
+    corpus = gen.make_corpus(7, 40)
+    pages = gen.make_page_meta(7, corpus)
+    meta = gen.make_doc_meta(7, corpus)
+    # some kept doc loses text lines with a blacklisted page
+    dropped = oracle.extract_corpus(corpus, pages, meta)
+    kept = oracle.extract_corpus(corpus, None, meta)
+    assert any(len(dropped[d]) < len(kept[d]) for d in dropped)
+    for dehyph in (False, True):
+        got = {
             r["doc_id"]: tuple(r)
             for r in pipeline.extract(
-                docs, dehyphenate=dehyph, with_metrics=True, mode="hof"
-            ).select(*cols).collect()
+                spark.createDataFrame(corpus, DOCS_SCHEMA),
+                page_meta=spark.createDataFrame(pages, PAGE_META_SCHEMA),
+                doc_meta=spark.createDataFrame(meta, DOC_META_SCHEMA),
+                dehyphenate=dehyph,
+                with_metrics=True,
+            ).select(*_METRIC_COLS).collect()
         }
-        arrow = {
-            r["doc_id"]: tuple(r)
-            for r in pipeline.extract(
-                docs, dehyphenate=dehyph, with_metrics=True, mode="arrow"
-            ).select(*cols).collect()
-        }
-        assert arrow == hof
+        assert got == _oracle_metrics(corpus, dehyph, pages, meta)
 
 
 def test_ivf_arrow_assignment_matches_literal_ranking(spark):
@@ -212,21 +271,31 @@ def test_ivf_arrow_assignment_matches_literal_ranking(spark):
 
 
 def test_page_text_stats_arrow_matches_hof(spark):
-    """Flat Arrow page-stats tier == the HOF tier, value for value, over
-    the derived sf0.001 corpus (empty lines, wraps, sanitize edge chars)."""
+    """page_text_stats == ``oracle.textlines_to_data`` per page, value for
+    value, over the derived sf0.001 corpus (empty lines, wraps, sanitize
+    edge chars).  (Named for the HOF tier it pinned first; that is gone.)"""
+    from ocrd_odem_spark import oracle
     from ocrd_odem_spark.operators.quality import page_text_stats
     from ocrd_odem_spark.plans import queries
 
     docs = queries.docs_nested_df(spark, "/root/testdata/sf0.001")
-    hof = {
-        (r["doc_id"], r["media_ref"]): tuple(r)
+    got = {
+        (r["doc_id"], r["media_ref"]): tuple(r)[2:]
         for r in page_text_stats(docs).collect()
     }
-    arrow = {
-        (r["doc_id"], r["media_ref"]): tuple(r)
-        for r in page_text_stats(docs, mode="arrow").collect()
-    }
-    assert arrow == hof
+    want = {}
+    for r in docs.collect():
+        pages: dict = {}
+        for s in sorted(r["spans"], key=lambda s: s["offset"]):
+            if s["kind"] == "text":
+                pages.setdefault(s["media_ref"], []).append(s["text"])
+        for ref, lines in pages.items():
+            st = oracle.textlines_to_data(lines)
+            want[(r["doc_id"], ref)] = (
+                st.file_string, st.n_lines, st.n_normalized, st.n_sparse, st.n_dense
+            )
+    assert got == want
+    assert any(v[2] for v in want.values())  # some page has a wrap merge
 
 
 def test_run_pipeline_arrow_matches_hof_chain(spark):
@@ -271,8 +340,9 @@ def test_extract_arrow_boundary_edge_shapes(spark):
     last line only, a three-line chain, a hyphen line whose successor
     post-processing empties, two text runs of different pages with no
     media span between them, a media span between lines of one
-    media_ref, and a '-' line that ends its doc.  Spans and metric
-    columns both equal the hof tier, and spans equal the oracle."""
+    media_ref, and a '-' line that ends its doc.  Spans equal the
+    bench-only hof chain and the oracle, and the metric columns equal
+    counts over the oracle's output."""
     from ocrd_odem_spark import oracle
     from ocrd_odem_spark.plans import pipeline
     from ocrd_odem_spark.schema import DOCS_SCHEMA
@@ -347,12 +417,21 @@ def test_extract_arrow_boundary_edge_shapes(spark):
             ]
             for doc_id, spans in rows
         }
-        for metrics in (False, True):
-            kwargs = dict(dehyphenate=dehyph, with_metrics=metrics)
-            hof = by_doc(pipeline.extract(docs, mode="hof", **kwargs))
-            arrow = by_doc(pipeline.extract(docs, mode="arrow", **kwargs))
-            assert arrow == hof, (dehyph, metrics)
-            assert {d: v[1] for d, v in arrow.items()} == expected
+        hof = by_doc(pipeline.extract(docs, dehyphenate=dehyph, mode="hof"))
+        arrow = by_doc(pipeline.extract(docs, dehyphenate=dehyph))
+        assert arrow == hof, dehyph
+        assert {d: v[1] for d, v in arrow.items()} == expected
+        metrics = by_doc(
+            pipeline.extract(docs, dehyphenate=dehyph, with_metrics=True)
+        )
+        assert {d: v[1] for d, v in metrics.items()} == expected
+        corpus = [
+            {"doc_id": d, "spans": [dict(zip(pipeline.SPAN_FIELDS, s)) for s in spans]}
+            for d, spans in rows
+        ]
+        assert {d: (d,) + v[2:] for d, v in metrics.items()} == _oracle_metrics(
+            corpus, dehyph
+        )
 
 
 def test_extract_arrow_sizes_python_tasks_by_bytes(spark, corpus, tmp_path):
@@ -387,7 +466,7 @@ def test_extract_arrow_sizes_python_tasks_by_bytes(spark, corpus, tmp_path):
             spark.conf.set(k, str(4 * 1024 * 1024))
         docs = spark.read.parquet(str(tmp_path))
         assert docs.rdd.getNumPartitions() == n_files
-        out = pipeline.extract(docs, dehyphenate=True, mode="arrow")
+        out = pipeline.extract(docs, dehyphenate=True)
         assert out.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
         got = {
             r["doc_id"]: [tuple(s) for s in r["spans"]] for r in out.collect()
@@ -402,14 +481,14 @@ def test_extract_arrow_sizes_python_tasks_by_bytes(spark, corpus, tmp_path):
 
         # an explicit range repartition keeps its partitions
         ranged = pipeline.repartition_for_scale(docs, n_files)
-        out = pipeline.extract(ranged, dehyphenate=True, mode="arrow")
+        out = pipeline.extract(ranged, dehyphenate=True)
         assert out.rdd.getNumPartitions() == n_files
 
         # ceil(size / split) >= 32, so more than one split: left alone
         spark.conf.set(keys[0], str(sum(sizes) // n_files))
         docs = spark.read.parquet(str(tmp_path))
         assert docs.rdd.getNumPartitions() >= n_files
-        out = pipeline.extract(docs, dehyphenate=True, mode="arrow")
+        out = pipeline.extract(docs, dehyphenate=True)
         assert out.rdd.getNumPartitions() == docs.rdd.getNumPartitions()
     finally:
         for k, v in saved.items():
