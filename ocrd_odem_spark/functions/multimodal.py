@@ -1,13 +1,10 @@
-"""Multimodal (image/audio/video) column plumbing.
+"""Media metadata operators: image, audio and video as page refs.
 
-Media payloads are opaque ``binary`` columns with typed metadata structs —
-the schema, partitioning, UDF signatures and Arrow batch shapes are real
-and tested.  Decode is tiered: a deterministic fake for CI, PIL for any
-format when importable, a pure-numpy decoder for uncompressed rasters
-(binary PPM / 24-bit BMP) that needs no codec library, and an honest
-``NotImplementedError`` (surfaced on the ``decode_error`` data channel)
-for compressed formats in codec-less containers.  On a real cluster you
-drop PIL/torchaudio in and nothing else changes.
+A media row is an opaque ``media_ref`` plus a typed ``meta`` struct (width,
+height, dpi, byte size, duration).  Every operator here works from that
+metadata alone — per-doc size/megapixel aggregates, the megapixel
+histogram, video frame-sampling plans — and never reads pixels: decoding
+images is the OCR step, outside this engine.
 
 Reference tie-in: the OCR engine treats page images exactly this way — an
 opaque ref plus metadata (``lib/odem/processing/image.py:21-34`` computes
@@ -15,8 +12,6 @@ megapixels/DPI from metadata, never pixels, at planning time).
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
@@ -26,7 +21,6 @@ MEDIA_SCHEMA = T.StructType(
         T.StructField("doc_id", T.StringType(), False),
         T.StructField("media_ref", T.StringType(), False),
         T.StructField("mime", T.StringType(), False),
-        T.StructField("payload", T.BinaryType(), True),
         T.StructField(
             "meta",
             T.StructType(
@@ -43,19 +37,10 @@ MEDIA_SCHEMA = T.StructType(
     ]
 )
 
-FEATURE_SCHEMA = (
-    "media_id string, doc_id string, mime string, "
-    "feat array<float>, decode_error string"
-)
-
 
 def megapixels(meta: F.Column) -> F.Column:
-    """planning-time metadata math (reference image.py:21-34); DPI default 300."""
+    """planning-time metadata math (reference image.py:21-34)."""
     return F.round(meta["width"] * meta["height"] / F.lit(1_000_000.0), 2)
-
-
-def dpi_or_default(meta: F.Column, default: int = 300) -> F.Column:
-    return F.coalesce(meta["dpi"], F.lit(default))
 
 
 def media_stats(media: DataFrame) -> DataFrame:
@@ -77,171 +62,10 @@ def megapixel_histogram(media: DataFrame) -> DataFrame:
     )
 
 
-try:  # optional real-decode tier; absent in this container
-    from PIL import Image as _PILImage
-
-    HAS_PIL = True
-except ImportError:  # pragma: no cover - depends on environment
-    _PILImage = None
-    HAS_PIL = False
-
-
-def _decode_raw_gray(payload: bytes):
-    """Pure-numpy decode of codec-less raster formats -> 2D float gray.
-
-    Supports binary PPM (P6, maxval 255), 24-bit uncompressed BMP, JPEG —
-    baseline SOF0/SOF1 AND progressive SOF2, the two formats that cover
-    real-world scans (see ``functions/jpegdec.py``) — and the complete
-    static-PNG format (1/2/4-bit bitonal scans, 8- and 16-bit
-    gray/RGB/RGBA/palette, all scanline filters, Adam7 interlace;
-    ``functions/pngdec.py``), so real pixel decode works even in
-    containers without PIL, plus TIFF — the archive master format —
-    in both byte orders, strip- or tile-organised, with uncompressed,
-    CCITT fax (MH-RLE / G3 1D+2D / G4, validated against system
-    libtiff), JPEG-in-TIFF (shared JPEGTables), PackBits, LZW
-    (early-change code widths, cross-checked against system libtiff)
-    or Deflate payloads and the horizontal
-    predictor (bilevel/gray/RGB/palette, 1/8/16-bit;
-    ``functions/tiffdec.py``).  Raises ValueError on malformed input,
-    NotImplementedError on formats that still need a codec
-    (arithmetic-coded JPEG, deprecated old-style JPEG-in-TIFF).
-    """
-    import numpy as np
-
-    if payload[:2] == b"\xff\xd8":
-        from .jpegdec import decode_jpeg_gray
-
-        return decode_jpeg_gray(payload)
-    if payload[:8] == b"\x89PNG\r\n\x1a\n":
-        from .pngdec import decode_png_gray
-
-        return decode_png_gray(payload)
-    if payload[:4] in (b"II*\x00", b"MM\x00*"):
-        from .tiffdec import decode_tiff_gray
-
-        return decode_tiff_gray(payload)
-
-    luma = (0.299, 0.587, 0.114)
-    if payload[:2] == b"P6":
-        toks, i = [], 2
-        while len(toks) < 3:  # width, height, maxval; '#' comments allowed
-            while i < len(payload) and payload[i : i + 1].isspace():
-                i += 1
-            if payload[i : i + 1] == b"#":
-                i = payload.index(b"\n", i) + 1
-                continue
-            j = i
-            while j < len(payload) and not payload[j : j + 1].isspace():
-                j += 1
-            toks.append(int(payload[i:j]))
-            i = j
-        i += 1  # single whitespace after maxval
-        w, h, maxval = toks
-        if maxval != 255:
-            raise ValueError(f"PPM maxval {maxval} unsupported")
-        px = np.frombuffer(payload, dtype=np.uint8, count=w * h * 3, offset=i)
-        rgb = px.reshape(h, w, 3).astype(np.float64)
-        return rgb @ np.array(luma)
-    if payload[:2] == b"BM":
-        off = int.from_bytes(payload[10:14], "little")
-        w = int.from_bytes(payload[18:22], "little", signed=True)
-        h = int.from_bytes(payload[22:26], "little", signed=True)
-        bpp = int.from_bytes(payload[28:30], "little")
-        comp = int.from_bytes(payload[30:34], "little")
-        if bpp != 24 or comp != 0:
-            raise NotImplementedError(f"BMP bpp={bpp} compression={comp} needs a codec")
-        stride = (w * 3 + 3) & ~3  # rows pad to 4 bytes
-        rows = np.frombuffer(
-            payload, dtype=np.uint8, count=stride * abs(h), offset=off
-        ).reshape(abs(h), stride)[:, : w * 3]
-        bgr = rows.reshape(abs(h), w, 3).astype(np.float64)
-        if h > 0:  # positive height = bottom-up storage
-            bgr = bgr[::-1]
-        return bgr @ np.array(luma[::-1])  # BMP stores BGR
-    raise NotImplementedError(
-        "compressed image formats require a codec library not present in "
-        "this container (PPM/BMP decode natively; or pass fake=True)"
-    )
-
-
-def downsample_gray(gray, out_h: int, out_w: int):
-    """Block-mean resize of a 2D gray array to (out_h, out_w) — the
-    numpy-tier equivalent of PIL's resize; row-major output order."""
-    import numpy as np
-
-    h, w = gray.shape
-    ys = np.linspace(0, h, out_h + 1).astype(int)
-    xs = np.linspace(0, w, out_w + 1).astype(int)
-    out = np.empty((out_h, out_w), dtype=np.float64)
-    for i in range(out_h):
-        for j in range(out_w):
-            block = gray[ys[i]:max(ys[i + 1], ys[i] + 1),
-                         xs[j]:max(xs[j + 1], xs[j] + 1)]
-            out[i, j] = block.mean() if block.size else 0.0
-    return out
-
-
-def _decode_image_bytes(payload: bytes, fake: bool, size: tuple[int, int] = (2, 2)):
-    """Decode + downsample tiers: deterministic fake (CI) -> PIL when
-    importable (any format) -> pure-numpy PPM/BMP (no codec needed) ->
-    NotImplementedError for compressed formats without a codec library.
-    ``size`` = (height, width) of the block-mean feature grid."""
-    oh, ow = size
-    if payload is None:
-        raise ValueError("empty payload")
-    if fake:
-        # deterministic fake: oh*ow 'pixels' cycled from payload bytes
-        n = oh * ow
-        b = (payload[: 4 * n] or b"\0") * (4 * n)
-        return [b[5 * i % len(b)] / 255.0 for i in range(n)]
-    if HAS_PIL:
-        import io
-
-        img = _PILImage.open(io.BytesIO(payload)).convert("L").resize((ow, oh))
-        return [p / 255.0 for p in img.getdata()]
-    small = downsample_gray(_decode_raw_gray(payload), oh, ow)
-    return [float(v) / 255.0 for v in small.reshape(-1)]
-
-
-def extract_image_features(
-    media: DataFrame,
-    fake_decoder: bool = False,
-    batch_hint: int = 256,
-    feature_size: tuple[int, int] = (2, 2),
-) -> DataFrame:
-    """Arrow-batched decode + resize/feature stage over binary payloads.
-
-    ``mapInPandas`` keeps whole Arrow batches in flight — payload bytes move
-    executor->Python once per batch, never per row.  Decode errors are a
-    data channel (``decode_error``), not task failures.  ``feature_size``
-    (height, width) sets the block-mean downsample grid — (2, 2) gives the
-    4-float fingerprint, larger grids give thumbnail-resolution features.
-    """
-    import pandas as pd
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            out = []
-            for rec in pdf.itertuples(index=False):
-                try:
-                    feat = _decode_image_bytes(rec.payload, fake_decoder, feature_size)
-                    out.append((rec.media_id, rec.doc_id, rec.mime, feat, None))
-                except Exception as exc:  # noqa: BLE001 - decode errors are
-                    # a data channel (incl. codec-library errors like PIL's
-                    # UnidentifiedImageError); one bad image must never kill
-                    # a 100 TB task
-                    out.append((rec.media_id, rec.doc_id, rec.mime, None, str(exc)))
-            yield pd.DataFrame(
-                out, columns=["media_id", "doc_id", "mime", "feat", "decode_error"]
-            )
-
-    cols = media.select("media_id", "doc_id", "mime", "payload")
-    return cols.mapInPandas(run, schema=FEATURE_SCHEMA)
-
-
 def frame_sample_plan(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame-sampling plan: one row per planned frame (metadata only —
-    timestamps derived from duration; the decode itself is the stub above)."""
+    """Video frame-sampling plan: one row per planned frame, with timestamps
+    every ``every_ms`` derived from ``meta.duration_ms`` (metadata only; at
+    least one frame per video)."""
     n = F.greatest((F.col("meta.duration_ms") / every_ms).cast("int"), F.lit(1))
     return media.where(F.col("mime").startswith("video/")).select(
         "media_id",

@@ -1698,9 +1698,9 @@ FROM page_meta_input GROUP BY 1"""
 
 def q52_frame_plan_spark(spark, sf_dir):
     """Video frame-sampling plan: one row per planned frame timestamp,
-    derived from metadata only (the decode itself is the guarded tier in
-    ``functions/multimodal``).  Durations derive deterministically from the
-    page dimension; every 4th page is 'video'."""
+    derived from metadata only (no frame is decoded).  Durations derive
+    deterministically from the page's ``src_id``; every 4th page is
+    'video'."""
     from ..functions.multimodal import frame_sample_plan
 
     pm = _page_meta_df(spark, sf_dir)

@@ -258,11 +258,11 @@ def test_textstats_profile(spark):
 
 def test_multimodal_plumbing(spark):
     rows = [
-        ("m1", "d1", "00000001", "image/jpeg", bytearray(b"\xff\xd8fakejpegdata0123"),
+        ("m1", "d1", "00000001", "image/jpeg",
          {"width": 2000, "height": 3000, "dpi": 300, "n_bytes": 1048576, "duration_ms": None}),
-        ("m2", "d1", "00000002", "image/png", None,
+        ("m2", "d1", "00000002", "image/png",
          {"width": 100, "height": 100, "dpi": None, "n_bytes": 2048, "duration_ms": None}),
-        ("m3", "d2", "00000001", "video/mp4", bytearray(b"vid"),
+        ("m3", "d2", "00000001", "video/mp4",
          {"width": 1920, "height": 1080, "dpi": None, "n_bytes": 9999999, "duration_ms": 3500}),
     ]
     media = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
@@ -271,26 +271,17 @@ def test_multimodal_plumbing(spark):
     assert stats["d1"]["n_media"] == 2
     assert abs(stats["d1"]["mps"] - 6.01) < 0.01
 
-    feats = {r["media_id"]: r for r in multimodal.extract_image_features(
-        media, fake_decoder=True).collect()}
-    assert feats["m1"]["decode_error"] is None and len(feats["m1"]["feat"]) == 4
-    assert feats["m2"]["decode_error"] is not None  # empty payload -> error channel
-
-    # stub without fake decoder: errors, never task failure
-    stub = multimodal.extract_image_features(media, fake_decoder=False).collect()
-    assert all(r["decode_error"] for r in stub)
-
     frames = multimodal.frame_sample_plan(media).collect()
     assert [r["frame_ts_ms"] for r in frames] == [0, 1000, 2000]
 
 
 def test_megapixel_histogram(spark):
     rows = [
-        ("m1", "d1", "1", "image/jpeg", None,
+        ("m1", "d1", "1", "image/jpeg",
          {"width": 2000, "height": 3000, "dpi": 300, "n_bytes": 10, "duration_ms": None}),
-        ("m2", "d1", "2", "image/jpeg", None,
+        ("m2", "d1", "2", "image/jpeg",
          {"width": 2000, "height": 3010, "dpi": 300, "n_bytes": 10, "duration_ms": None}),
-        ("m3", "d2", "1", "image/jpeg", None,
+        ("m3", "d2", "1", "image/jpeg",
          {"width": 1000, "height": 1000, "dpi": 300, "n_bytes": 10, "duration_ms": None}),
     ]
     media = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
@@ -332,99 +323,6 @@ def test_cosine_near_duplicates(spark):
     assert (0, 1) in pairs and pairs[(0, 1)] > 0.99
     for (a, b), sim in pairs.items():
         assert a < b and sim >= 0.9
-
-
-def test_pil_decode_tier(spark):
-    """fake_decoder=False decodes a real PNG into the 2x2 grayscale
-    feature — via PIL when importable, else the pure-numpy PNG tier
-    (round 5; the old base64 fixture here had a corrupt IDAT CRC and
-    Adler-32, unnoticed while the no-PIL branch only asserted the
-    codec-gap error).  Malformed payloads stay in the error channel
-    either way."""
-    import struct
-    import zlib
-
-    def _chunk(ctype, body):
-        return (len(body).to_bytes(4, "big") + ctype + body
-                + zlib.crc32(ctype + body).to_bytes(4, "big"))
-
-    # 1x1 white 8-bit gray PNG, spec-conformant
-    png = (b"\x89PNG\r\n\x1a\n"
-           + _chunk(b"IHDR", struct.pack(">IIBBBBB", 1, 1, 8, 0, 0, 0, 0))
-           + _chunk(b"IDAT", zlib.compress(b"\x00\xff"))
-           + _chunk(b"IEND", b""))
-    rows = [("p1", "d1", "r1", "image/png", bytearray(png),
-             {"width": 1, "height": 1, "dpi": None, "n_bytes": len(png),
-              "duration_ms": None}),
-            ("p2", "d1", "r2", "image/png", bytearray(b"notanimage"),
-             {"width": 1, "height": 1, "dpi": None, "n_bytes": 10,
-              "duration_ms": None})]
-    media = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-    got = {r["media_id"]: r for r in
-           multimodal.extract_image_features(media).collect()}
-    # PIL and the numpy PNG tier agree: a real PNG decodes ...
-    assert got["p1"]["decode_error"] is None
-    assert [round(v, 4) for v in got["p1"]["feat"]] == [1.0, 1.0, 1.0, 1.0]
-    assert got["p2"]["decode_error"]  # ... malformed -> error row, not crash
-
-
-def test_numpy_raw_decode_tier(spark):
-    """Uncompressed rasters decode with NO codec library: binary PPM (P6)
-    and 24-bit BMP payloads yield exact quadrant-mean features while
-    compressed formats stay on the error channel.  (PIL, when present,
-    takes precedence and is covered by test_pil_decode_tier.)"""
-    if multimodal.HAS_PIL:  # tier unreachable when PIL importable
-        import pytest
-
-        pytest.skip("PIL present; numpy raw tier shadowed")
-
-    # 4x4 PPM, solid 2x2 quadrants: black, white, red, blue
-    head = b"P6\n# comment\n4 4\n255\n"
-    tl, tr, bl, br = b"\x00\x00\x00", b"\xff\xff\xff", b"\xff\x00\x00", b"\x00\x00\xff"
-    ppm = head + (tl * 2 + tr * 2) * 2 + (bl * 2 + br * 2) * 2
-
-    # 2x2 24-bit BMP, gray rows top-down [10, 20], [30, 40]; stored
-    # bottom-up with 4-byte row padding (6 -> 8)
-    def row(vals):
-        return b"".join(bytes([v, v, v]) for v in vals) + b"\x00\x00"
-
-    pixels = row([30, 40]) + row([10, 20])
-    bmp = (
-        b"BM" + (54 + len(pixels)).to_bytes(4, "little") + b"\x00" * 4
-        + (54).to_bytes(4, "little")
-        + (40).to_bytes(4, "little")
-        + (2).to_bytes(4, "little", signed=True)
-        + (2).to_bytes(4, "little", signed=True)
-        + (1).to_bytes(2, "little") + (24).to_bytes(2, "little")
-        + (0).to_bytes(4, "little") + len(pixels).to_bytes(4, "little")
-        + b"\x00" * 16
-    ) + pixels
-
-    meta = {"width": 4, "height": 4, "dpi": None, "n_bytes": 0, "duration_ms": None}
-    rows = [
-        ("ppm", "d1", "r1", "image/x-portable-pixmap", bytearray(ppm), meta),
-        ("bmp", "d1", "r2", "image/bmp", bytearray(bmp), meta),
-        ("jpg", "d1", "r3", "image/jpeg", bytearray(b"\xff\xd8\xff\xe0data"), meta),
-    ]
-    media = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-    got = {r["media_id"]: r for r in
-           multimodal.extract_image_features(media).collect()}
-
-    assert got["ppm"]["decode_error"] is None
-    assert [round(v, 3) for v in got["ppm"]["feat"]] == [0.0, 1.0, 0.299, 0.114]
-    assert got["bmp"]["decode_error"] is None
-    assert [round(v * 255, 1) for v in got["bmp"]["feat"]] == [10.0, 20.0, 30.0, 40.0]
-    # truncated JPEG: error ROW (from the baseline decoder), never a crash
-    assert got["jpg"]["decode_error"]
-
-    # resize dial: a 4x4 grid over the 4x4 PPM is the identity downsample —
-    # each output cell is one source pixel's luma
-    grid = {r["media_id"]: r for r in multimodal.extract_image_features(
-        media, feature_size=(4, 4)).collect()}
-    f = [round(v, 3) for v in grid["ppm"]["feat"]]
-    assert len(f) == 16
-    assert f[0:4] == [0.0, 0.0, 1.0, 1.0]      # row 0: black black white white
-    assert f[8:12] == [0.299, 0.299, 0.114, 0.114]  # row 2: red red blue blue
 
 
 def test_train_centroids_deterministic_and_exact(spark):
@@ -481,44 +379,3 @@ def test_train_centroids_guards(spark):
         similarity.train_centroids(emb.where("vec_id < 2"), k=4)
     with _pytest.raises(ValueError, match="k >= 1"):
         similarity.train_centroids(emb, k=0)
-
-
-def test_jpeg_decode_tier(spark):
-    """Real baseline AND progressive JPEGs decode through the Arrow
-    feature stage with NO codec library: exact-value features from a known
-    synthetic image; an arithmetic-coded payload stays on the error
-    channel."""
-    if multimodal.HAS_PIL:
-        import pytest
-
-        pytest.skip("PIL present; numpy jpeg tier shadowed")
-    import numpy as np
-
-    from tests.test_jpeg_decode import encode_jpeg
-    from tests.test_jpeg_progressive import encode_jpeg_progressive
-
-    # 16x16 grayscale, solid 8x8 quadrants 40/80/120/200
-    img = np.zeros((16, 16))
-    img[:8, :8], img[:8, 8:], img[8:, :8], img[8:, 8:] = 40.0, 80.0, 120.0, 200.0
-    payload = encode_jpeg(img)
-    prog = encode_jpeg_progressive(img)  # SOF2, same coefficients
-
-    # arithmetic-coded stand-in: flip the SOF marker
-    arith = bytearray(payload)
-    arith[arith.index(b"\xff\xc0") + 1] = 0xC9
-
-    meta = {"width": 16, "height": 16, "dpi": None,
-            "n_bytes": len(payload), "duration_ms": None}
-    rows = [
-        ("base", "d1", "r1", "image/jpeg", bytearray(payload), meta),
-        ("prog", "d1", "r2", "image/jpeg", bytearray(prog), meta),
-        ("arith", "d1", "r3", "image/jpeg", bytearray(bytes(arith)), meta),
-    ]
-    media = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-    got = {r["media_id"]: r for r in
-           multimodal.extract_image_features(media).collect()}
-    for name in ("base", "prog"):
-        assert got[name]["decode_error"] is None
-        feats = [round(v * 255, 0) for v in got[name]["feat"]]
-        assert feats == [40.0, 80.0, 120.0, 200.0], name
-    assert "codec library" in got["arith"]["decode_error"]
