@@ -1,22 +1,22 @@
-"""Minimal JPEG decoder in pure numpy — the compressed tier of the
-multimodal decode stack (``multimodal._decode_raw_gray``).
+"""Minimal JPEG decoder in pure numpy.
+
+A standalone reference codec: no query, job or benchmark decodes pixels
+(media spans are opaque page refs, see ``functions/multimodal.py``).  It is
+kept for block features from JPEG DCT coefficients (the Frequency-Store
+line of work in PAPERS.md), which would need its own workload to be wired
+in.
 
 Scope, honestly stated: baseline sequential DCT (SOF0/SOF1) AND
 progressive DCT (SOF2: spectral selection + successive approximation with
 EOB runs — the dominant real-world scan format), 8-bit precision,
 grayscale or 3-component YCbCr with any sampling factors up to 4:2:0,
 restart markers.  Arithmetic coding, lossless/hierarchical SOFs, 12-bit
-and CMYK payloads raise ``NotImplementedError`` and land on the
-``decode_error`` data channel like every other codec gap.  Reference
-tie-in: the reference's workers
-decode any page image through PIL (``lib/odem/processing/image.py:37-54``);
-this keeps real pixel decode working for the dominant scan format in
-containers without a codec library.
+and CMYK payloads raise ``NotImplementedError``; malformed payloads raise
+``ValueError``.  Reference tie-in: the reference's workers
+decode any page image through PIL (``lib/odem/processing/image.py:37-54``).
 
 Performance note: entropy decode is a Python bit loop — right for fixture-
-scale payloads and for proving the Arrow plumbing end-to-end; a production
-cluster drops PIL/libjpeg in front of it (``HAS_PIL`` tier wins when
-importable) and nothing else changes.
+scale payloads, not for production decode.
 """
 
 from __future__ import annotations
@@ -445,8 +445,8 @@ def _decode_progressive_scan(
                 if val:
                     if k > se:
                         # corrupt stream drove the zigzag index past the
-                        # band end; keep it on the documented decode_error
-                        # channel instead of an IndexError (ADVICE r5)
+                        # band end; raise the documented ValueError instead
+                        # of an IndexError
                         raise ValueError("AC index overrun in refinement scan")
                     coef_block[_ZIGZAG[k]] = val
                 k += 1

@@ -1,5 +1,7 @@
-"""Minimal PNG decoder in pure numpy + stdlib zlib — the second compressed
-tier of the multimodal decode stack (``multimodal._decode_raw_gray``).
+"""Minimal PNG decoder in pure numpy + stdlib zlib.
+
+A standalone reference codec beside ``functions/jpegdec.py``; no query,
+job or benchmark decodes pixels.
 
 Scope: the complete static-PNG format — color types 0 (gray), 2 (RGB),
 3 (palette), 4 (gray+alpha), 6 (RGBA) at every legal bit depth
@@ -7,17 +9,13 @@ Scope: the complete static-PNG format — color types 0 (gray), 2 (RGB),
 scaled to the 0-255 float range), all five scanline filters
 (None/Sub/Up/Average/Paeth), and both interlace methods (progressive
 Adam7 decodes its seven independently-filtered passes).  Malformed
-payloads raise ``ValueError`` and land on the ``decode_error`` data
-channel.
+payloads raise ``ValueError``.
 Reference tie-in: the reference's workers decode page images through PIL
-(``lib/odem/processing/image.py:37-54``); together with
-``functions/jpegdec.py`` this keeps real pixel decode working for the
-common formats in containers without a codec library.
+(``lib/odem/processing/image.py:37-54``).
 
 Performance note: rows whose filter has a horizontal dependency
 (Sub/Average/Paeth) unfilter in a per-pixel loop — right for
-fixture-scale payloads; a production cluster drops PIL/libpng in front
-(``HAS_PIL`` tier wins when importable) and nothing else changes.
+fixture-scale payloads, not for production decode.
 """
 
 from __future__ import annotations

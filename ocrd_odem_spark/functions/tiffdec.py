@@ -1,10 +1,10 @@
-"""Minimal baseline-TIFF decoder in pure numpy — the fourth compressed
-tier of the multimodal decode stack (``multimodal._decode_raw_gray``).
+"""Minimal baseline-TIFF decoder in pure numpy.
 
-TIFF is the master format of digitised-archive holdings (the reference's
-corpus stores page scans as TIFF masters; its workers decode them through
-PIL, ``lib/odem/processing/image.py:37-54``), so containers without a
-codec library still need real pixel access to them.
+A standalone reference codec beside ``functions/jpegdec.py``; no query,
+job or benchmark decodes pixels.  TIFF is the master format of
+digitised-archive holdings (the reference's corpus stores page scans as
+TIFF masters; its workers decode them through PIL,
+``lib/odem/processing/image.py:37-54``).
 
 Scope, honestly stated: single-image baseline TIFF, both byte orders,
 strip- AND tile-organised (tiles stitch onto a padded canvas, every
@@ -28,8 +28,8 @@ against system libtiff (every MH run length 0..2560 individually, plus
 noise stress) in ``tests/test_tiff_decode.py``; JPEG-in-TIFF plumbing
 is exact against per-segment stream decode with the codec pinned by
 the JPEG test suite.  Old-style JPEG (compression 6) and G3
-uncompressed mode land on the ``decode_error`` channel via
-``NotImplementedError`` like every other codec gap.
+uncompressed mode raise ``NotImplementedError`` like every other codec
+gap.
 """
 
 from __future__ import annotations

@@ -229,8 +229,8 @@ def test_restart_markers():
 
 
 def test_arithmetic_coding_rejected_honestly():
-    """Progressive (SOF2) decodes natively since round 5; the honest
-    decode_error channel now starts at arithmetic coding (SOF9+)."""
+    """Progressive (SOF2) decodes natively; the honest
+    NotImplementedError gap starts at arithmetic coding (SOF9+)."""
     img = _gradient(8, 8)
     data = bytearray(encode_jpeg(img))
     i = data.index(b"\xff\xc0")

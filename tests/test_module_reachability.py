@@ -15,8 +15,17 @@ ROOT = Path(__file__).resolve().parents[1]
 PKG = "ocrd_odem_spark"
 
 # Modules only tests import, kept on purpose: geometry and salting are
-# reference semantics; oai and tables await being wired in or deleted.
+# reference semantics; pngdec and tiffdec are standalone reference decoders
+# (jpegdec needs no entry: tiffdec imports it for JPEG-in-TIFF); oai and
+# tables await being wired in or deleted.
+_CODEC = (
+    "standalone pure-numpy codec with exact round-trip tests (TIFF "
+    "cross-checked against libtiff); an image workload such as JPEG-DC "
+    "block features would need a benchmark key and a consumer first"
+)
 KEEP = {
+    "ocrd_odem_spark.functions.pngdec": _CODEC,
+    "ocrd_odem_spark.functions.tiffdec": _CODEC,
     "ocrd_odem_spark.operators.geometry": (
         "exact T1 coordinate arithmetic of SURVEY, checked against real ALTO"
     ),

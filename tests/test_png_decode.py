@@ -223,27 +223,6 @@ def test_malformed_and_unsupported():
         decode_png(bytes(bad))
 
 
-def test_multimodal_stage_decodes_png(spark):
-    """A real PNG flows through the Arrow feature stage with exact
-    quadrant features, like the JPEG tier."""
-    from ocrd_odem_spark.functions import multimodal
-
-    if multimodal.HAS_PIL:
-        pytest.skip("PIL present; numpy png tier shadowed")
-    img = np.zeros((16, 16), dtype=np.uint8)
-    img[:8, :8], img[:8, 8:], img[8:, :8], img[8:, 8:] = 40, 80, 120, 200
-    payload = encode_png(img, 0)
-    meta = {"width": 16, "height": 16, "dpi": None,
-            "n_bytes": len(payload), "duration_ms": None}
-    media = spark.createDataFrame(
-        [("png1", "d1", "r1", "image/png", bytearray(payload), meta)],
-        multimodal.MEDIA_SCHEMA,
-    )
-    got = multimodal.extract_image_features(media).collect()[0]
-    assert got["decode_error"] is None
-    assert [round(v * 255, 0) for v in got["feat"]] == [40.0, 80.0, 120.0, 200.0]
-
-
 def test_bitonal_1bit_roundtrip():
     """1-bit packed gray — the bitonal archive-scan format — decodes to
     exact 0/255, including odd widths whose last byte is padded."""

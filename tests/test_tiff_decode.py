@@ -841,25 +841,3 @@ def test_unsupported_and_malformed():
     # truncated strip
     with pytest.raises(ValueError):
         decode_tiff(data[:20])
-
-
-def test_multimodal_stage_decodes_tiff(spark):
-    """A real TIFF flows through the Arrow feature stage with exact
-    quadrant features, like the JPEG and PNG tiers."""
-    from ocrd_odem_spark.functions import multimodal
-
-    if multimodal.HAS_PIL:
-        pytest.skip("PIL present; numpy tiff tier shadowed")
-    img = np.zeros((16, 16), dtype=np.uint8)
-    img[:8, :8], img[:8, 8:], img[8:, :8], img[8:, 8:] = 10, 60, 110, 250
-    payload = encode_tiff(img, compression="packbits")
-    meta = {"width": 16, "height": 16, "dpi": None,
-            "n_bytes": len(payload), "duration_ms": None}
-    media = spark.createDataFrame(
-        [("t1", "d1", "r1", "image/tiff", bytearray(payload), meta)],
-        multimodal.MEDIA_SCHEMA,
-    )
-    got = multimodal.extract_image_features(media).collect()[0]
-    assert got["decode_error"] is None
-    assert [round(v * 255, 0) for v in got["feat"]] == [
-        10.0, 60.0, 110.0, 250.0]
