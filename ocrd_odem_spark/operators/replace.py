@@ -47,19 +47,24 @@ def replace_chars_with_counts(text: Column, dict_chars: dict[str, str]) -> Colum
 
 
 def replace_regex(text: Column, pattern: str, old: str, new: str) -> Column:
-    """T3: within every match of ``pattern`` replace ``old`` -> ``new``.
+    """T3: within every match of ``pattern`` replace ``old`` -> ``new``, as
+    one ``regexp_replace`` of ``regex_rewrite(pattern, old)``."""
+    return F.regexp_replace(text, regex_rewrite(pattern, old), new)
 
-    Expressed as a single regexp_replace: the reference finds group(1) and
-    substitutes inside it; for the shipped config (``(J[cdhmn]\\w*)``,
-    J->I) this is equivalent to replacing the leading char when followed by
-    the class — the engine keeps the general (pattern, old, new) surface.
+
+def regex_rewrite(pattern: str, old: str) -> str:
+    """The regex whose every match T3 replaces by ``new``.
+
+    The reference finds group(1) of ``pattern`` and substitutes ``old``
+    inside it; for a pattern ``(old…)`` (the shipped config:
+    ``(J[cdhmn]\\w*)``, J->I) that equals replacing ``old`` wherever the
+    rest of the group follows it, i.e. ``esc(old)(?=…)``.  Any other pattern
+    is returned unchanged, so its whole match is replaced.
     """
-    # general rewrite: match the pattern, replace old->new inside group 0
-    # via a two-step split: handled for the common prefix-substitution case
     if pattern.startswith(f"({old}") and pattern.endswith(")"):
         inner = pattern[1 + len(old):-1]
-        return F.regexp_replace(text, f"{_esc(old)}(?={inner})", new)
-    return F.regexp_replace(text, pattern, new)
+        return f"{_esc(old)}(?={inner})"
+    return pattern
 
 
 def _esc(s: str) -> str:

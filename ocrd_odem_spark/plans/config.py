@@ -5,9 +5,11 @@ The reference builds its post-OCR step chain from an INI file: sections
 named ``step_NN`` sorted numerically, each with a ``type`` key naming a
 step class and the remaining keys passed as string kwargs
 (``resources/odem.ocr-pipeline.steps.ini``).  This module parses the same
-INI format into a ``build_pipeline`` stage list.
+INI format into a stage list of ``(name, params)`` pairs, and ``line_chain``
+turns such a list into the per-line function that ``pipeline.extract(steps=)``
+runs in its Arrow stage.
 
-Step-type mapping to the declarative registry (``pipeline.STAGES``):
+Step-type mapping to the three stage names:
 
 * ``StepPostReplaceChars``      -> ``replace_chars`` (T2), dict parsed with
   the reference's own quirky ``parse_dict`` semantics (see below)
@@ -28,6 +30,11 @@ the ``skipped`` list rather than silently dropped: ``StepTesseract``
 from __future__ import annotations
 
 import configparser
+import re
+from collections.abc import Callable
+
+from ..operators.replace import regex_rewrite
+from ..oracle import postprocess_line_tokens
 
 STEP_TYPE_MAP = {
     "StepPostReplaceChars": "replace_chars",
@@ -65,7 +72,7 @@ def parse_dict(the_dict) -> dict:
 def load_steps_ini(path: str) -> tuple[list, list]:
     """Parse a reference-format steps INI into ``(stages, skipped)``.
 
-    ``stages`` feeds ``pipeline.build_pipeline`` directly; ``skipped``
+    ``stages`` is the ``steps`` argument of ``pipeline.extract``; ``skipped``
     lists ``(section, type)`` of environment-bound steps.  Unknown step
     types raise ``KeyError("Unknown step '<type>'!")`` exactly like the
     reference's ``init_steps``.
@@ -96,3 +103,56 @@ def load_steps_ini(path: str) -> tuple[list, list]:
             params = {}
         stages.append((name, params))
     return stages, skipped
+
+
+def postprocess_text(line: str | None) -> str | None:
+    """The ``postprocess`` step: token post-processing of one line, ``None``
+    (dropped) when no token survives; a null text is dropped too."""
+    tokens = postprocess_line_tokens((line or "").split(" "))
+    return " ".join(tokens) if tokens else None
+
+
+def line_chain(stages) -> Callable[[str | None], str | None]:
+    """Compose ``(name, params)`` stages into one per-line function.
+
+    ``None`` out means the line is dropped.  ``replace_chars`` is chained
+    ``str.replace`` in dict order, ``replace_regex`` substitutes ``new`` for
+    every match of ``operators.replace.regex_rewrite(pattern, old)``, and
+    both pass ``None`` on unchanged: only ``postprocess`` drops a line, so
+    a chain without it keeps null and emptied lines.  Unknown names raise
+    ``KeyError``, and so does a ``new`` holding ``$`` or ``\\``: the
+    reference inserts ``new`` literally, while ``re.sub`` (and Spark's
+    ``regexp_replace``) would read it as a group reference.
+    """
+    fns = []
+    for name, params in stages:
+        if name == "postprocess":
+            fns.append(postprocess_text)
+        elif name == "replace_chars":
+            items = tuple(params["dict_chars"].items())
+
+            def chars(t, items=items):
+                if t is not None:
+                    for old, new in items:
+                        t = t.replace(old, new)
+                return t
+
+            fns.append(chars)
+        elif name == "replace_regex":
+            new = params["new"]
+            if "$" in new or "\\" in new:
+                raise KeyError(f"replace_regex: group reference in new={new!r}")
+            rx = re.compile(regex_rewrite(params["pattern"], params["old"]))
+            fns.append(lambda t, rx=rx, new=new: t if t is None else rx.sub(new, t))
+        else:
+            known = sorted(STEP_TYPE_MAP.values())
+            raise KeyError(f"unknown step {name!r}; known: {known}")
+    if len(fns) == 1:
+        return fns[0]  # the default extract: no loop per line
+
+    def chain(line):
+        for fn in fns:
+            line = fn(line)
+        return line
+
+    return chain

@@ -31,6 +31,7 @@ from ..operators.dehyphen import dehyphenate_spans
 from ..operators.tokens import postprocess_line
 
 SPAN_FIELDS = ("kind", "text", "media_ref", "offset")
+EXTRACT_STEPS = (("postprocess", {}),)
 
 
 def _span(kind: Column, text: Column, media_ref: Column, offset: Column) -> Column:
@@ -62,9 +63,19 @@ def reoffset(spans: Column) -> Column:
 
 def postprocess_spans(spans: Column) -> Column:
     """Token post-processing of every text span + empty-line cascade drop."""
+    processed = F.transform(
+        spans,
+        lambda s: _span(
+            s["kind"],
+            F.when(s["kind"] == "text", postprocess_line(s["text"])).otherwise(
+                s["text"]
+            ),
+            s["media_ref"],
+            s["offset"],
+        ),
+    )
     return F.filter(
-        map_text(spans, postprocess_line),
-        lambda s: (s["kind"] == "media") | (s["text"] != ""),
+        processed, lambda s: (s["kind"] == "media") | (s["text"] != "")
     )
 
 
@@ -74,6 +85,7 @@ def extract(
     doc_meta: DataFrame | None = None,
     dehyphenate: bool = False,
     with_metrics: bool = False,
+    steps=EXTRACT_STEPS,
     mode: str = "arrow",
 ) -> DataFrame:
     """Full extraction plan: (doc_id, spans) -> (doc_id, spans[, metrics]).
@@ -93,7 +105,14 @@ def extract(
       text line of an RTL-language doc (``RTL_LANGUAGES``) has its
       directional marks stripped and is folded right-to-left before
       post-processing.
-    * ``dehyphenate``: run the per-page wrap-merge (quality path T4).
+    * ``dehyphenate``: run the per-page wrap-merge (quality path T4) on the
+      lines the steps leave; it needs a ``postprocess`` step.
+    * ``steps``: the per-line step chain, ``(name, params)`` pairs as
+      ``config.load_steps_ini`` returns them (``config.line_chain``), run
+      on each text line after the RTL fold and before de-hyphenation.  The
+      default is the extract's own token post-processing.  Only a
+      ``postprocess`` step drops lines, so a chain without one keeps every
+      text span, null texts included.
     * ``with_metrics``: add per-doc ``n_pages``, ``n_lines_in`` (input text
       spans, counted before the blacklist drop), ``n_lines_out``,
       ``n_tokens_out`` and ``n_dehyphenated``.
@@ -102,13 +121,14 @@ def extract(
     flagship run and ``--scaling``): the bare chain sort -> postprocess ->
     optional ``dehyphenate_spans`` -> reoffset as JVM higher-order
     functions.  It raises ``ValueError`` when given ``page_meta``,
-    ``doc_meta`` or ``with_metrics``.
+    ``doc_meta``, ``with_metrics`` or ``steps``.
     """
     if mode == "hof":
-        if page_meta is not None or doc_meta is not None or with_metrics:
+        given = page_meta is not None or doc_meta is not None or with_metrics
+        if given or steps != EXTRACT_STEPS:
             raise ValueError(
                 "mode='hof' is the bench-only bare chain: "
-                "no page_meta, doc_meta or with_metrics"
+                "no page_meta, doc_meta, with_metrics or steps"
             )
         spans = postprocess_spans(sorted_spans(F.col("spans")))
         if dehyphenate:
@@ -116,7 +136,9 @@ def extract(
         return docs.select("doc_id", reoffset(spans).alias("spans"))
     if mode != "arrow":
         raise ValueError(f"unknown mode {mode!r}")
-    return extract_arrow(docs, page_meta, doc_meta, dehyphenate, with_metrics)
+    return extract_arrow(
+        docs, page_meta, doc_meta, dehyphenate, with_metrics, steps
+    )
 
 
 def extract_arrow(
@@ -125,6 +147,7 @@ def extract_arrow(
     doc_meta: DataFrame | None = None,
     dehyphenate: bool = False,
     with_metrics: bool = False,
+    steps=EXTRACT_STEPS,
 ) -> DataFrame:
     """Arrow-batched extraction: ``mapInArrow`` running the exact oracle
     line functions over each batch's flat columnar buffers (see
@@ -163,9 +186,10 @@ def extract_arrow(
     batch, and only the text lines enter Python, as plain ``str`` through
     Arrow's C++ conversion (``to_numpy(zero_copy_only=False).tolist()``;
     ``to_pylist()`` builds a pyarrow scalar per element first and cost ~7x
-    as much).  One flat loop per batch runs ``postprocess_line_tokens`` on
-    every line.  Pages are found with numpy (a run of kept lines of one doc
-    and one ``media_ref`` with no media span between), and
+    as much).  One flat loop per batch runs the step chain
+    (``config.line_chain(steps)``) on every line.  Pages are found with
+    numpy (a run of kept lines of one doc and one ``media_ref`` with no
+    media span between), and
     ``dehyphenate_lines`` runs only on pages with a ``-``-terminated line
     before their last line, the only lines it acts on.  Everything else in
     the output list<struct> — media spans, ``kind``, ``media_ref``, dense
@@ -179,12 +203,14 @@ def extract_arrow(
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    from ..oracle import (
-        dehyphenate_lines,
-        fold_rtl,
-        postprocess_line_tokens,
-        strip_marks,
-    )
+    from ..oracle import dehyphenate_lines, fold_rtl, strip_marks
+    from .config import line_chain
+
+    step = line_chain(steps)
+    drops = any(name == "postprocess" for name, _ in steps)
+    if dehyphenate and not drops:
+        raise ValueError("dehyphenate runs on post-processed lines: "
+                         "steps need a postprocess step")
 
     # flags for the batch function, which must not capture a DataFrame
     has_rtl, has_blacklist = doc_meta is not None, page_meta is not None
@@ -246,13 +272,11 @@ def extract_arrow(
                 rtl_doc = rtl_doc.to_numpy(zero_copy_only=False)
                 for i in np.flatnonzero(rtl_doc[doc_idx[line_pos]]).tolist():
                     lines[i] = fold_rtl(strip_marks(lines[i] or "").split(" "))
-            done = []
-            for line in lines:
-                toks = postprocess_line_tokens((line or "").split(" "))
-                done.append(" ".join(toks) if toks else None)
-            done_arr = pa.array(done, pa.string())
-            line_pos = line_pos[done_arr.is_valid().to_numpy(zero_copy_only=False)]
-            out_lines = done_arr.drop_null()
+            done = list(map(step, lines))
+            out_lines = pa.array(done, pa.string())
+            if drops:
+                valid = out_lines.is_valid().to_numpy(zero_copy_only=False)
+                line_pos, out_lines = line_pos[valid], out_lines.drop_null()
             merges = np.zeros(n, dtype=np.int64)
             if dehyphenate:
                 # a page is a run of kept lines of one doc and one media_ref
@@ -278,10 +302,10 @@ def extract_arrow(
                     kept = [t for t in done if t is not None]
                     for lo, hi in zip(starts[pages].tolist(), ends[pages].tolist()):
                         merged, n_merged = dehyphenate_lines(kept[lo:hi])
-                        # post-processed lines are never blank, so the
-                        # oracle's drop of a '-' line before a blank one
-                        # cannot happen here; should it, the page's last
-                        # slot goes (all its slots share doc and media_ref)
+                        # only a replace step after postprocess can blank a
+                        # line, and so drop the '-' line before it (as the
+                        # oracle does); then the page's last slot goes (all
+                        # its slots share doc and media_ref)
                         merged += [None] * (hi - lo - len(merged))
                         kept[lo:hi] = merged
                         merges[doc_idx[line_pos[lo]]] += n_merged
@@ -325,7 +349,9 @@ def extract_arrow(
                 n_pages = np.bincount(out_doc[out_media], minlength=n)
                 n_lines_out = counts - n_pages
                 # split(' ') semantics: n_tokens = count(' ') + 1 per line
-                tokens = pc.count_substring(out_lines, " ").to_numpy() + 1
+                # a null line (kept only without postprocess) has none
+                tokens = pc.count_substring(out_lines, " ").fill_null(-1)
+                tokens = tokens.to_numpy() + 1
                 token_sum = np.concatenate(([0], np.cumsum(tokens)))
                 line_off = np.concatenate(([0], np.cumsum(n_lines_out)))
                 cols += [
@@ -569,231 +595,3 @@ def repartition_for_scale(docs: DataFrame, num_partitions: int) -> DataFrame:
     """Range-repartition on doc_id — co-locates doc ranges for watermark
     bookkeeping while spreading oversized docs across partitions."""
     return docs.repartitionByRange(num_partitions, "doc_id")
-
-
-# ---------------------------------------------------------------------------
-# Declarative stage registry (reference O4: the step_NN config registry,
-# ``ocr_pipeline.py:631-651`` — steps instantiated by name from an INI file).
-# A pipeline is a list of (stage_name, params) applied to the spans column;
-# every stage stays a narrow Catalyst expression.
-# ---------------------------------------------------------------------------
-
-
-def map_text(spans: Column, fn) -> Column:
-    """Apply a text->text column function to the text spans of an array."""
-    return F.transform(
-        spans,
-        lambda s: _span(
-            s["kind"],
-            F.when(s["kind"] == "text", fn(s["text"])).otherwise(s["text"]),
-            s["media_ref"],
-            s["offset"],
-        ),
-    )
-
-
-def _stage_replace_chars(spans: Column, params: dict) -> Column:
-    from ..operators.replace import replace_chars
-
-    return map_text(spans, lambda t: replace_chars(t, params["dict_chars"]))
-
-
-def _stage_replace_regex(spans: Column, params: dict) -> Column:
-    from ..operators.replace import replace_regex
-
-    return map_text(
-        spans,
-        lambda t: replace_regex(t, params["pattern"], params["old"], params["new"]),
-    )
-
-
-def _stage_sanitize(spans: Column, params: dict) -> Column:
-    from ..operators.quality import sanitize_line
-
-    return map_text(spans, sanitize_line)
-
-
-def _stage_index_norm(spans: Column, params: dict) -> Column:
-    from ..operators.replace import normalize_index_content
-
-    return map_text(spans, normalize_index_content)
-
-
-def _stage_mark_strip(spans: Column, params: dict) -> Column:
-    from ..operators.tokens import strip_marks
-
-    return map_text(spans, strip_marks)
-
-
-def _stage_dehyphenate(spans: Column, params: dict) -> Column:
-    from ..operators.dehyphen import dehyphenate_spans
-
-    return dehyphenate_spans(spans)["spans"]
-
-
-def _stage_drop_blank_tokens(spans: Column, params: dict) -> Column:
-    from ..operators.tokens import drop_blank_tokens
-
-    cleared = map_text(spans, drop_blank_tokens)
-    return F.filter(
-        cleared, lambda s: (s["kind"] == "media") | (s["text"] != "")
-    )
-
-
-STAGES = {
-    "sort": lambda spans, params: sorted_spans(spans),
-    "postprocess": lambda spans, params: postprocess_spans(spans),
-    "drop_blank_tokens": _stage_drop_blank_tokens,
-    "replace_chars": _stage_replace_chars,
-    "replace_regex": _stage_replace_regex,
-    "sanitize_chars": _stage_sanitize,
-    "index_normalize": _stage_index_norm,
-    "mark_strip": _stage_mark_strip,
-    "dehyphenate": _stage_dehyphenate,
-    "drop_empty": lambda spans, params: F.filter(
-        spans, lambda s: (s["kind"] == "media") | (F.length(F.trim(s["text"])) > 0)
-    ),
-    "reoffset": lambda spans, params: reoffset(spans),
-}
-
-
-def run_pipeline_arrow(docs: DataFrame, stages: list) -> DataFrame:
-    """Arrow executor for a configured stage list (r6, guide §4.2).
-
-    Runs the same normalized ``(name, params)`` chain as ``build_pipeline``
-    but as ONE ``mapInPandas`` stage with Python mirrors of each stage —
-    the HOF form nests an interpreted ``transform`` lambda per stage per
-    span.  Mirrors are exact: literal replaces are ``str.replace`` in dict
-    order (== chained ``F.replace``), the regex stage reuses the same
-    prefix-lookahead rewrite as ``operators.replace.replace_regex`` (and
-    refuses patterns whose replacement could diverge between Java and
-    Python regex syntax), token stages run the pinned oracle loop.
-    Stage-order observability is unchanged — the chain comes from the same
-    INI loader, and a misordered chain changes values exactly as in hof
-    mode.  Raises ``KeyError`` for stages without a mirror (use
-    ``build_pipeline`` for those).
-    """
-    import re as _re
-
-    import pandas as pd
-
-    from ..operators.replace import _esc
-    from ..oracle import postprocess_line_tokens
-
-    normalized = [
-        (s, {}) if isinstance(s, str) else (s[0], s[1] or {}) for s in stages
-    ]
-    for name, _ in normalized:
-        if name not in STAGES:
-            raise KeyError(f"unknown stage {name!r}; known: {sorted(STAGES)}")
-
-    ops: list[tuple[str, object]] = []
-    for name, params in normalized:
-        if name in ("sort", "reoffset", "postprocess", "drop_blank_tokens",
-                    "drop_empty"):
-            ops.append((name, None))
-        elif name == "replace_chars":
-            items = list(params["dict_chars"].items())
-
-            def chain(t, items=items):
-                for old, new in items:
-                    t = t.replace(old, new)
-                return t
-
-            ops.append(("text", chain))
-        elif name == "replace_regex":
-            pattern, old, new = params["pattern"], params["old"], params["new"]
-            if "$" in new or "\\" in new:
-                raise KeyError(
-                    "replace_regex with group references has no arrow "
-                    "mirror; use build_pipeline (hof)"
-                )
-            if pattern.startswith(f"({old}") and pattern.endswith(")"):
-                inner = pattern[1 + len(old):-1]
-                rx = _re.compile(f"{_esc(old)}(?={inner})")
-            else:
-                rx = _re.compile(pattern)
-            ops.append(("text", lambda t, rx=rx, new=new: rx.sub(new, t)))
-        else:
-            raise KeyError(
-                f"stage {name!r} has no arrow mirror; use build_pipeline (hof)"
-            )
-
-    def apply_doc(spans):
-        rows = [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in spans]
-        for op, f in ops:
-            if op == "sort":
-                rows.sort(key=lambda r: r[3])
-            elif op == "reoffset":
-                rows = [(k, t, m, i) for i, (k, t, m, _o) in enumerate(rows)]
-            elif op == "text":
-                rows = [
-                    (k, f(t) if k == "text" else t, m, o) for (k, t, m, o) in rows
-                ]
-            elif op == "postprocess":
-                out = []
-                for k, t, m, o in rows:
-                    if k == "text":
-                        t = " ".join(postprocess_line_tokens((t or "").split(" ")))
-                        if t == "":
-                            continue
-                    out.append((k, t, m, o))
-                rows = out
-            elif op == "drop_blank_tokens":
-                out = []
-                for k, t, m, o in rows:
-                    if k == "text":
-                        t = " ".join(x for x in t.split(" ") if x.strip() != "")
-                        if t == "":
-                            continue
-                    out.append((k, t, m, o))
-                rows = out
-            elif op == "drop_empty":
-                rows = [
-                    (k, t, m, o) for (k, t, m, o) in rows
-                    if k == "media" or len(t.strip(" ")) > 0
-                ]
-        return rows
-
-    def run(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                [(rec.doc_id, apply_doc(rec.spans))
-                 for rec in pdf.itertuples(index=False)],
-                columns=["doc_id", "spans"],
-            )
-
-    schema = (
-        "doc_id string, spans array<struct<"
-        "kind:string,text:string,media_ref:string,offset:int>>"
-    )
-    return docs.select("doc_id", "spans").mapInPandas(run, schema=schema)
-
-
-def build_pipeline(stages: list) -> "DataFrame -> DataFrame":
-    """Compose a configured stage list into one narrow plan.
-
-    ``stages``: names or (name, params) tuples, e.g.::
-
-        run = build_pipeline([
-            "sort",
-            ("replace_chars", {"dict_chars": {"ic)": "ich"}}),
-            ("replace_regex", {"pattern": r"(J[cdhmn]\\w*)", "old": "J", "new": "I"}),
-            "postprocess", "dehyphenate", "reoffset",
-        ])
-        out = run(docs)
-    """
-    normalized = [
-        (s, {}) if isinstance(s, str) else (s[0], s[1] or {}) for s in stages
-    ]
-    for name, _ in normalized:
-        if name not in STAGES:
-            raise KeyError(f"unknown stage {name!r}; known: {sorted(STAGES)}")
-
-    def run(docs: DataFrame) -> DataFrame:
-        spans = F.col("spans")
-        for name, params in normalized:
-            spans = STAGES[name](spans, params)
-        return docs.select("doc_id", spans.alias("spans"))
-
-    return run

@@ -88,8 +88,8 @@ def docs_nested_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Derived spans regrouped to the nested (doc_id, spans) contract.
 
     r6: unsorted regroup — every consumer of this helper (``extract`` in
-    both modes, the q55 arrow chain via its ``sort`` stage) orders by
-    offset itself, so the regroup's own sort was pure duplicated work."""
+    both modes, q55 included) orders by offset itself, so the regroup's
+    own sort was pure duplicated work."""
     return pipeline.from_flat(spans_df(spark, sf_dir), sort=False)
 
 
@@ -1860,10 +1860,10 @@ path_target = /tmp/q55_moved
 
 def q55_ini_pipeline_spark(spark, sf_dir):
     """O4 + config-driven instantiation as one driver query: parse a
-    reference-format steps INI (written deterministically at call time),
-    feed the resulting stage list to ``build_pipeline``, and run the
-    composed narrow plan over the derived span corpus (reference
-    ``init_steps`` + ``Step*`` chain, ``ocr_pipeline.py:631-651``)."""
+    reference-format steps INI (written deterministically at call time)
+    and run the resulting stage list as the ``steps`` of the extract's
+    Arrow stage over the derived span corpus (reference ``init_steps`` +
+    ``Step*`` chain, ``ocr_pipeline.py:631-651``)."""
     import tempfile
 
     from .config import load_steps_ini
@@ -1872,13 +1872,8 @@ def q55_ini_pipeline_spark(spark, sf_dir):
     with open(path, "w", encoding="utf-8") as fh:
         fh.write(_Q55_INI)
     stages, _skipped = load_steps_ini(path)
-    # r6: same INI-loaded stage chain (O4 ordering still value-observable),
-    # executed through the arrow stage mirrors instead of the nested
-    # interpreted HOF transforms; equality pinned in test_r06_optimizations
     return pipeline.to_flat(
-        pipeline.run_pipeline_arrow(
-            docs_nested_df(spark, sf_dir), ["sort", *stages, "reoffset"]
-        )
+        pipeline.extract(docs_nested_df(spark, sf_dir), steps=stages)
     )
 
 

@@ -74,10 +74,21 @@ def test_blacklist_join_broadcasts(spark, docs_parquet, page_meta_df, doc_meta_d
     assert shuffles, plan  # the blacklist aggregation's exchange
     assert all("BroadcastExchange" in a for a in shuffles), plan
 
+    steps = (("replace_chars", {"dict_chars": {"ic)": "ich"}}), ("postprocess", {}))
     for kwargs in ({"page_meta": page_meta_df}, {"doc_meta": doc_meta_df},
-                   {"with_metrics": True}):
+                   {"with_metrics": True}, {"steps": steps}):
         with pytest.raises(ValueError, match="bench-only"):
             pipeline.extract(docs, mode="hof", **kwargs)
+
+
+def test_q55_runs_in_the_extract_arrow_stage(spark):
+    """q55's INI step chain runs inside the extract's one Arrow map."""
+    from ocrd_odem_spark.plans.queries import q55_ini_pipeline_spark
+
+    out = q55_ini_pipeline_spark(spark, "/root/testdata/sf0.001")
+    names = [n for n, _ in _nodes(out._jdf.queryExecution().executedPlan())]
+    assert names.count("MapInArrow") == 1, _plan(out)
+    assert "MapInPandas" not in names, _plan(out)
 
 
 def test_relational_join_broadcasts_small_dims(spark):

@@ -298,38 +298,6 @@ def test_page_text_stats_arrow_matches_hof(spark):
     assert any(v[2] for v in want.values())  # some page has a wrap merge
 
 
-def test_run_pipeline_arrow_matches_hof_chain(spark):
-    """Arrow pipeline executor == build_pipeline HOF chain for the q55
-    stage list (regex -> chars -> postprocess) over the derived corpus."""
-    from ocrd_odem_spark.plans import pipeline, queries
-
-    docs = queries.docs_nested_df(spark, "/root/testdata/sf0.001")
-    stages = [
-        "sort",
-        ("replace_regex", {"pattern": "(J[cdhmn])", "old": "J", "new": "I"}),
-        ("replace_chars", {"dict_chars": {"Ic": "Ich", "scan": "Abtastung"}}),
-        "postprocess",
-        "reoffset",
-    ]
-    hof = pipeline.to_flat(pipeline.build_pipeline(stages)(docs))
-    arrow = pipeline.to_flat(pipeline.run_pipeline_arrow(docs, stages))
-    key = lambda r: (r["doc_id"], r["offset"])  # noqa: E731
-    assert sorted(map(tuple, arrow.collect()), key=lambda t: (t[0], t[4])) == \
-           sorted(map(tuple, hof.collect()), key=lambda t: (t[0], t[4]))
-
-
-def test_run_pipeline_arrow_rejects_unmirrored(spark):
-    from ocrd_odem_spark.plans import pipeline, queries
-
-    docs = queries.docs_nested_df(spark, "/root/testdata/sf0.001")
-    import pytest as _pytest
-
-    with _pytest.raises(KeyError):
-        pipeline.run_pipeline_arrow(docs, ["sort", "dehyphenate"])
-    with _pytest.raises(KeyError):
-        pipeline.run_pipeline_arrow(docs, ["nope"])
-
-
 def test_extract_arrow_boundary_edge_shapes(spark):
     """r6.2 mapInArrow boundary: flat-columnar in/out must survive the
     degenerate list shapes the dict-per-span form handled implicitly —

@@ -1,4 +1,4 @@
-"""T2/T3/T6/T7/T10 replacement ops + the declarative stage registry (O4)."""
+"""T2/T3/T6/T7/T10 replacement ops + the INI step chain (O4)."""
 
 from __future__ import annotations
 
@@ -69,42 +69,128 @@ def test_page_ref_normalization(spark):
     assert r["fn"] == "00000003.jpg"
 
 
-def test_stage_registry_composition(spark, docs_df, corpus):
-    """A configured stage list reproduces extract() exactly."""
-    run = pipeline.build_pipeline(["sort", "postprocess", "dehyphenate", "reoffset"])
-    got = {
-        r["doc_id"]: [tuple(s) for s in r["spans"]] for r in run(docs_df).collect()
-    }
-    want = {
-        d["doc_id"]: [
-            (s["kind"], s["text"], s["media_ref"], s["offset"])
-            for s in oracle.extract_document_dehyphenated(d["spans"])
-        ]
-        for d in corpus
-    }
-    assert got == want
+_SPANS = (
+    "doc_id string, "
+    "spans array<struct<kind:string,text:string,media_ref:string,offset:int>>"
+)
 
 
-def test_stage_registry_with_replacements(spark):
+def _texts(docs, steps):
+    """(kind, text, offset) of each doc's extracted spans, by doc_id."""
+    return {
+        r["doc_id"]: [(s["kind"], s["text"], s["offset"]) for s in r["spans"]]
+        for r in pipeline.extract(docs, steps=steps).collect()
+    }
+
+
+def test_steps_with_replacements(spark):
     docs = spark.createDataFrame(
         [("d1", [{"kind": "media", "text": "", "media_ref": "00000001", "offset": 0},
                  {"kind": "text", "text": "Jch ſehe ic) gut", "media_ref": "00000001", "offset": 1}])],
-        "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
+        _SPANS,
     )
-    run = pipeline.build_pipeline([
-        "sort",
+    got = _texts(docs, [
         ("replace_chars", {"dict_chars": {"ic)": "ich"}}),
         ("replace_regex", {"pattern": r"(J[cdhmn]\w*)", "old": "J", "new": "I"}),
-        "postprocess",
-        "reoffset",
+        ("postprocess", {}),
     ])
-    spans = run(docs).collect()[0]["spans"]
-    assert [s["text"] for s in spans if s["kind"] == "text"] == ["Ich ſehe ich gut"]
+    assert [t for k, t, _ in got["d1"] if k == "text"] == ["Ich ſehe ich gut"]
 
 
-def test_unknown_stage_rejected():
-    with pytest.raises(KeyError, match="unknown stage"):
-        pipeline.build_pipeline(["sort", "nope"])
+def test_unsupported_steps_rejected(spark):
+    """Only the three step kinds the INI loader emits run; a replacement
+    with a group reference, and de-hyphenation without a postprocess step,
+    are refused when the plan is built."""
+    docs = spark.createDataFrame([], _SPANS)
+    for steps in ([("dehyphenate", {})], [("postprocess", {}), ("nope", {})]):
+        with pytest.raises(KeyError, match="unknown step"):
+            pipeline.extract(docs, steps=steps)
+    regex = {"pattern": "(J[cdhmn])", "old": "J", "new": "$1"}
+    with pytest.raises(KeyError, match="group reference"):
+        pipeline.extract(docs, steps=[("replace_regex", regex)])
+    with pytest.raises(ValueError, match="postprocess"):
+        pipeline.extract(docs, dehyphenate=True, steps=[])
+
+
+def test_null_text_through_steps(spark):
+    """Replace steps pass a null text on; a postprocess step drops it (as
+    the default extract does), a chain without one keeps it, and keeps a
+    line a replacement emptied."""
+    docs = spark.createDataFrame(
+        [("d1", [{"kind": "text", "text": None, "media_ref": "p1", "offset": 0},
+                 {"kind": "text", "text": "xx", "media_ref": "p1", "offset": 1},
+                 {"kind": "text", "text": "Jn dem", "media_ref": "p1", "offset": 2}])],
+        _SPANS,
+    )
+    chars = ("replace_chars", {"dict_chars": {"xx": "", "dem": "den"}})
+    regex = ("replace_regex", {"pattern": "(J[cdhmn])", "old": "J", "new": "I"})
+    assert _texts(docs, [regex, chars]) == {
+        "d1": [("text", None, 0), ("text", "", 1), ("text", "In den", 2)]
+    }
+    row = pipeline.extract(docs, with_metrics=True, steps=[regex, chars]).first()
+    # split(' ') counts: None -> 0 tokens, '' -> 1, 'In den' -> 2
+    assert (row["n_lines_out"], row["n_tokens_out"]) == (3, 3)
+    assert _texts(docs, [regex, chars, ("postprocess", {})]) == {
+        "d1": [("text", "In den", 0)]
+    }
+    assert _texts(docs, [("postprocess", {}), regex, chars]) == {
+        "d1": [("text", "", 0), ("text", "In den", 1)]
+    }
+    assert _texts(docs, pipeline.EXTRACT_STEPS) == {
+        "d1": [("text", "xx", 0), ("text", "Jn dem", 1)]
+    }
+
+
+_INI = """[step_2]
+type = StepPostReplaceCharsRegex
+pattern = (J[cdhmn])
+old = J
+new = I
+
+[step_10]
+type = StepPostReplaceChars
+dict_chars = {Ic:Ich, ic):ich}
+
+[step_7]
+type = StepPostMoveAlto
+path_target = moved
+
+[step_11]
+type = StepPostprocessALTO
+"""
+
+
+def test_ini_steps_run_in_extract(spark, tmp_path):
+    """A reference-format INI drives the extract's step chain in numeric
+    section order: regex (step_2) before chars (step_10), so 'Jc' becomes
+    'Ic' and then 'Ich' (a lexical order would leave 'Ic').  Moving the
+    postprocess step first splits 'ic)' before the char dict sees it."""
+    from ocrd_odem_spark.plans.config import load_steps_ini
+
+    docs = spark.createDataFrame(
+        [("d1", [{"kind": "media", "text": "", "media_ref": "p1", "offset": 4},
+                 {"kind": "text", "text": "a .", "media_ref": "p1", "offset": 6},
+                 {"kind": "text", "text": "Jc sah ic) gut.", "media_ref": "p1", "offset": 5},
+                 {"kind": "text", "text": "Jn dem Jahr 1749", "media_ref": "p1", "offset": 9}])],
+        _SPANS,
+    )
+    ini = tmp_path / "steps.ini"
+    ini.write_text(_INI)
+    steps, skipped = load_steps_ini(str(ini))
+    assert skipped == [("step_7", "StepPostMoveAlto")]
+    assert _texts(docs, steps) == {"d1": [
+        ("media", "", 0),
+        ("text", "Ich sah ich gut .", 1),
+        ("text", "In dem Jahr 1749", 2),
+    ]}
+
+    ini.write_text(_INI.replace("[step_11]", "[step_1]"))
+    steps, _ = load_steps_ini(str(ini))
+    assert _texts(docs, steps) == {"d1": [
+        ("media", "", 0),
+        ("text", "Ich sah ic ) gut .", 1),
+        ("text", "In dem Jahr 1749", 2),
+    ]}
 
 
 # ---------------------------------------------------------------------------
@@ -160,16 +246,15 @@ def test_ini_loader_unknown_type_rejected(tmp_path):
 
 
 def test_ini_loaded_pipeline_runs(spark):
-    """End-to-end: the default INI's stage list drives build_pipeline and
-    performs the J->I replacement + postprocess cascade."""
+    """End-to-end: the default INI's stage list drives the extract's step
+    chain and performs the J->I replacement + postprocess cascade."""
     from ocrd_odem_spark.plans.config import load_steps_ini
 
     stages, _ = load_steps_ini(REF_STEPS_INI)
-    run = pipeline.build_pipeline(["sort", *stages, "reoffset"])
     docs = spark.createDataFrame(
         [("d1", [{"kind": "text", "text": "Jch bin hier", "media_ref": None,
                   "offset": 0}])],
-        "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
+        _SPANS,
     )
-    spans = run(docs).collect()[0]["spans"]
+    spans = pipeline.extract(docs, steps=stages).collect()[0]["spans"]
     assert [s["text"] for s in spans] == ["Ich bin hier"]
