@@ -298,6 +298,21 @@ def test_page_text_stats_arrow_matches_hof(spark):
     assert any(v[2] for v in want.values())  # some page has a wrap merge
 
 
+def test_run_pipeline_arrow_rejects_unmirrored(spark):
+    """The Arrow stage runs only the step kinds it mirrors: a separate
+    de-hyphenation step and an unknown name are refused when the plan is
+    built."""
+    from ocrd_odem_spark.plans import pipeline, queries
+
+    docs = queries.docs_nested_df(spark, "/root/testdata/sf0.001")
+    import pytest as _pytest
+
+    with _pytest.raises(KeyError, match="unknown step"):
+        pipeline.extract(docs, steps=[("postprocess", {}), ("dehyphenate", {})])
+    with _pytest.raises(KeyError, match="unknown step"):
+        pipeline.extract(docs, steps=[("nope", {})])
+
+
 def test_extract_arrow_boundary_edge_shapes(spark):
     """r6.2 mapInArrow boundary: flat-columnar in/out must survive the
     degenerate list shapes the dict-per-span form handled implicitly —
