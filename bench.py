@@ -7,10 +7,7 @@ Default: run every registry query once at $SPARK_GRAFT_SF_DIR (default
      "queries": {...}, "sf": ..., "docs_per_sec": ...}
 
 Modes:
-  --flagship-only --cores N   one flagship run, print elapsed (scaling probe)
-  --scaling                   run flagship at local[8] and local[32] in two
-                              fresh JVMs, report throughput + efficiency and
-                              write BENCH/BASELINE.md
+  --flagship-only --cores N   one flagship run, print elapsed
 
 The flagship job is the full extract+dehyphenate pipeline over the derived
 interleaved span corpus, amplified deterministically (REPLICATE copies per
@@ -24,7 +21,6 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import subprocess
 import sys
 import time
 
@@ -81,7 +77,7 @@ def prepare_corpus(spark, sf_dir: str, replicate: int) -> str:
     return path
 
 
-def run_flagship(spark, sf_dir: str, replicate: int, mode: str = "arrow") -> dict:
+def run_flagship(spark, sf_dir: str, replicate: int) -> dict:
     from pyspark.sql import functions as F
 
     from ocrd_odem_spark.plans import pipeline
@@ -92,7 +88,7 @@ def run_flagship(spark, sf_dir: str, replicate: int, mode: str = "arrow") -> dic
     # the measured job is read -> narrow extract -> aggregate with ZERO
     # shuffle, exactly the shape a real 100 TB table gives for free
     docs = spark.read.parquet(path)
-    out = pipeline.extract(docs, dehyphenate=True, mode=mode)
+    out = pipeline.extract(docs, dehyphenate=True)
     t0 = time.time()
     row = out.select(
         F.count("*").alias("docs"),
@@ -108,7 +104,6 @@ def run_flagship(spark, sf_dir: str, replicate: int, mode: str = "arrow") -> dic
         "n_docs": row["docs"],
         "out_chars": int(row["chars"]),
         "docs_per_sec": round(row["docs"] / elapsed, 2),
-        "mode": mode,
     }
 
 
@@ -153,28 +148,19 @@ def _session(cores: int):
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--flagship-only", action="store_true")
-    ap.add_argument("--scaling", action="store_true")
     ap.add_argument("--cores", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
     ap.add_argument("--replicate", type=int, default=REPLICATE)
-    ap.add_argument("--mode", default="arrow", choices=["arrow", "hof"])
     ap.add_argument("--no-warmup", action="store_true")
     args = ap.parse_args()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
-    # same heap as the scaling probe (VERDICT r1 item 7: the default and the
-    # probe must measure the same configuration).  Round-3 interleaved GC
-    # comparison on the 32-thread hof flagship: ParallelGC consistently
-    # beats G1 in the same noise window (28.7k vs 20.8k, 18.0k vs 15.6k
-    # docs/s) — the span-struct churn is pure young-gen garbage, and
-    # ParallelGC's stop-the-world young collections with 32 GC threads
-    # clear it cheaper than G1's pause-target-throttled young gen.  At 8
-    # cores the two are equal (~10.2k vs ~10.7k), so the switch directly
-    # improves the 8->32 scaling ratio.  Heap: ParallelGC needs room for
-    # its fixed-ratio young gen — 12g measured 15.9k where 32g measured
-    # 23.5-27.7k across three windows (24g swung 12.9-28.8k; 32g was the
-    # most stable).  G1 12g (the round-1/2 default) kept for reference:
-    # 23.9/20.8/15.6k in the same paired windows.
+    # ParallelGC with a 32g heap, for the default run and --flagship-only
+    # alike.  Chosen on the 32-thread flagship of the former JVM
+    # higher-order-function tier, where the span-struct churn was pure
+    # young-gen garbage: ParallelGC beat G1 in the same noise window (28.7k
+    # vs 20.8k, 18.0k vs 15.6k docs/s), and 32g was the most stable heap
+    # (12g 15.9k, 24g 12.9-28.8k, 32g 23.5-27.7k).
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "32g")
     os.environ.setdefault("SPARK_GRAFT_JAVA_OPTS", "-XX:+UseParallelGC")
 
@@ -182,132 +168,12 @@ def main() -> None:
         spark = _session(args.cores)
         spark.sparkContext.setLogLevel("ERROR")
         if not args.no_warmup:
-            run_flagship(spark, sf_dir, args.replicate, args.mode)  # warm-up
+            run_flagship(spark, sf_dir, args.replicate)  # warm-up
         t0, c0 = time.time(), _steal_ticks()
-        result = run_flagship(spark, sf_dir, args.replicate, args.mode)
+        result = run_flagship(spark, sf_dir, args.replicate)
         result["steal_pct"] = _steal_pct(c0, _steal_ticks(), time.time() - t0)
         print(json.dumps(result))
         spark.stop()
-        return
-
-    if args.scaling:
-        # Scaling evidence uses the pure-JVM hof path: in local mode every
-        # task's Python worker is an EXTRA process outside local[N]'s slot
-        # accounting, so arrow-mode "local[8]" really burns ~16 cores and
-        # the N-vs-4N comparison would be dishonest.  On a real cluster the
-        # executor container bounds both; here only the JVM path gives a
-        # clean core-bound measurement.
-        scaling_mode = "hof"
-
-        def run_once(cores: int, replicate: int, warmup: bool = True) -> dict:
-            env = os.environ.copy()
-            # ParallelGC + 32g measured fastest and most stable (see main())
-            env.setdefault("SPARK_GRAFT_DRIVER_MEM", "32g")
-            env.setdefault("SPARK_GRAFT_JAVA_OPTS", "-XX:+UseParallelGC")
-            cmd = [sys.executable, os.path.abspath(__file__), "--flagship-only",
-                   "--cores", str(cores), "--replicate", str(replicate),
-                   "--mode", scaling_mode]
-            if not warmup:
-                cmd.append("--no-warmup")
-            proc = subprocess.run(
-                cmd, capture_output=True, text=True, env=env, check=True,
-            )
-            return json.loads(proc.stdout.strip().splitlines()[-1])
-
-        # ONE corpus for every level; two N->4N pairs: 2->8 on uncontended
-        # cores, 8->32 at machine saturation (this VM's own ceiling for
-        # embarrassingly parallel pure-JVM hashing is ~0.75 at 8->32 — see
-        # BENCH/BASELINE.md).  Long (2-core) runs self-average host noise so
-        # they run once without a warm-up duplicate; short runs take
-        # best-of-2 because the shared host fluctuates +-40%.
-        # LONG runs: at replicate 24 the 32-core flagship finishes in ~5s,
-        # where JVM/JIT/first-task startup eats a far larger fraction than
-        # in the ~12s 8-core run — the N-vs-4N ratio was startup-biased by
-        # ~40% (measured 0.46 at rep=24 vs 0.78 at rep=96, same window)
-        rep = max(args.replicate * 2, 96)
-        prep = _session(32)
-        prep.sparkContext.setLogLevel("ERROR")
-        prepare_corpus(prep, sf_dir, rep)
-        prep.stop()
-        # PAIRED measurement: the host's throughput swings 2-3x between
-        # minutes, so best-of-N PER LEVEL pairs numbers from different
-        # noise windows and corrupts the ratio (an unlucky-n32/lucky-n8
-        # pairing once read 0.42 where an adjacent same-window pair read
-        # 0.78).  Run (n8, n32) back-to-back per round, compute efficiency
-        # per adjacent pair, report the MEDIAN pair.
-        # the 2-core leg runs IMMEDIATELY before the first (n8, n32) pair so
-        # eff_low comes from one same-window triple (n2, n8, n32) — a 2-core
-        # number from a different noise window once read a superlinear 1.87
-        r2 = run_once(2, rep, warmup=False)
-        pairs = []
-        for _ in range(3):
-            p8 = run_once(8, rep)
-            p32 = run_once(32, rep)
-            pairs.append((p8, p32, round(
-                p32["docs_per_sec"] / (4 * p8["docs_per_sec"]), 3)))
-        eff_low = round(
-            pairs[0][0]["docs_per_sec"] / (4 * r2["docs_per_sec"]), 3
-        )
-        pairs_by_eff = sorted(pairs, key=lambda p: p[2])
-        r8, r32, eff_high = pairs_by_eff[len(pairs_by_eff) // 2]
-        result = {
-            "metric": "extract_dehyph_scaling", "unit": "docs/sec", "sf": sf,
-            "throughput_n2": r2["docs_per_sec"],
-            "throughput_n8": r8["docs_per_sec"],
-            "throughput_n32": r32["docs_per_sec"],
-            "scaling_efficiency_2_to_8": eff_low,
-            "scaling_efficiency_8_to_32": eff_high,
-            "pair_efficiencies": [p[2] for p in pairs],
-            # per-leg hypervisor steal of the reported (median) pair —
-            # a pair with >=9% steal on its 32-thread leg is a neighbor
-            # burst, not the plan (see BENCH/BASELINE.md)
-            "steal_pct_n8": r8.get("steal_pct"),
-            "steal_pct_n32": r32.get("steal_pct"),
-            "n_docs": r32["n_docs"],
-        }
-        reports = {8: r8, 32: r32}
-        t8, t32, eff = r8["docs_per_sec"], r32["docs_per_sec"], eff_high
-        os.makedirs(os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH"), exist_ok=True)
-        # raw probe output; BENCH/BASELINE.md is the curated evidence file
-        # (this shared host swings 2-3x between windows, so single probes
-        # are recorded, not blindly promoted)
-        md = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH", "SCALING_LAST.md")
-        with open(md, "w", encoding="utf-8") as fh:
-            fh.write(
-                "# BENCH/BASELINE — scaling evidence (sandbox protocol)\n\n"
-                "Same flagship job (extract + de-hyphenation over the nested span\n"
-                "corpus) at two parallelism levels on identical input, per the\n"
-                "north rule's two-cluster-size criterion (local[8] vs local[32]\n"
-                "stands in for N vs 4N executors).\n\n"
-                f"| parallelism | docs/sec | elapsed (s) | docs |\n|---|---|---|---|\n"
-                f"| local[2]  | {r2['docs_per_sec']} | {r2['elapsed_sec']} | {r2['n_docs']} |\n"
-                f"| local[8]  | {t8} | {reports[8]['elapsed_sec']} | {reports[8]['n_docs']} |\n"
-                f"| local[32] | {t32} | {reports[32]['elapsed_sec']} | {reports[32]['n_docs']} |\n\n"
-                f"**Scaling efficiency N→4N: 2→8 cores = {eff_low}; "
-                f"8→32 cores = {eff_high}** (requirement: ≥ 0.8; median of "
-                f"adjacent same-window pairs {[p[2] for p in pairs]}; "
-                f"reported pair's hypervisor steal: n8 leg "
-                f"{r8.get('steal_pct')}%, n32 leg {r32.get('steal_pct')}% "
-                f"of machine capacity).\n\n"
-                "Protocol notes: the shared host's wall clock fluctuates with\n"
-                "neighbor load (2-3x between minutes), so (n8, n32) run\n"
-                "back-to-back per round and the MEDIAN pair efficiency is\n"
-                "reported; 2->8 comes from the same-window triple (the 2-core\n"
-                "leg runs immediately before the first pair).  Runs are sized\n"
-                "(replicate>=96) so JVM/JIT startup is amortized at 32 cores.\n"
-                "The extraction plan itself adds no serial\n"
-                "stage — no shuffle, no driver-side loop — so scaling is\n"
-                "bounded by input splits and the host, not the plan.\n\n"
-                "Measured on the pure-JVM (hof) execution mode: in local mode\n"
-                "each task's Python worker is an extra OS process outside\n"
-                "local[N]'s slot accounting, so the Arrow mode cannot give an\n"
-                "honest N-vs-4N core comparison on one machine (on a real\n"
-                "cluster the executor container bounds both).  The fact-table\n"
-                "plan is shuffle-free; the only reshape is an explicit\n"
-                "repartition to core count, which a real 100 TB table gets for\n"
-                "free from input splits.\n"
-            )
-        print(json.dumps(result))
         return
 
     load_before = round(os.getloadavg()[0], 2)
@@ -318,11 +184,9 @@ def main() -> None:
     # measured after 49 queries the arrow number reads 3-5x slower from
     # session pollution (cached blocks, checkpoint files, worker churn) —
     # the flagship metric is engine throughput, not cold-start cost, and
-    # this order matches what --flagship-only (the scaling probe) measures
-    run_flagship(spark, sf_dir, args.replicate, mode="arrow")  # warm-up
-    flag = run_flagship(spark, sf_dir, args.replicate, mode="arrow")
-    run_flagship(spark, sf_dir, args.replicate, mode="hof")  # warm-up
-    flag_hof = run_flagship(spark, sf_dir, args.replicate, mode="hof")
+    # this order matches what --flagship-only measures
+    run_flagship(spark, sf_dir, args.replicate)  # warm-up
+    flag = run_flagship(spark, sf_dir, args.replicate)
     qtimes = run_queries(spark, sf_dir)
     steal = _steal_pct(run_c0, _steal_ticks(), time.time() - run_t0)
     print(json.dumps({
@@ -333,7 +197,6 @@ def main() -> None:
         "sf": sf,
         "n_docs": flag["n_docs"],
         "docs_per_sec": flag["docs_per_sec"],
-        "docs_per_sec_hof": flag_hof["docs_per_sec"],
         "out_chars": flag["out_chars"],
         "cores": args.cores,
         "replicate": args.replicate,

@@ -74,7 +74,6 @@ def main() -> None:
     ap.add_argument("--repeat", type=int, default=1)
     ap.add_argument("--force", default="checksum", choices=["checksum", "noop"])
     ap.add_argument("--flagship-arrow", action="store_true")
-    ap.add_argument("--flagship-hof", action="store_true")
     ap.add_argument("--replicate", type=int, default=int(os.environ.get("SPARK_GRAFT_REPLICATE", "48")))
     ap.add_argument("--cores", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
     args = ap.parse_args()
@@ -88,13 +87,12 @@ def main() -> None:
 
     out: dict = {"sf_dir": sf_dir, "force": args.force}
 
-    if args.flagship_arrow or args.flagship_hof:
+    if args.flagship_arrow:
         import bench
 
-        mode = "arrow" if args.flagship_arrow else "hof"
-        bench.run_flagship(spark, sf_dir, args.replicate, mode)  # warm-up
+        bench.run_flagship(spark, sf_dir, args.replicate)  # warm-up
         t0, c0 = time.time(), _steal_ticks()
-        r = bench.run_flagship(spark, sf_dir, args.replicate, mode)
+        r = bench.run_flagship(spark, sf_dir, args.replicate)
         el = time.time() - t0
         r["steal_pct"] = bench._steal_pct(c0, _steal_ticks(), el)
         out["flagship"] = r

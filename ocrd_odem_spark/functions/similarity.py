@@ -375,18 +375,6 @@ def cosine_near_duplicates(
     ).where(F.col("sim") >= threshold)
 
 
-def rh_signature(vec: Column, planes: list[list[float]]) -> Column:
-    """Random-hyperplane sign signature packed into a long."""
-    sig = F.lit(0).cast("long")
-    for i, plane in enumerate(planes):
-        plane_col = F.array(*[F.lit(float(v)) for v in plane])
-        bit = F.when(_dot(vec, plane_col) >= 0, F.shiftleft(F.lit(1).cast("long"), i)).otherwise(
-            F.lit(0).cast("long")
-        )
-        sig = sig + bit
-    return sig
-
-
 def lsh_cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -449,8 +437,11 @@ _Q_SCALE = 1048576.0  # 2^20 — same quantization as portable_int_planes
 
 
 def _let(value: Column, body) -> Column:
-    """Bind an expensive subexpression once inside interpreted HOF plans
-    (see operators/dehyphen.py for the idiom's rationale)."""
+    """Bind an expensive subexpression once inside interpreted HOF plans:
+    higher-order functions run with no common-subexpression elimination, so
+    every reference to an expression re-evaluates it, while ``transform``
+    over a one-element array evaluates ``value`` once and hands it to
+    ``body`` as a lambda variable."""
     return F.get(F.transform(F.array(value), body), 0)
 
 

@@ -94,18 +94,6 @@ def fingerprint(text: Column) -> Column:
     return F.md5(normalized)
 
 
-def rolling_fingerprints(text: Column, window: int = 16, stride: int = 8) -> Column:
-    """Array of windowed content hashes (shift-resistant near-dup features)."""
-    packed = F.translate(F.lower(text), " ", "")
-    n = F.greatest(
-        (F.length(packed) - window + stride).cast("int") / stride, F.lit(1)
-    ).cast("int")
-    return F.transform(
-        F.sequence(F.lit(0), n - 1),
-        lambda i: F.xxhash64(F.substr(packed, i * stride + 1, F.lit(window))),
-    )
-
-
 def document_profile(df: DataFrame, text_col: str = "text") -> DataFrame:
     """One profiling row per document (the curation feature table)."""
     text = F.col(text_col)

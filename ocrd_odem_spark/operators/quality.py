@@ -18,21 +18,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from ..constants import BAD_CHARS_SANITIZE, LONG_S
-
-_WS_TOKENS = lambda s: F.filter(F.split(F.trim(s), r"\s+"), lambda x: x != "")  # noqa: E731
-
-
-def sanitize_line(line: Column) -> Column:
-    """T5: strip digits/quotes/brackets, collapse '..' and double spaces,
-    long-s -> s, drop 1-char tokens."""
-    text = F.translate(F.trim(line), BAD_CHARS_SANITIZE, "")
-    text = F.replace(text, F.lit(".."), F.lit(""))
-    text = F.replace(text, F.lit("  "), F.lit(" "))
-    text = F.replace(text, F.lit(LONG_S), F.lit("s"))
-    toks = F.filter(_WS_TOKENS(text), lambda t: F.length(t) > 1)
-    return F.array_join(toks, " ")
-
 
 def page_text_stats_flat(flat: DataFrame, minlen: int = 2) -> DataFrame:
     """``page_text_stats`` over FLAT text spans

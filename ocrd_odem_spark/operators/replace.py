@@ -1,55 +1,26 @@
-"""Replacement / normalisation operators (T2, T3, T6, T7, T10) with
-replacement counters (A6).
+"""Replacement / normalisation operators (T3, T6, T7, T10).
 
-* T2 ``StepPostReplaceChars`` (``ocr_pipeline.py:197-257``): literal
-  multi-char replacements from a config dict, applied in dict order, with
-  per-pattern replacement counts.
 * T3 ``StepPostReplaceCharsRegex`` (``ocr_pipeline.py:260-278``): regex
-  group replace (e.g. ``J([cdhmn])`` with ``J -> I``).
+  group replace (e.g. ``J([cdhmn])`` with ``J -> I``); ``regex_rewrite``
+  turns it into one plain regex, which the INI step chain
+  (``config.line_chain``) runs in the extract's Arrow stage.  The T2
+  literal replacements (``StepPostReplaceChars``) run there too, as
+  chained ``str.replace``.
 * T6 ``_normalize_string_content`` (``ocr_files.py:166-184``): wide
   punctuation strip unless the token is purely alphabetic (dormant in the
-  reference's current flow; available as an optional stage here).
+  reference's current flow; q53 runs it).
 * T7 ``_normalize_vocal_ligatures`` (``ocr_files.py:187-213``):
   ``aͤ/oͤ/uͤ -> ä/ö/ü``; other bases are an error channel; stray combining
   marks stripped.
 * T10 fileName / Page@ID enrichment (``ocr_pipeline.py:470-531``):
   media_ref -> ``{prefix}{stem}`` page ids and ``{stem}.jpg`` file names.
-
-Counters are columns, not accumulators — they aggregate exactly (A6) and
-survive retries/resume, which Spark accumulators do not guarantee.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, functions as F
 
 from ..constants import COMBINING_SMALL_E, PUNCTUATIONS
-
-
-def replace_chars(text: Column, dict_chars: dict[str, str]) -> Column:
-    """T2: chained literal replacements in dict order."""
-    out = text
-    for old, new in dict_chars.items():
-        out = F.replace(out, F.lit(old), F.lit(new))
-    return out
-
-
-def replace_chars_with_counts(text: Column, dict_chars: dict[str, str]) -> Column:
-    """T2+A6: struct<text, counts: map<pattern, hits>> (line-level hit
-    counts, matching the reference's per-line ``_update_replacements``)."""
-    out = text
-    entries = []
-    for old, new in dict_chars.items():
-        hits = F.when(out.contains(old), F.lit(1)).otherwise(F.lit(0)).cast("long")
-        entries += [F.lit(old), hits]
-        out = F.replace(out, F.lit(old), F.lit(new))
-    return F.struct(out.alias("text"), F.create_map(*entries).alias("counts"))
-
-
-def replace_regex(text: Column, pattern: str, old: str, new: str) -> Column:
-    """T3: within every match of ``pattern`` replace ``old`` -> ``new``, as
-    one ``regexp_replace`` of ``regex_rewrite(pattern, old)``."""
-    return F.regexp_replace(text, regex_rewrite(pattern, old), new)
 
 
 def regex_rewrite(pattern: str, old: str) -> str:
@@ -69,13 +40,6 @@ def regex_rewrite(pattern: str, old: str) -> str:
 
 def _esc(s: str) -> str:
     return "".join(f"\\{c}" if c in r"\.^$*+?()[]{}|" else c for c in s)
-
-
-def count_regex_lines(df: DataFrame, text_col: str, pattern: str) -> DataFrame:
-    """A6 analogue of the golden 185->172 'J'-line counts: rows matching."""
-    return df.select(
-        F.count(F.when(F.col(text_col).rlike(pattern), 1)).cast("long").alias("n_match")
-    )
 
 
 def normalize_index_content(text: Column) -> Column:

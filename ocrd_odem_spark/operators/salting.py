@@ -15,9 +15,17 @@ under salting — proven by the salted-vs-unsalted equality test.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
-from ..plans.pipeline import sorted_spans
+
+def sorted_spans(spans: Column) -> Column:
+    """Order a span array by its offset column (input order contract)."""
+    return F.array_sort(
+        spans,
+        lambda left, right: F.when(left["offset"] < right["offset"], -1)
+        .when(left["offset"] > right["offset"], 1)
+        .otherwise(0),
+    )
 
 
 def salt_oversized(docs: DataFrame, max_spans: int = 512) -> DataFrame:

@@ -1,71 +1,24 @@
-"""Token-level extract-path operators (reference F5/F6/T1/T8).
+"""Token-level Catalyst column expressions for the RTL reading order (O3).
 
-All operators are pure Catalyst column expressions built from higher-order
-array functions — they run JVM-side inside whole-stage codegen, shuffle
-nothing, and scale linearly with input splits. No Python executes per row.
+q43 uses these: ``strip_marks`` drops directional / zero-width marks and
+``reversed_line`` folds a line's tokens right-to-left.  They are plain
+column expressions, so they run JVM-side and shuffle nothing.
 
-Semantics parity (see ``ocrd_odem_spark.oracle`` for the pytest ground
-truth): ``lib/odem/processing/ocr_files.py:52-163`` — the fully-punctuated
-drop, the trailing-punctuation split whose split-off token *survives*
-un-reexamined, and the minimum-word-length drop on the remainder.
+The extract path's token post-processing (reference F5/F6/T1,
+``lib/odem/processing/ocr_files.py:52-163``) is not here: the extract's
+Arrow stage runs ``oracle.postprocess_line_tokens`` itself.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, functions as F
 
-from ..constants import CLEAR_MARKS, MINIMUM_WORD_LEN, ODEM_PUNCTUATIONS
-
-
-def depunct(col: Column) -> Column:
-    """Remove every ODEM punctuation char (literal translate, no regex)."""
-    return F.translate(col, ODEM_PUNCTUATIONS, "")
+from ..constants import CLEAR_MARKS
 
 
 def strip_marks(col: Column) -> Column:
     """Remove directional / zero-width marks (reference CLEAR_MARKS)."""
     return F.translate(col, CLEAR_MARKS, "")
-
-
-def _postprocess_token(t: Column) -> Column:
-    """One raw token -> array of surviving output tokens (0..2 entries)."""
-    stripped = F.trim(t)
-    fully_punct = depunct(stripped) == ""  # empties translate to '' too
-    last = F.substring(t, -1, 1)
-    remainder = F.substr(t, F.lit(1), F.length(t) - 1)
-    split_off = (F.length(t) > 1) & (depunct(last) == "")
-    empty_arr = F.array().cast("array<string>")
-    return (
-        F.when(fully_punct, empty_arr)
-        .when(
-            split_off & (F.length(remainder) >= MINIMUM_WORD_LEN),
-            F.array(remainder, last),
-        )
-        .when(split_off, F.array(last))
-        .when(F.length(stripped) >= MINIMUM_WORD_LEN, F.array(t))
-        .otherwise(empty_arr)
-    )
-
-
-def surviving_tokens(line: Column) -> Column:
-    """Post-processed token array of one single-spaced text line."""
-    return F.flatten(F.transform(F.split(line, " "), _postprocess_token))
-
-
-def postprocess_line(line: Column) -> Column:
-    """Post-processed text of one line ('' when no token survives)."""
-    return F.array_join(surviving_tokens(line), " ")
-
-
-def drop_blank_tokens(line: Column) -> Column:
-    """F7 exact analogue of ``StepPostprocessALTO``'s empty-content cascade
-    (``drop_empty_contents``, ``ocr_pipeline.py:533-555``): remove
-    whitespace-only tokens; a line with no surviving token becomes '' (the
-    span-level empty-line filter then drops it, mirroring the XML walk-up
-    that removes the emptied TextLine/TextBlock)."""
-    return F.array_join(
-        F.filter(F.split(line, " "), lambda t: F.trim(t) != ""), " "
-    )
 
 
 def reversed_line(line: Column) -> Column:

