@@ -77,9 +77,5 @@ RTL_LANGUAGES = ("ara", "heb", "fas")
 KIND_MEDIA = "media"
 KIND_TEXT = "text"
 
-#: record states mirrored from the reference's work-queue state machine
-MARK_UNSET = "n.a."
-MARK_BUSY = "ocr_busy"
-MARK_FAIL = "ocr_fail"
-MARK_SKIP = "ocr_skip"
+#: the reference work-queue's "done" record state, written by the state sink
 MARK_DONE = "ocr_done"

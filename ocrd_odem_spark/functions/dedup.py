@@ -1,17 +1,19 @@
 """Deduplication operators for large-scale training-data pipelines.
 
-Four tiers, all shuffle-frugal and expressed through native Spark
-functions (JVM-side; Python only builds the plan):
+Four operators, all shuffle-frugal; the per-document hashing runs either
+as native Spark expressions or as one vectorised Python pass per Arrow
+batch, and only signature-sized rows ever shuffle:
 
 * **exact**        — md5 grouping, canonical keeper = min(id).
 * **MinHash+LSH**  — token-shingle -> per-seed min of ``xxhash64`` ->
   banding -> bucket equi-join of candidates.  The signature computation is
   a narrow higher-order expression (no shuffle); only the tiny
-  (band, bucket) exchange shuffles, never full documents.
-* **SimHash**      — 64-bit sign-aggregated token hashes; near-dup =
-  Hamming distance via ``bit_count(xor)``.
-* **n-gram Jaccard** — verification metric on candidate pairs
-  (``array_intersect``/``array_union`` on shingle sets).
+  (band, bucket) exchange shuffles, never full documents.  The portable
+  md5-min signatures of q25/q26 are ``md5_minhash_signatures``.
+* **SimHash**      — 64-bit sign-aggregated md5-60 token hashes (an Arrow
+  stage); near-dup = Hamming distance via pigeonhole blocking.
+* **n-gram Jaccard** — verification metric on candidate pairs (an Arrow
+  stage over the attached pair rows).
 
 At 10^12 documents: signatures are ~100 bytes/doc, so the LSH exchange is
 4-5 orders of magnitude smaller than the corpus; bucket skew (boilerplate
@@ -309,88 +311,17 @@ def jaccard_verify(
     )
 
 
-def simhash64(text: Column) -> Column:
-    """64-bit SimHash of whitespace tokens (sign-aggregated bit votes)."""
-    toks = F.array_distinct(F.split(text, " "))
-    hashes = F.transform(toks, lambda t: F.xxhash64(t))
-    return F.aggregate(
-        F.sequence(F.lit(0), F.lit(63)),
-        F.lit(0).cast("long"),
-        lambda acc, b: acc
-        + F.when(
-            F.aggregate(
-                hashes,
-                F.lit(0),
-                lambda votes, h: votes
-                + F.when(
-                    F.call_function("shiftright", h, b.cast("int")).bitwiseAND(F.lit(1)) == 1, 1
-                ).otherwise(-1),
-            )
-            > 0,
-            F.call_function("shiftleft", F.lit(1).cast("long"), b.cast("int")),
-        ).otherwise(F.lit(0).cast("long")),
-    )
-
-
-def md5_hash60(col: Column) -> Column:
-    """Portable 60-bit token hash: first 15 md5 hex chars as a bigint.
-
-    Bit-for-bit reproducible in DuckDB as
-    ``('0x' || substr(md5(x), 1, 15))::BIGINT`` — the oracle tier for the
-    driver's cross-engine checks.  Production uses ``xxhash64`` (faster,
-    JVM-only).
-    """
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
-def simhash64_agg(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    hash_fn=F.xxhash64,
-) -> DataFrame:
-    """Vectorised SimHash: explode tokens once, hash with codegen'd
-    ``hash_fn`` (default ``xxhash64``), aggregate 64 bit-vote sums per
-    document.
-
-    Same result as ``simhash64`` (proven in tests) but every step is
-    whole-stage-codegen (the HOF form is interpreted per token*bit and ~10x
-    slower).  One shuffle (the per-doc aggregate) — at 10^12 docs the
-    shuffled rows are (id, 64 ints), not documents.
-    """
-    toks = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.array_distinct(F.split(F.col(text_col), " "))).alias("tok"),
-    ).select("id", hash_fn(F.col("tok")).alias("h"))
-    votes = [
-        F.sum(
-            F.when(
-                F.call_function("shiftright", F.col("h"), F.lit(b).cast("int"))
-                .bitwiseAND(F.lit(1)) == 1,
-                1,
-            ).otherwise(-1)
-        ).alias(f"v{b}")
-        for b in range(64)
-    ]
-    agg = toks.groupBy("id").agg(*votes)
-    sh = None
-    for b in range(64):
-        bit = F.when(
-            F.col(f"v{b}") > 0,
-            F.call_function("shiftleft", F.lit(1).cast("long"), F.lit(b).cast("int")),
-        ).otherwise(F.lit(0).cast("long"))
-        sh = bit if sh is None else sh + bit
-    return agg.select("id", sh.alias("sh"))
-
-
 def _simhash64_md5_arrow(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """(id, sh) for the portable md5 60-bit tier as ONE Arrow stage.
+    """(id, sh): the 64-bit SimHash of each document's distinct whitespace
+    tokens, as ONE Arrow stage of per-document numpy bit counting.
 
-    Replaces explode-tokens -> md5 -> 64-column vote aggregation (a wide
-    hash-agg whose per-row cost is 64 buffer updates) with per-document
-    numpy bit counting (guide §4.2).  Bit-exact: ``hashlib.md5`` over the
-    UTF-8 token equals Spark's ``md5``; the first 15 hex chars are the top
-    60 bits of the digest (``int.from_bytes(d[:8]) >> 4``); votes and the
-    sign threshold are integer arithmetic.  A null text produces no row,
-    matching the explode-based form.
+    Each token hashes to the top 60 bits of its md5 digest
+    (``int.from_bytes(d[:8]) >> 4``), which is DuckDB's
+    ``('0x' || substr(md5(tok), 1, 15))::BIGINT``; bit b of ``sh`` is set
+    when more tokens have bit b set than not.  Votes and the sign threshold
+    are integer arithmetic, so q29's DuckDB oracle reproduces every ``sh``
+    exactly.  ``id`` keeps the type of ``id_col``; a null text produces no
+    row.
     """
     import pandas as pd
 
@@ -401,10 +332,9 @@ def _simhash64_md5_arrow(df: DataFrame, text_col: str, id_col: str) -> DataFrame
         shifts = np.arange(64, dtype=np.int64)
         weights = np.uint64(1) << np.arange(64, dtype=np.uint64)
         for pdf in batches:
-            ids_out, sh_out = [], []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                if text is None:
-                    continue
+            pdf = pdf[pdf[text_col].notna()]
+            sh_out = []
+            for text in pdf[text_col]:
                 toks = set(text.split(" "))
                 h = np.fromiter(
                     (
@@ -422,16 +352,16 @@ def _simhash64_md5_arrow(df: DataFrame, text_col: str, id_col: str) -> DataFrame
                 sh = int((weights * (votes > 0)).sum(dtype=np.uint64))
                 if sh >= 1 << 63:
                     sh -= 1 << 64
-                ids_out.append(did)
                 sh_out.append(sh)
             yield pd.DataFrame(
                 {
-                    "id": pd.Series(ids_out, dtype="int64"),
-                    "sh": pd.Series(sh_out, dtype="int64"),
+                    "id": pdf[id_col].to_numpy(),
+                    "sh": np.asarray(sh_out, dtype=np.int64),
                 }
             )
 
-    return df.select(id_col, text_col).mapInPandas(run, schema="id long, sh long")
+    schema = f"id {df.schema[id_col].dataType.simpleString()}, sh long"
+    return df.select(id_col, text_col).mapInPandas(run, schema=schema)
 
 
 def simhash_near_duplicates(
@@ -440,7 +370,6 @@ def simhash_near_duplicates(
     id_col: str = "doc_id",
     max_hamming: int = 3,
     block_bits: int = 16,
-    hash_fn=F.xxhash64,
 ) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance <= max_hamming.
 
@@ -461,20 +390,8 @@ def simhash_near_duplicates(
     # materialize the (id, sh) table once: it feeds the distinct-value
     # pass, both expansion joins and the same-cluster self-join, and the
     # simhash computation would otherwise recompute per consumer (the
-    # DataFrame mirror of 'write the signature table first').  The portable
-    # md5 tier takes the vectorised Arrow stage; other hash_fns keep the
-    # generic codegen aggregation.
-    from pyspark.sql.types import IntegerType, LongType
-
-    arrow_ok = hash_fn is md5_hash60 and isinstance(
-        df.schema[id_col].dataType, (IntegerType, LongType)
-    )
-    sim_src = (
-        _simhash64_md5_arrow(df, text_col, id_col)
-        if arrow_ok
-        else simhash64_agg(df, text_col=text_col, id_col=id_col, hash_fn=hash_fn)
-    )
-    sim = sim_src.localCheckpoint(eager=True)
+    # DataFrame mirror of 'write the signature table first').
+    sim = _simhash64_md5_arrow(df, text_col, id_col).localCheckpoint(eager=True)
 
     # r6 restructure (guide §2.4/§2.5): the old shape blocked the per-DOC
     # rows and self-joined them — near-dup clusters share identical

@@ -1,58 +1,34 @@
 """Approximate-nearest-neighbour search over embedding columns.
 
 * ``cosine_topk``      — exact brute-force baseline: broadcast the query
-  set, score with a JVM-side ``aggregate(zip_with(...))`` dot product,
-  rank with a window.  Right for <= ~10^5 queries against any corpus size
-  (corpus never shuffles; one pass, partial top-k via window per query).
-* ``lsh_cosine_topk``  — scale path: random-hyperplane signatures bucket
-  the corpus; per-bucket candidates only.  Hyperplanes are deterministic
-  (seeded), so signatures are reproducible across runs/executors.
+  set, score each pair in a vectorised Arrow stage, rank with a window.
+  Right for <= ~10^5 queries against any corpus size (corpus never
+  shuffles; one pass, partial top-k via window per query).
+* ``lsh_cosine_topk``  — scale path: integer-hyperplane signatures bucket
+  the corpus; per-bucket candidates only.  The planes are derived from md5
+  (``portable_int_planes``), so every engine computes the same buckets.
 * ``ivf_topk``         — scale path with a trained coarse quantizer:
-  corpus vectors assign to centroid cells (shuffle-free literal argmax),
+  corpus vectors assign to centroid cells (shuffle-free projection),
   queries probe their ``n_probe`` nearest cells; candidates come from a
   broadcast equi-join on the cell id.  ``n_probe == K`` is provably
   exact (equals ``cosine_topk``).
 
-Vectors stay ``array<float>`` end to end; all arithmetic happens in
-whole-plan JVM expressions (no Python per row).
+Vectors stay ``array<float>`` in the plan; signatures, cell assignment and
+pair scores are numpy passes over whole Arrow batches (one Python call per
+batch, not per row), and rounding and ranking stay JVM-side.
 """
 
 from __future__ import annotations
 
-import random
-
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def _norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return _dot(a, b) / (_norm(a) * _norm(b))
-
-
 def _np_fold_dot(A, B):
-    """Row-wise dot product with the SAME left-fold summation order as the
-    interpreted ``_dot`` HOF (init 0.0, then sequential adds in element
-    order): ``acc += A[:,d] * B[:,d]`` performs exactly that fold per row,
-    vectorised ACROSS rows.  IEEE float64 ops are deterministic, so the
-    result is bit-identical to the expression form — the r6 optimization
-    replaces the expression soup, not the arithmetic (guide §4.2)."""
+    """Row-wise dot product as a left fold in float64 (init 0.0, then
+    sequential adds in element order): ``acc += A[:,d] * B[:,d]`` performs
+    exactly that fold per row, vectorised ACROSS rows.  IEEE float64 ops
+    are deterministic, so the result equals a scalar Python loop
+    ``acc += x * y`` bit for bit."""
     import numpy as np
 
     acc = np.zeros(A.shape[0], dtype=np.float64)
@@ -78,13 +54,11 @@ def _batch_vec_matrix(col):
 
 
 def _score_pairs_arrow(df: DataFrame, vec_a: str = "_va", vec_b: str = "_vb") -> DataFrame:
-    """Vectorised cosine over attached (vec_a, vec_b) pair rows.
-
-    Replaces the interpreted per-pair ``cosine()`` HOF (3 folds x dim
-    lambda evaluations per row, CodegenFallback) with one numpy pass per
-    Arrow batch — bit-identical results (see ``_np_fold_dot``).  Returns
-    the input columns minus the vectors, plus unrounded ``sim`` (callers
-    apply ``F.round`` JVM-side so rounding semantics are unchanged).
+    """Vectorised cosine over attached (vec_a, vec_b) pair rows: one numpy
+    pass per Arrow batch, ``dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))``
+    with every dot a float64 left fold (see ``_np_fold_dot``).  Returns the
+    input columns minus the vectors, plus unrounded ``sim`` (callers apply
+    ``F.round`` JVM-side).
     """
     import pyarrow as pa
 
@@ -113,8 +87,7 @@ def _score_pairs_arrow(df: DataFrame, vec_a: str = "_va", vec_b: str = "_vb") ->
                 out = []
                 for x, y in zip(va, vb):
                     if x is None or y is None or len(x) != len(y):
-                        # HOF zip_with pads the shorter side with nulls ->
-                        # null product -> null fold -> null sim
+                        # no cosine between vectors of different lengths
                         out.append(None)
                         continue
                     dot = 0.0
@@ -153,9 +126,7 @@ def cosine_topk(
     paired = c.crossJoin(F.broadcast(q)).where(
         F.col("neighbor_id") != F.col("query_id")
     ).select("query_id", "neighbor_id", "_cv", "_qv")
-    # r6: score pairs in one vectorised Arrow stage instead of the
-    # interpreted 3-fold cosine HOF (bit-identical; guide §4.2) — the
-    # broadcast nested-loop shape (corpus never shuffles) is unchanged
+    # broadcast nested-loop shape: the corpus never shuffles
     scored = _score_pairs_arrow(paired, "_cv", "_qv").select(
         "query_id", "neighbor_id", F.round(F.col("sim"), 6).alias("sim")
     )
@@ -164,46 +135,6 @@ def cosine_topk(
         scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "sim", F.col("rank").cast("int"))
-    )
-
-
-def hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
-    """Deterministic pseudo-random unit-free hyperplanes (driver-side)."""
-    rng = random.Random(seed)
-    return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_planes)]
-
-
-def _signatures_arrow(df: DataFrame, id_col: str, vec_col: str, tables) -> DataFrame:
-    """Vectorised signature stage: one numpy matmul per Arrow batch per
-    table instead of planes*dim literal expressions per row — the classic
-    'vectorized pandas UDF beats expression soup' case (the expression form
-    took ~10x longer on the bench corpus)."""
-    import numpy as np
-    import pandas as pd
-
-    planes = np.asarray(tables, dtype=np.float64)  # (T, n_planes, dim)
-    weights = 1 << np.arange(planes.shape[1], dtype=np.int64)
-
-    def run(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield pd.DataFrame({"id": [], "vec": [], "sigs": []})
-                continue
-            vecs = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)  # (n, dim)
-            sigs = [
-                ((vecs @ planes[t].T >= 0).astype(np.int64) * weights).sum(axis=1)
-                for t in range(planes.shape[0])
-            ]
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "vec": pdf[vec_col],
-                    "sigs": list(map(list, zip(*sigs))),
-                }
-            )
-
-    return df.select(id_col, vec_col).mapInPandas(
-        run, schema="id long, vec array<float>, sigs array<long>"
     )
 
 
@@ -232,7 +163,8 @@ def portable_int_planes(
 
 def _int_signatures_arrow(df: DataFrame, id_col: str, vec_col: str, tables) -> DataFrame:
     """Signature stage over integer planes: quantize to floor(v * 2^20) and
-    take exact integer dot-product signs (see ``portable_int_planes``)."""
+    take exact integer dot-product signs (see ``portable_int_planes``), one
+    numpy matmul per Arrow batch per table."""
     import numpy as np
     import pandas as pd
 
@@ -269,26 +201,22 @@ def cosine_near_duplicates(
     threshold: float = 0.95,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    int_tables: list[list[list[int]]] | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate PAIRS (id_a < id_b, sim >= threshold).
 
     Scale path: candidates come from the sign-signature bucket equi-join
     (any shared (table, signature) bucket), never an all-pairs cross join —
     at 10^12 rows the shuffled payload is (id, vec, T signatures), and the
-    cosine runs only on bucket collisions.  Recall follows the
-    random-hyperplane collision bound; raise ``n_tables`` for tighter
-    thresholds.  With ``int_tables`` the bucketing is exactly reproducible
-    cross-engine (see ``portable_int_planes``)."""
-    tables = int_tables if int_tables is not None else [
-        hyperplanes(64, 6, 42 + 1000 * t) for t in range(8)
-    ]
-    stage = _int_signatures_arrow if int_tables is not None else _signatures_arrow
-    sigs = stage(corpus, id_col, vec_col, tables)
+    cosine runs only on bucket collisions.  The buckets come from 8 tables
+    of 6 integer planes over 64 dimensions (``portable_int_planes``), so
+    they are exactly reproducible cross-engine."""
+    sigs = _int_signatures_arrow(
+        corpus, id_col, vec_col, portable_int_planes(64, 6, 8)
+    )
     # r6 restructure (guide §2.4/§4.2): the old shape was a (t, sig)
-    # self-join -> 25M-row ``distinct`` exchange -> two attach joins -> an
-    # interpreted cosine HOF per pair (~40 s at the driver's sf1.0).  Now
-    # each (table, signature) BUCKET becomes one ``applyInPandas`` group:
+    # self-join -> 25M-row ``distinct`` exchange -> two attach joins -> one
+    # cosine per pair (~40 s at the driver's sf1.0).  Now each (table,
+    # signature) BUCKET becomes one ``applyInPandas`` group:
     # members arrive once (id, sigs, vec — the corpus never moves per
     # PAIR), pairs are generated in-group, deduped across tables by the
     # first-shared-table rule (a pair is emitted only by the FIRST table
@@ -384,26 +312,19 @@ def lsh_cosine_topk(
     n_planes: int = 6,
     n_tables: int = 8,
     dim: int = 64,
-    seed: int = 42,
-    int_tables: list[list[list[int]]] | None = None,
 ) -> DataFrame:
     """Bucketed ANN with OR-construction: ``n_tables`` independent
     sign-signature tables; a candidate pair needs a full match in ANY
     table.  Recall dial = (n_planes down, n_tables up); cost dial = the
     reverse.  Same output shape as ``cosine_topk`` but approximate.
 
-    ``int_tables``: integer planes from ``portable_int_planes`` — the
-    exact, cross-engine-reproducible signature tier (oracle-checkable);
-    default is gaussian planes."""
-    if int_tables is not None:
-        tables = int_tables
-        sig_stage = _int_signatures_arrow
-    else:
-        tables = [hyperplanes(dim, n_planes, seed + 1000 * t) for t in range(n_tables)]
-        sig_stage = _signatures_arrow
+    The planes are ``portable_int_planes(dim, n_planes, n_tables)``, so
+    the buckets are exact and reproducible in any engine (q30's oracle
+    recomputes them in DuckDB)."""
+    tables = portable_int_planes(dim, n_planes, n_tables)
 
     def with_buckets(df: DataFrame, idc: str, alias: str) -> DataFrame:
-        sigs = sig_stage(df, id_col, vec_col, tables)
+        sigs = _int_signatures_arrow(df, id_col, vec_col, tables)
         return sigs.select(
             F.col("id").alias(idc),
             F.col("vec").alias(alias),
@@ -415,9 +336,8 @@ def lsh_cosine_topk(
     paired = c.join(F.broadcast(q), ["t", "sig"]).where(
         F.col("neighbor_id") != F.col("query_id")
     ).select("query_id", "neighbor_id", "_cv", "_qv")
-    # r6: vectorised Arrow pair scoring replaces the interpreted 3-fold
-    # cosine HOF — bit-identical sims (see ``_np_fold_dot``), so the
-    # cross-table ``distinct`` dedups exactly as before
+    # a pair found in several tables scores to the same sim each time (see
+    # ``_np_fold_dot``), so the ``distinct`` dedups it exactly
     scored = _score_pairs_arrow(paired, "_cv", "_qv").select(
         "query_id", "neighbor_id", F.round(F.col("sim"), 6).alias("sim")
     ).distinct()
@@ -436,70 +356,12 @@ def lsh_cosine_topk(
 _Q_SCALE = 1048576.0  # 2^20 — same quantization as portable_int_planes
 
 
-def _let(value: Column, body) -> Column:
-    """Bind an expensive subexpression once inside interpreted HOF plans:
-    higher-order functions run with no common-subexpression elimination, so
-    every reference to an expression re-evaluates it, while ``transform``
-    over a one-element array evaluates ``value`` once and hands it to
-    ``body`` as a lambda variable."""
-    return F.get(F.transform(F.array(value), body), 0)
-
-
 def _quantized(vec: Column) -> Column:
     """floor(x * 2^20) per component, kept as double: integer-valued
     doubles stay EXACT below 2^53, so dot products are order-independent
     and reproduce bit-identically in DuckDB (same idiom as the q30/q46
     integer-plane signatures)."""
     return F.transform(vec, lambda x: F.floor(x.cast("double") * F.lit(_Q_SCALE)))
-
-
-def ranked_centroids(vec: Column, centroids: list[tuple[int, list[float]]]) -> Column:
-    """array<int> of centroid ids ordered by quantized inner product DESC
-    (tie -> lowest id) — element 0 is the IVF cell assignment, the first
-    ``n_probe`` elements are the probe set.
-
-    ``centroids`` are plan LITERALS (constant-folded): a coarse quantizer
-    is metadata-scale (10^2-10^4 cells even for 10^12 vectors), so it
-    rides in the plan like LSH hyperplanes do and the corpus-side
-    assignment is a narrow, shuffle-free projection.  Production path:
-    train k-means offline (e.g. on a corpus sample), store the centroid
-    table, collect it at plan-build time.
-    """
-    if not centroids:
-        raise ValueError("IVF needs a non-empty centroid table")
-    cent = F.array(*[
-        F.struct(
-            F.lit(int(cid)).cast("int").alias("cid"),
-            F.array(*[
-                F.floor(F.lit(float(x)) * F.lit(_Q_SCALE)) for x in cvec
-            ]).alias("cq"),
-        )
-        for cid, cvec in centroids
-    ])
-
-    def rank_with(vq: Column) -> Column:
-        scored = F.transform(
-            cent,
-            lambda e: F.struct(
-                F.aggregate(
-                    F.zip_with(vq, e["cq"], lambda a, b: a * b),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                ).alias("dot"),
-                e["cid"].alias("cid"),
-            ),
-        )
-        ordered = F.array_sort(
-            scored,
-            lambda l, r: F.when(l["dot"] > r["dot"], -1)
-            .when(l["dot"] < r["dot"], 1)
-            .when(l["cid"] < r["cid"], -1)
-            .when(l["cid"] > r["cid"], 1)
-            .otherwise(0),
-        )
-        return F.transform(ordered, lambda s: s["cid"])
-
-    return _let(_quantized(vec), rank_with)
 
 
 def _ranked_cells_arrow(
@@ -510,10 +372,12 @@ def _ranked_cells_arrow(
     n_keep: int,
 ) -> DataFrame:
     """(id, vec, cids) with the first ``n_keep`` centroid ids ranked by
-    quantized inner product DESC (tie -> lowest cid) — the vectorised
-    mirror of ``ranked_centroids``/``F.slice`` (bit-identical: the
-    quantized dots are exact integers, and a stable argsort over the
-    cid-ordered centroid matrix reproduces the low-cid tie break)."""
+    quantized inner product DESC (tie -> lowest cid): vectors and
+    centroids are quantized to ``floor(x * 2^20)``, so the dots are exact
+    integers, and a stable argsort over the cid-ordered centroid matrix
+    breaks ties to the lowest cid.  ``centroids`` (``train_centroids``'
+    output) are metadata-scale and ride into every task with the batch
+    function."""
     import numpy as np
     import pandas as pd
 
@@ -558,20 +422,15 @@ def ivf_topk(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF ANN: corpus vectors are assigned to their nearest coarse
-    centroid (shuffle-free literal-argmax projection); each query probes
-    its ``n_probe`` nearest cells and scores ONLY those cells' vectors
+    centroid (a shuffle-free projection); each query probes its
+    ``n_probe`` nearest cells and scores ONLY those cells' vectors
     via a broadcast equi-join on the cell id — the corpus never shuffles
     and never cross-joins.  With ``n_probe == len(centroids)`` this
     degrades gracefully to exact brute force (tested), which is the
     recall dial's upper end.  Same output shape as ``cosine_topk``.
     """
-    # r6: the corpus/query cell assignment runs as one vectorised Arrow
-    # stage (still a narrow, shuffle-free projection — mapInPandas adds no
-    # exchange) instead of the interpreted quantize->k-dots->array_sort HOF
-    # per row; ranked_centroids stays the plan-literal serving form for
-    # callers that need a pure-JVM plan.  Ranking is bit-identical: integer
-    # dot products are exact in both forms (< 2^53) and ties break to the
-    # lowest cid (argsort stable over cid-ordered centroids).
+    # the corpus/query cell assignment is a narrow projection
+    # (mapInPandas adds no exchange)
     ranked_c = _ranked_cells_arrow(corpus, id_col, vec_col, centroids, 1)
     c = ranked_c.select(
         F.col("id").alias("neighbor_id"),
@@ -626,9 +485,9 @@ def train_centroids(
     * stop   — a FIXED iteration count (``n_iter``), not a convergence
       test, so the oracle unrolls the same number of steps.
 
-    Each iteration is ONE distributed job: centroids ride into the plan as
-    literals (metadata-scale, like LSH hyperplanes), assignment is a
-    narrow projection, and the only shuffle is the (cid, component) sum —
+    Each iteration is ONE distributed job: centroids ride into the tasks
+    with the batch function (metadata-scale, like LSH planes), assignment
+    is a narrow projection, and the only shuffle is the (cid, component) sum —
     k*dim cells, collected to the driver (k*dim doubles, not data-scale).
     At 10^12 vectors, train on a hash sample via ``sample_mod`` (keep ids
     with ``xxhash64(id) % sample_mod == 0``); the centroid table is
@@ -636,8 +495,8 @@ def train_centroids(
 
     Returns ``[(cid, centroid)]`` with integer-valued components scaled
     back to the original embedding space (exact: the components are
-    multiples of 2^-20, so ``ranked_centroids``' re-quantization
-    round-trips bit-identically).
+    multiples of 2^-20, so ``ivf_topk``'s re-quantization round-trips
+    bit-identically).
     """
     import math
 
@@ -666,9 +525,7 @@ def train_centroids(
         # lowest cid because C is ordered by cid and np.argmin returns the
         # first minimum.  (A first cut embedded the centroids as 8x64
         # literal trees in an interpreted HOF assignment — 20s/iteration
-        # of pure expression evaluation at metadata scale; the serving
-        # path in ``ranked_centroids`` keeps the literal form because the
-        # CORPUS assignment must stay a shuffle-free projection.)
+        # of pure expression evaluation at metadata scale.)
         C = np.array([cvec for _cid, cvec in cents], dtype=np.int64)
         cc = (C * C).sum(axis=1)
         k_now, dim = C.shape

@@ -553,8 +553,8 @@ FROM documents"""
 
 
 # ---------------------------------------------------------------------------
-# q25/q26 — portable MinHash + LSH candidate pairs (md5-min variant; the
-# package's production tier uses xxhash64, tested in pytest)
+# q25/q26 — portable MinHash + LSH candidate pairs (md5-min variant;
+# jobs/dedup_job.py runs the xxhash64 form, dedup.minhash_lsh_candidates)
 # ---------------------------------------------------------------------------
 
 _N_SEEDS = 8
@@ -983,18 +983,17 @@ GROUP BY doc_id"""
 
 
 def q29_simhash_spark(spark, sf_dir):
-    """SimHash near-dup pairs, portable md5-60bit hash tier.
+    """SimHash near-dup pairs over md5-60bit token hashes.
 
     block_bits=12 gives 5 pigeonhole blocks — exact recall for
     max_hamming=4 (d+1 blocks required), so the brute-force DuckDB oracle
     must match EXACTLY; a recall gap in the blocking would show up as a
-    row-count mismatch.  Production tier keeps xxhash64 (pytest-verified
-    equal semantics)."""
-    from ..functions.dedup import md5_hash60, simhash_near_duplicates
+    row-count mismatch."""
+    from ..functions.dedup import simhash_near_duplicates
 
     load_views(spark, sf_dir)
     out = simhash_near_duplicates(
-        spark.table("documents"), max_hamming=4, block_bits=12, hash_fn=md5_hash60
+        spark.table("documents"), max_hamming=4, block_bits=12
     )
     return out.select("id_a", "id_b", F.col("hamming").cast("int").alias("hamming"))
 
@@ -1028,16 +1027,13 @@ def q30_lsh_ann_spark(spark, sf_dir):
 
     ``portable_int_planes`` + floor(v * 2^20) quantization keep every dot
     product an exact integer < 2^53, so numpy, Spark, and the DuckDB
-    oracle compute identical buckets — the SCALE path is the oracled one
-    (the gaussian tier stays for production, pytest-verified)."""
-    from ..functions.similarity import lsh_cosine_topk, portable_int_planes
+    oracle compute identical buckets (8 tables of 6 planes, the
+    ``lsh_cosine_topk`` defaults)."""
+    from ..functions.similarity import lsh_cosine_topk
 
     load_views(spark, sf_dir)
     emb = spark.table("embeddings")
-    return lsh_cosine_topk(
-        emb, emb.where(F.col("vec_id") < 10), k=3,
-        int_tables=portable_int_planes(64, 6, 8),
-    )
+    return lsh_cosine_topk(emb, emb.where(F.col("vec_id") < 10), k=3)
 
 
 # integer-plane signature CTE shared by the q30/q46 oracles — mirrors
@@ -1449,13 +1445,10 @@ def q46_cosine_neardup_spark(spark, sf_dir):
     """Embedding-cosine near-dup pairs via LSH bucket collisions (the
     synthetic embeddings are near-orthogonal, so the threshold sits at the
     collision distribution's right tail to keep the check non-trivial)."""
-    from ..functions.similarity import cosine_near_duplicates, portable_int_planes
+    from ..functions.similarity import cosine_near_duplicates
 
     load_views(spark, sf_dir)
-    return cosine_near_duplicates(
-        spark.table("embeddings"), threshold=0.3,
-        int_tables=portable_int_planes(64, 6, 8),
-    )
+    return cosine_near_duplicates(spark.table("embeddings"), threshold=0.3)
 
 
 Q46_ORACLE = f"""WITH {_SIG_CTE},

@@ -32,17 +32,6 @@ DOCS_SCHEMA = T.StructType(
     ]
 )
 
-#: exploded flat form
-SPANS_FLAT_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("kind", T.StringType(), False),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("media_ref", T.StringType(), True),
-        T.StructField("offset", T.IntegerType(), False),
-    ]
-)
-
 #: document-level metadata dimension (F1 type filter, T11 identifier, J4 langs)
 DOC_META_SCHEMA = T.StructType(
     [
@@ -75,17 +64,5 @@ STATE_SCHEMA = T.StructType(
         T.StructField("n_pages", T.LongType(), True),
         T.StructField("n_dehyphenated", T.LongType(), True),
         T.StructField("run_id", T.StringType(), True),
-    ]
-)
-
-#: per-document extraction metrics (A1-A7 analogue)
-METRICS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("n_pages", T.LongType(), False),
-        T.StructField("n_lines_in", T.LongType(), False),
-        T.StructField("n_lines_out", T.LongType(), False),
-        T.StructField("n_tokens_out", T.LongType(), False),
-        T.StructField("n_dehyphenated", T.LongType(), False),
     ]
 )

@@ -4,8 +4,6 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import functions as F
-
 from ocrd_odem_spark.functions import dedup, multimodal, similarity, textstats
 
 DOCS = [
@@ -106,7 +104,15 @@ def test_simhash_near_duplicates(spark):
     ).collect()
     got = {(r["id_a"], r["id_b"]): r["hamming"] for r in rows}
     assert got.get((1, 2)) == 0
-    assert (1, 3) in got or (2, 3) in got
+    assert got.get((1, 3)) == got.get((2, 3)) == 8
+    # a string doc_id comes out as a string id, with the same pairs
+    str_docs = spark.createDataFrame(
+        [(f"d{i}", t) for i, t in DOCS], "doc_id string, text string"
+    )
+    rows = dedup.simhash_near_duplicates(str_docs, max_hamming=8, block_bits=7)
+    assert {(r["id_a"], r["id_b"]): r["hamming"] for r in rows.collect()} == {
+        (f"d{a}", f"d{b}"): h for (a, b), h in got.items()
+    }
 
 
 def test_simhash_block_guard_raises(spark):
@@ -119,16 +125,17 @@ def test_simhash_block_guard_raises(spark):
 
 
 def test_md5_hash60_matches_duckdb(spark):
-    """The portable hash tier must agree with DuckDB's hex cast exactly."""
+    """The SimHash token hash must agree with DuckDB's hex cast exactly: a
+    one-token document's SimHash is its token's hash, bit for bit."""
     import duckdb
 
     toks = ["Wort", "zum", "ſchönen", "123", ""]
+    docs = spark.createDataFrame(list(enumerate(toks)), "doc_id long, text string")
     got = {
-        r["t"]: r["h"]
-        for r in spark.createDataFrame([(t,) for t in toks], "t string")
-        .select("t", dedup.md5_hash60(F.col("t")).alias("h"))
-        .collect()
+        toks[r["id"]]: r["sh"]
+        for r in dedup._simhash64_md5_arrow(docs, "text", "doc_id").collect()
     }
+    assert len(got) == len(toks)
     con = duckdb.connect()
     for t in toks:
         exp = con.execute(
@@ -159,9 +166,7 @@ def test_lsh_topk_int_planes(spark):
     """Integer-plane tier returns the same shape and sane ranks."""
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     queries = emb.limit(4)
-    out = similarity.lsh_cosine_topk(
-        emb, queries, k=2, int_tables=similarity.portable_int_planes(64, 6, 8)
-    ).collect()
+    out = similarity.lsh_cosine_topk(emb, queries, k=2).collect()
     by_q: dict[int, list] = {}
     for r in out:
         by_q.setdefault(r["query_id"], []).append(r)
@@ -289,17 +294,6 @@ def test_megapixel_histogram(spark):
     assert hist == {6.0: 2, 1.0: 1}
 
 
-def test_simhash_agg_equals_hof(spark):
-    df = _docs_df(spark)
-    hof = {r["doc_id"]: None for r in df.collect()}
-    from pyspark.sql import functions as F
-    a = df.select(F.col("doc_id").alias("id"), dedup.simhash64(F.col("text")).alias("sh"))
-    b = dedup.simhash64_agg(df)
-    ra = {r["id"]: r["sh"] for r in a.collect()}
-    rb = {r["id"]: r["sh"] for r in b.collect()}
-    assert ra == rb
-
-
 def test_cosine_near_duplicates(spark):
     """Planted near-duplicates are found via bucket collisions; the pair
     set never contains self-pairs or sub-threshold similarity."""
@@ -315,10 +309,7 @@ def test_cosine_near_duplicates(spark):
         [(i, [float(x) for x in v]) for i, v in rows],
         "vec_id long, embedding array<float>",
     )
-    got = similarity.cosine_near_duplicates(
-        emb, threshold=0.9,
-        int_tables=similarity.portable_int_planes(64, 6, 8),
-    ).collect()
+    got = similarity.cosine_near_duplicates(emb, threshold=0.9).collect()
     pairs = {(r["id_a"], r["id_b"]): r["sim"] for r in got}
     assert (0, 1) in pairs and pairs[(0, 1)] > 0.99
     for (a, b), sim in pairs.items():

@@ -1,9 +1,14 @@
-"""Every package module has a caller outside the tests.
+"""Every package module, and every function in ``functions/``, has a
+caller outside the tests.
 
 A module that no query, job or benchmark imports is dead weight: it is
 deleted rather than kept green by its own tests.  This walks the imports of
 all non-test code with ``ast`` and asserts each ``ocrd_odem_spark`` module
-is imported by some file other than itself.
+is imported by some file other than itself.  The same holds one level down
+for the operator modules in ``ocrd_odem_spark/functions``: each top-level
+``def`` there must be referenced by non-test code (as a name, an attribute
+or an imported name), so a second form of an operator that only its
+equivalence test calls cannot linger.
 """
 
 from __future__ import annotations
@@ -111,3 +116,57 @@ def test_keep_entries_exist_and_are_still_unimported():
         assert not importers[mod], (
             f"{mod} is imported by {sorted(importers[mod])}; drop it from KEEP"
         )
+
+
+# Top-level functions in ``functions/`` that no non-test code references,
+# kept on purpose: the entry points of the standalone decoders above.
+_DECODER = "entry point of a standalone codec module kept in KEEP above"
+KEEP_FUNCTIONS = {
+    "decode_jpeg_gray": _DECODER,
+    "decode_png_gray": _DECODER,
+    "decode_tiff_gray": _DECODER,
+}
+
+
+def _functions_defs() -> dict[str, str]:
+    """Top-level ``def`` name -> defining module, over ``functions/*.py``."""
+    out: dict[str, str] = {}
+    for path in sorted((ROOT / PKG / "functions").glob("*.py")):
+        for node in ast.parse(path.read_text(), str(path)).body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                out[node.name] = _module_name(path)
+    return out
+
+
+def _referenced_names() -> set[str]:
+    """Every name non-test code uses: loaded names, attributes, and the
+    names ``import`` statements bind."""
+    out: set[str] = set()
+    for path in _sources():
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(node, ast.Name):
+                out.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                out.add(node.attr)
+            elif isinstance(node, ast.alias):
+                out.add(node.name.rpartition(".")[2])
+    return out
+
+
+def test_every_functions_def_has_a_non_test_reference():
+    used = _referenced_names()
+    unused = sorted(
+        f"{mod}.{name}" for name, mod in _functions_defs().items()
+        if name not in used and name not in KEEP_FUNCTIONS
+    )
+    assert not unused, (
+        f"referenced only by tests (delete, or list in KEEP_FUNCTIONS): {unused}"
+    )
+
+
+def test_keep_functions_exist_and_are_still_unreferenced():
+    defs = _functions_defs()
+    used = _referenced_names()
+    for name in KEEP_FUNCTIONS:
+        assert name in defs, f"KEEP_FUNCTIONS names a missing function: {name}"
+        assert name not in used, f"{name} is referenced; drop it from KEEP_FUNCTIONS"

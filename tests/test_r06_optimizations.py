@@ -2,8 +2,10 @@
 
 Each r6 rewrite replaced an interpreted-expression form with a vectorised
 Arrow/numpy form whose arithmetic must be bit-identical.  These tests pin
-the new fast paths to the original expression-level semantics on corpora
-with edge shapes (empty text, single token, duplicates, null-ish rows).
+the fast paths to the original expression-level semantics, or, where that
+form is deleted, to the DuckDB oracle SQL or a scalar Python reference, on
+corpora with edge shapes (empty text, single token, duplicates, null-ish
+rows).
 """
 
 from __future__ import annotations
@@ -51,21 +53,27 @@ def test_md5_minhash_matches_expression_tier(spark, docs):
 
 
 def test_simhash_md5_arrow_matches_agg(spark, docs):
-    """Arrow per-doc simhash == the codegen vote aggregation, bit for bit."""
-    agg = {
-        r["id"]: r["sh"]
-        for r in dedup.simhash64_agg(docs, hash_fn=dedup.md5_hash60).collect()
-    }
+    """Arrow per-doc simhash == q29's DuckDB vote aggregation (its ``_sh``
+    CTE, text unchanged), bit for bit."""
+    import duckdb
+
+    from ocrd_odem_spark.plans import queries
+
+    ctes = queries.Q29_ORACLE.rsplit("\nSELECT a.doc_id", 1)[0]
+    con = duckdb.connect()
+    con.register("documents", docs.toPandas())
+    oracle = dict(con.execute(f"{ctes}\nSELECT doc_id, sh FROM _sh").fetchall())
     arrow = {
         r["id"]: r["sh"]
         for r in dedup._simhash64_md5_arrow(docs, "text", "doc_id").collect()
     }
-    assert arrow == agg
+    assert len(arrow) == docs.count()
+    assert arrow == oracle
 
 
 def test_simhash_pairs_match_join_form(spark, docs):
     """Value-compressed pair derivation == the naive blocked self-join."""
-    sim = dedup.simhash64_agg(docs, hash_fn=dedup.md5_hash60)
+    sim = dedup._simhash64_md5_arrow(docs, "text", "doc_id")
     blocked = sim.select(
         "id",
         "sh",
@@ -101,18 +109,18 @@ def test_simhash_pairs_match_join_form(spark, docs):
     got = sorted(
         map(
             tuple,
-            dedup.simhash_near_duplicates(
-                docs, max_hamming=4, block_bits=12, hash_fn=dedup.md5_hash60
-            ).collect(),
+            dedup.simhash_near_duplicates(docs, max_hamming=4, block_bits=12).collect(),
         )
     )
     assert got == expected
 
 
 def test_score_pairs_arrow_matches_hof_cosine(spark):
-    """Vectorised pair scoring == interpreted cosine fold (incl. rounding),
-    on vectors engineered to stress summation order (alternating signs,
-    magnitude spread)."""
+    """Vectorised pair scoring == a scalar Python left-fold cosine, bit for
+    bit and unrounded, on vectors engineered to stress summation order
+    (alternating signs, magnitude spread).  (Named for the interpreted HOF
+    cosine it pinned first; that is gone.)"""
+    import math
     import random
 
     rng = random.Random(13)
@@ -124,16 +132,22 @@ def test_score_pairs_arrow_matches_hof_cosine(spark):
     a = emb.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("_va"))
     b = emb.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("_vb"))
     pairs = a.crossJoin(b).where(F.col("id_a") < F.col("id_b"))
-    hof = pairs.select(
-        "id_a", "id_b",
-        F.round(similarity.cosine(F.col("_va"), F.col("_vb")), 6).alias("sim"),
-    )
-    fast = similarity._score_pairs_arrow(pairs, "_va", "_vb").select(
-        "id_a", "id_b", F.round(F.col("sim"), 6).alias("sim")
-    )
-    eh = {(r["id_a"], r["id_b"]): r["sim"] for r in hof.collect()}
-    ef = {(r["id_a"], r["id_b"]): r["sim"] for r in fast.collect()}
-    assert ef == eh
+    fast = similarity._score_pairs_arrow(pairs, "_va", "_vb")
+
+    def fold(x, y):
+        acc = 0.0
+        for xx, yy in zip(x, y):
+            acc += xx * yy
+        return acc
+
+    vecs = {r["vec_id"]: r["embedding"] for r in emb.collect()}  # float32 values
+    want = {
+        (i, j): fold(vecs[i], vecs[j])
+        / (math.sqrt(fold(vecs[i], vecs[i])) * math.sqrt(fold(vecs[j], vecs[j])))
+        for i in vecs for j in vecs if i < j
+    }
+    got = {(r["id_a"], r["id_b"]): r["sim"] for r in fast.collect()}
+    assert got == want
 
 
 def test_cosine_near_duplicates_matches_reference_shape(spark):
@@ -242,11 +256,11 @@ def test_extract_arrow_metrics_match_hof(spark):
 
 
 def test_ivf_arrow_assignment_matches_literal_ranking(spark):
-    """_ranked_cells_arrow == ranked_centroids/F.slice for assignment AND
-    probe ranking (ties included: duplicated centroid forces a dot tie)."""
-    from pyspark.sql import functions as F
-
-    from ocrd_odem_spark.functions import similarity
+    """_ranked_cells_arrow == a Python sort on (-quantized dot, cid) for
+    assignment AND probe ranking (ties included: duplicated centroid forces
+    a dot tie).  (Named for the plan-literal HOF ranking it pinned first;
+    that is gone.)"""
+    import math
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     cents = sorted(
@@ -254,20 +268,24 @@ def test_ivf_arrow_assignment_matches_literal_ranking(spark):
         for r in emb.where("vec_id < 3").collect()
     )
     cents.append((3, cents[0][1]))  # duplicate centroid -> exact dot ties
-    ranked = similarity.ranked_centroids(F.col("embedding"), cents)
-    hof = {
-        r["vec_id"]: tuple(r["cids"])
-        for r in emb.select(
-            "vec_id", F.slice(ranked, 1, 2).alias("cids")
-        ).collect()
-    }
+
+    def quantized(vec):
+        return [math.floor(x * 1048576.0) for x in vec]
+
+    cq = [(cid, quantized(c)) for cid, c in cents]
+    want = {}
+    for r in emb.collect():
+        vq = quantized(r["embedding"])
+        ranked = sorted(cq, key=lambda e: (-sum(a * b for a, b in zip(vq, e[1])), e[0]))
+        want[r["vec_id"]] = tuple(cid for cid, _ in ranked[:2])
+    assert (0, 3) in want.values()  # the tie is exercised
     fast = {
         r["id"]: tuple(r["cids"])
         for r in similarity._ranked_cells_arrow(
             emb, "vec_id", "embedding", cents, 2
         ).collect()
     }
-    assert fast == hof
+    assert fast == want
 
 
 def test_page_text_stats_arrow_matches_hof(spark):
