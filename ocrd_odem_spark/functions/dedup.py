@@ -2,7 +2,7 @@
 
 Four operators, all shuffle-frugal; the per-document hashing runs either
 as native Spark expressions or as one vectorised Python pass per Arrow
-batch, and only signature-sized rows ever shuffle:
+batch:
 
 * **exact**        — md5 grouping, canonical keeper = min(id).
 * **MinHash+LSH**  — token-shingle -> per-seed min of ``xxhash64`` ->

@@ -126,7 +126,8 @@ def test_simhash_block_guard_raises(spark):
 
 def test_md5_hash60_matches_duckdb(spark):
     """The SimHash token hash must agree with DuckDB's hex cast exactly: a
-    one-token document's SimHash is its token's hash, bit for bit."""
+    one-token document's SimHash is its token's hash, bit for bit.  (Named
+    for the Catalyst hash expression it checked first; that is gone.)"""
     import duckdb
 
     toks = ["Wort", "zum", "ſchönen", "123", ""]

@@ -54,7 +54,8 @@ def test_md5_minhash_matches_expression_tier(spark, docs):
 
 def test_simhash_md5_arrow_matches_agg(spark, docs):
     """Arrow per-doc simhash == q29's DuckDB vote aggregation (its ``_sh``
-    CTE, text unchanged), bit for bit."""
+    CTE, text unchanged), bit for bit.  (Named for the codegen aggregation
+    it pinned first; that is gone.)"""
     import duckdb
 
     from ocrd_odem_spark.plans import queries
