@@ -21,8 +21,7 @@ PKG = "ocrd_odem_spark"
 
 # Modules only tests import, kept on purpose: geometry and salting are
 # reference semantics; pngdec and tiffdec are standalone reference decoders
-# (jpegdec needs no entry: tiffdec imports it for JPEG-in-TIFF); tables
-# awaits being wired in or deleted.
+# (jpegdec needs no entry: tiffdec imports it for JPEG-in-TIFF).
 _CODEC = (
     "standalone pure-numpy codec with exact round-trip tests (TIFF "
     "cross-checked against libtiff); an image workload such as JPEG-DC "
@@ -36,10 +35,6 @@ KEEP = {
     ),
     "ocrd_odem_spark.operators.salting": (
         "the scale contract for skewed keys; to be wired into q43/q44/q47"
-    ),
-    "ocrd_odem_spark.sources.tables": (
-        "bucketed doc_id layout whose joins plan without an exchange; no "
-        "query persists annotation tables yet"
     ),
 }
 
