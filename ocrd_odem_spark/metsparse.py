@@ -1,19 +1,25 @@
 """METS/MODS structural metadata shredding (S4, J1, J2, T11 inputs).
 
 Reimplements what the reference's ``ODEMMetadataInspecteur`` reads from a
-METS file (``lib/odem/processing/mets.py:55-318``) as an Arrow-batched
-parse producing the two dimension tables the pipeline joins against:
+METS file (``lib/odem/processing/mets.py:55-318``): ``parse_mets`` parses
+one document, and ``shred_mets`` runs it as two ``mapInPandas`` passes
+producing the two dimension tables the pipeline joins against:
 
 * ``doc_meta``  — logical type (root logical ``div/@TYPE``), identifiers
   (``mods:identifier/@type`` map), languages (``mods:languageTerm``),
   PICA type (``mods:recordInfo/recordIdentifier`` style field when
-  present).
+  present), the structural ``validation`` channel (one string per violated
+  invariant: no logical type, no pages, no images, unlinked pages, no
+  identifier) and a parse ``error``.
 * ``page_meta`` — one row per physical page: image stem from the MAX
   fileGrp ``FLocat/@href`` (J1: ``fptr/@FILEID == file/@ID``), physical
   div id + ORDERLABEL/LABEL, linked logical types via ``structLink``
   (J2: ``smLink/@xlink:to == phys_id`` then ``@xlink:from == log div``).
   Pages with no logical link carry a ``link_error`` instead of raising
   ("Page not linked", ``mets.py:299-318``).
+
+The reference's XSD/DDB schema validation and its fileGrp rewrite
+(``modify_mets_groups``) are not reproduced: no query or job reads them.
 """
 
 from __future__ import annotations
@@ -24,18 +30,6 @@ from collections.abc import Iterator
 _METS = "{http://www.loc.gov/METS/}"
 _MODS = "{http://www.loc.gov/mods/v3}"
 _XLINK = "{http://www.w3.org/1999/xlink}"
-_DV = "{http://dfg-viewer.de/}"
-
-# keep canonical prefixes on re-serialization (scrub_file_groups) instead of
-# ElementTree's generated ns0:/ns1: — payloads stay diffable after a scrub
-for _prefix, _uri in (
-    ("mets", "http://www.loc.gov/METS/"),
-    ("mods", "http://www.loc.gov/mods/v3"),
-    ("xlink", "http://www.w3.org/1999/xlink"),
-    ("dv", "http://dfg-viewer.de/"),
-    ("xsi", "http://www.w3.org/2001/XMLSchema-instance"),
-):
-    ET.register_namespace(_prefix, _uri)
 
 DOC_META_OUT = (
     "doc_id string, mets_type string, pica_type string, "
@@ -221,432 +215,3 @@ def shred_mets(df, payload_col: str = "mets_xml", file_group: str = "MAX"):
         df.mapInPandas(run_pages, schema=PAGE_META_OUT),
     )
 
-
-_LEVELS = {"warn": 0, "error": 1, "fatal": 2}
-
-VALIDATION_OUT = "doc_id string, rule_id string, level string, message string"
-
-
-def validate_mets_schema(
-    payload: bytes | str,
-    digi_type: str = "Aa",
-    ddb_ignores: tuple[str, ...] = (),
-    ddb_min_level: str = "fatal",
-) -> tuple[bool, list[dict]]:
-    """Schema-level METS validation channel (reference ``validate_mets``,
-    ``mets.py:501-518``, driven by ``validate_metadata``'s digi_type /
-    ddb_ignores / ddb_min_level config, ``odem_process_impl.py:521-557``).
-
-    The reference delegates to an external XSD + DDB-schematron reporter
-    (the ``digiflow.validate`` package); this re-states a documented
-    SUBSET of those rules directly over the DOM — the structural XSD
-    essentials plus the DDB-profile checks a production ingest trips most
-    often — as data rows, never exceptions:
-
-    * ``xsd.root``               fatal — root element must be mets:mets
-    * ``xsd.structmap.physical`` fatal — a structMap TYPE=PHYSICAL exists
-    * ``xsd.structmap.logical``  fatal — a structMap TYPE=LOGICAL exists
-    * ``xsd.filesec``            error — fileSec with at least one fileGrp
-    * ``xsd.flocat.href``        error — every FLocat carries xlink:href
-    * ``xsd.fptr.fileid``        error — every fptr FILEID resolves
-    * ``xsd.smlink.resolves``    error — every smLink from/to hits a div ID
-    * ``ddb.identifier``         fatal — a record identifier exists
-      (mods:recordIdentifier or mods:identifier)
-    * ``ddb.titleInfo``          error — mods:titleInfo/mods:title exists
-      (waived for newspaper-like digi types ``O*``/``Z*``, whose titles
-      live on the issue level)
-    * ``ddb.language``           warn  — a mods languageTerm exists
-    * ``ddb.physical.order``     warn  — physical page divs carry ORDER or
-      ORDERLABEL
-
-    Returns ``(ok, findings)``: ``ok`` is False when any non-ignored
-    finding reaches ``ddb_min_level`` (the reference's ``report.alert``);
-    ``findings`` lists every non-ignored rule hit as
-    ``{'rule_id', 'level', 'message'}``.  A malformed payload yields the
-    single fatal ``xsd.parse`` finding (the reference wraps parser errors
-    into its data-exception channel the same way).
-    """
-    findings: list[dict] = []
-
-    def hit(rule_id: str, level: str, message: str) -> None:
-        if rule_id not in ddb_ignores:
-            findings.append(
-                {"rule_id": rule_id, "level": level, "message": message}
-            )
-
-    try:
-        if isinstance(payload, str):
-            payload = payload.encode("utf-8")
-        root = ET.fromstring(payload)
-    except ET.ParseError as exc:
-        hit("xsd.parse", "fatal", f"malformed XML: {exc}")
-        return False, findings
-
-    if root.tag != f"{_METS}mets":
-        # harvested records arrive OAI-PMH-wrapped (the reference's loader
-        # unwraps the envelope); validate the embedded mets:mets if present
-        inner = next(root.iter(f"{_METS}mets"), None)
-        if inner is None:
-            hit("xsd.root", "fatal", f"root element is {root.tag}, not mets:mets")
-        else:
-            root = inner
-
-    struct_types = {
-        sm.get("TYPE") for sm in root.iter(f"{_METS}structMap")
-    }
-    if "PHYSICAL" not in struct_types:
-        hit("xsd.structmap.physical", "fatal", "no structMap TYPE=PHYSICAL")
-    if "LOGICAL" not in struct_types:
-        hit("xsd.structmap.logical", "fatal", "no structMap TYPE=LOGICAL")
-
-    file_grps = [g for g in root.iter(f"{_METS}fileGrp")]
-    if not any(root.iter(f"{_METS}fileSec")) or not file_grps:
-        hit("xsd.filesec", "error", "no fileSec with a fileGrp")
-
-    file_ids: set[str] = set()
-    n_blank_href = 0
-    for f in root.iter(f"{_METS}file"):
-        fid = f.get("ID")
-        if fid:
-            file_ids.add(fid)
-        for loc in f.iter(f"{_METS}FLocat"):
-            if not (loc.get(f"{_XLINK}href") or "").strip():
-                n_blank_href += 1
-    if n_blank_href:
-        hit("xsd.flocat.href", "error", f"{n_blank_href}x FLocat without xlink:href")
-
-    div_ids = {d.get("ID") for d in root.iter(f"{_METS}div") if d.get("ID")}
-    dangling_fptr = sorted(
-        {
-            fp.get("FILEID")
-            for fp in root.iter(f"{_METS}fptr")
-            if fp.get("FILEID") and fp.get("FILEID") not in file_ids
-        }
-    )
-    if dangling_fptr:
-        hit(
-            "xsd.fptr.fileid", "error",
-            f"{len(dangling_fptr)}x fptr FILEID unresolved: "
-            + ",".join(dangling_fptr[:5]),
-        )
-    n_bad_links = 0
-    for sl in root.iter(f"{_METS}smLink"):
-        if (
-            sl.get(f"{_XLINK}from") not in div_ids
-            or sl.get(f"{_XLINK}to") not in div_ids
-        ):
-            n_bad_links += 1
-    if n_bad_links:
-        hit("xsd.smlink.resolves", "error", f"{n_bad_links}x smLink endpoint unresolved")
-
-    has_record_id = any(
-        (el.text or "").strip() for el in root.iter(f"{_MODS}recordIdentifier")
-    ) or any((el.text or "").strip() for el in root.iter(f"{_MODS}identifier"))
-    if not has_record_id:
-        hit("ddb.identifier", "fatal", "found no record identifier")
-
-    newspaper_like = digi_type[:1] in ("O", "Z")
-    has_title = any(
-        (t.text or "").strip()
-        for ti in root.iter(f"{_MODS}titleInfo")
-        for t in ti.iter(f"{_MODS}title")
-    )
-    if not has_title and not newspaper_like:
-        hit("ddb.titleInfo", "error", "no mods:titleInfo/mods:title")
-
-    if not any(
-        (el.text or "").strip() for el in root.iter(f"{_MODS}languageTerm")
-    ):
-        hit("ddb.language", "warn", "no mods languageTerm")
-
-    phys_divs = [
-        d
-        for sm in root.iter(f"{_METS}structMap")
-        if sm.get("TYPE") == "PHYSICAL"
-        for d in sm.iter(f"{_METS}div")
-        if d.get("TYPE") == "page"
-    ]
-    n_unordered = sum(
-        1 for d in phys_divs if not (d.get("ORDER") or d.get("ORDERLABEL"))
-    )
-    if n_unordered:
-        hit(
-            "ddb.physical.order", "warn",
-            f"{n_unordered}x physical page div without ORDER/ORDERLABEL",
-        )
-
-    _ddb_profile_rules(root, hit, newspaper_like)
-
-    min_rank = _LEVELS.get(ddb_min_level, 2)
-    ok = not any(_LEVELS[f["level"]] >= min_rank for f in findings)
-    return ok, findings
-
-
-# DDB structure-type vocabulary for LOGICAL divs (public DDB METS/MODS
-# application profile, "Strukturtypen" list; documented subset — extend as
-# profile revisions add types).  PHYSICAL divs use their own tiny set.
-_DDB_LOGICAL_TYPES = frozenset({
-    "monograph", "multivolume_work", "volume", "periodical", "issue",
-    "additional", "newspaper", "year", "month", "day", "chapter", "section",
-    "title_page", "cover_front", "cover_back", "cover", "contents",
-    "preface", "index", "illustration", "map", "table", "text", "article",
-    "corrigenda", "dedication", "engraved_titlepage", "privileges",
-    "imprint", "appendix", "letter", "verse", "fragment", "manuscript",
-    "dossier", "document", "binding", "colophon", "bookplate", "entry",
-    "plan", "musical_notation", "provenance", "initial_decoration", "spine",
-    "printers_mark", "act", "judgement", "attachment", "address",
-    "register", "scene", "annotation", "bundle", "paste_down", "edge",
-    "seal", "supplement", "advertising", "obituary", "colour_checker",
-    "endsheet", "stamp",
-})
-
-
-def _ddb_profile_rules(root, hit, newspaper_like: bool) -> None:
-    """DDB-schematron checks carrying the REFERENCE'S rule ids.
-
-    The reference delegates to the digiflow DDB reporter
-    (``lib/odem/processing/mets.py:501-518``); these re-derive the rules
-    its own test matrix pins (``tests/test_odem_processing_mets.py:336-365``
-    expects titleInfo_02 + relatedItem_04 + location_01 + dmdSec_04 on the
-    1981185920_37167_02 fixture and a clean pass on _03) plus the rules its
-    production configs ignore-list (fileSec_02, originInfo_06,
-    structMapLogical_17, structMapLogical_22 — ``resources/odem.*.ini``),
-    from the public DDB METS/MODS application profile:
-
-    * ``relatedItem_04``      error — mods:relatedItem without @type
-    * ``location_01``         error — mods:location without physicalLocation
-    * ``titleInfo_02``        error — a dmdSec MODS without mods:titleInfo
-      (waived for newspaper-like types, titles live on the issue level)
-    * ``dmdSec_04``           error — dmdSec not referenced by any DMDID in
-      the LOGICAL structMap (e.g. descriptive metadata hung off the
-      physical sequence)
-    * ``fileSec_02``          error — no mets:fileGrp USE="DEFAULT"
-    * ``originInfo_06``       warn  — no mods:originInfo/mods:dateIssued
-    * ``structMapLogical_17`` error — LOGICAL div @TYPE missing or outside
-      the DDB structure-type vocabulary
-    * ``structMapLogical_22`` error — a leaf LOGICAL div with neither an
-      smLink to the physical structMap nor an fptr
-
-    Round-5 additions (profile-convention ids, see provenance note in the
-    code below):
-
-    * ``structMapPhysical_01`` error — no PHYSICAL structMap with a div
-    * ``fileSec_01``           error — no mets:fileSec with any mets:file
-    * ``structLink_01``        error — both structMaps present but zero
-      mets:smLink entries
-    * ``amdSec_04``            error — no rights/license statement
-      (dv:license or mods:accessCondition)
-    """
-    n_untyped_rel = sum(
-        1 for rel in root.iter(f"{_MODS}relatedItem") if not rel.get("type")
-    )
-    if n_untyped_rel:
-        hit("relatedItem_04", "error",
-            f"{n_untyped_rel}x mods:relatedItem without type attribute")
-
-    n_loc = sum(
-        1
-        for loc in root.iter(f"{_MODS}location")
-        if not any(
-            (el.text or "").strip()
-            for el in loc.iter(f"{_MODS}physicalLocation")
-        )
-    )
-    if n_loc:
-        hit("location_01", "error",
-            f"{n_loc}x mods:location without mods:physicalLocation")
-
-    logical_dmdids: set[str] = set()
-    logical_sms = [
-        sm for sm in root.iter(f"{_METS}structMap") if sm.get("TYPE") == "LOGICAL"
-    ]
-    for sm in logical_sms:
-        for d in sm.iter(f"{_METS}div"):
-            for ref in (d.get("DMDID") or "").split():
-                logical_dmdids.add(ref)
-
-    for dmd in root.iter(f"{_METS}dmdSec"):
-        dmd_id = dmd.get("ID") or "?"
-        mods = next(dmd.iter(f"{_MODS}mods"), None)
-        if mods is None:
-            continue
-        if dmd_id not in logical_dmdids:
-            hit("dmdSec_04", "error",
-                f"dmdSec {dmd_id} not referenced from the LOGICAL structMap")
-        has_title = any(
-            (t.text or "").strip()
-            for ti in mods.iter(f"{_MODS}titleInfo")
-            for t in ti.iter(f"{_MODS}title")
-        )
-        if not has_title and not newspaper_like:
-            hit("titleInfo_02", "error",
-                f"dmdSec {dmd_id} MODS without mods:titleInfo/mods:title")
-
-    has_default_grp = any(
-        g.get("USE") == "DEFAULT" for g in root.iter(f"{_METS}fileGrp")
-    )
-    if not has_default_grp:
-        hit("fileSec_02", "error", "no mets:fileGrp USE=\"DEFAULT\"")
-
-    has_date_issued = any(
-        (el.text or "").strip()
-        for oi in root.iter(f"{_MODS}originInfo")
-        for el in oi.iter(f"{_MODS}dateIssued")
-    )
-    if not has_date_issued:
-        hit("originInfo_06", "warn", "no mods:originInfo/mods:dateIssued")
-
-    smlink_froms = {
-        sl.get(f"{_XLINK}from") for sl in root.iter(f"{_METS}smLink")
-    }
-    n_bad_type = 0
-    n_unlinked = 0
-    for sm in logical_sms:
-        for d in sm.iter(f"{_METS}div"):
-            dtype = d.get("TYPE")
-            if not dtype or dtype not in _DDB_LOGICAL_TYPES:
-                n_bad_type += 1
-            is_leaf = next(iter(d.findall(f"{_METS}div")), None) is None
-            if (
-                is_leaf
-                and d.get("ID") not in smlink_froms
-                and next(d.iter(f"{_METS}fptr"), None) is None
-            ):
-                n_unlinked += 1
-    if n_bad_type:
-        hit("structMapLogical_17", "error",
-            f"{n_bad_type}x LOGICAL div TYPE missing or outside the DDB vocabulary")
-    if n_unlinked:
-        hit("structMapLogical_22", "error",
-            f"{n_unlinked}x leaf LOGICAL div with no smLink and no fptr")
-
-    # --- round-5 breadth: further mandatory-structure rules of the public
-    # DDB METS/MODS application profile.  Provenance note: the 8 rules
-    # above carry ids PINNED by the reference's own fixtures/configs; the
-    # digiflow library that owns the full numbered ruleset is not vendored
-    # by the reference, so the ids below follow the profile's element_NN
-    # convention and are fixture-verified against the reference's clean
-    # documents (all ULB fixtures pass) plus element-stripped broken
-    # variants — see tests/test_mets_validation.py.
-
-    physical_sms = [
-        sm for sm in root.iter(f"{_METS}structMap")
-        if sm.get("TYPE") == "PHYSICAL"
-    ]
-    has_phys_div = any(
-        next(sm.iter(f"{_METS}div"), None) is not None for sm in physical_sms
-    )
-    if not has_phys_div:
-        hit("structMapPhysical_01", "error",
-            "no mets:structMap TYPE=\"PHYSICAL\" with a physical sequence")
-
-    has_file = next(
-        (f for fs in root.iter(f"{_METS}fileSec")
-         for f in fs.iter(f"{_METS}file")),
-        None,
-    )
-    if has_file is None:
-        hit("fileSec_01", "error", "no mets:fileSec with any mets:file")
-
-    if logical_sms and physical_sms:
-        n_links = sum(1 for _ in root.iter(f"{_METS}smLink"))
-        if n_links == 0:
-            hit("structLink_01", "error",
-                "LOGICAL and PHYSICAL structMaps present but no "
-                "mets:structLink/mets:smLink entries")
-
-    has_license = any(
-        (el.text or "").strip() for el in root.iter(f"{_DV}license")
-    ) or any(
-        (el.text or "").strip() or el.get(f"{_XLINK}href")
-        for el in root.iter(f"{_MODS}accessCondition")
-    )
-    if not has_license:
-        hit("amdSec_04", "error",
-            "no rights/license statement (dv:license or "
-            "mods:accessCondition)")
-
-
-def mets_validation(
-    df,
-    payload_col: str = "mets_xml",
-    digi_type: str = "Aa",
-    ddb_ignores: tuple[str, ...] = (),
-):
-    """Spark stage: (doc_id, mets_xml) -> one row per validation finding
-    (``VALIDATION_OUT``).  Clean documents emit no rows; consumers decide
-    the alert policy per level — a 100 TB ingest quarantines by rule, it
-    never throws."""
-    import pandas as pd
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for rec in pdf.itertuples(index=False):
-                _, findings = validate_mets_schema(
-                    getattr(rec, payload_col),
-                    digi_type=digi_type,
-                    ddb_ignores=ddb_ignores,
-                    ddb_min_level="fatal",
-                )
-                rows += [
-                    (rec.doc_id, f["rule_id"], f["level"], f["message"])
-                    for f in findings
-                ]
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "rule_id", "level", "message"]
-            )
-
-    return df.mapInPandas(run, schema=VALIDATION_OUT)
-
-
-def scrub_file_groups(payload: bytes | str, removals: list[str]) -> bytes:
-    """S6-adjacent: drop blacklisted fileGrps and unlink their fptrs
-    (reference ``modify_mets_groups`` -> ``clear_filegroups``,
-    ``odem_process_impl.py:155-171`` / ``mets.py:423-430`` — e.g. DOWNLOAD /
-    THUMBS / DEFAULT created by the repository software).
-
-    Pure function payload -> payload so it composes as a pre-shred stage.
-    """
-    if isinstance(payload, str):
-        payload = payload.encode("utf-8")
-    root = ET.fromstring(payload)
-    removed_ids: set[str] = set()
-    for sec in root.iter(f"{_METS}fileSec"):
-        for grp in list(sec):
-            if grp.tag == f"{_METS}fileGrp" and grp.get("USE") in removals:
-                for f in grp.iter(f"{_METS}file"):
-                    # a file element without an ID cannot be referenced by
-                    # any fptr — never funnel '' into the removal set, or
-                    # ID-less fptrs elsewhere get unlinked collaterally
-                    fid = f.get("ID")
-                    if fid:
-                        removed_ids.add(fid)
-                sec.remove(grp)
-    if removed_ids:
-        for div in root.iter(f"{_METS}div"):
-            for fptr in list(div):
-                # .get() -> None when FILEID absent; None is never in the set
-                if (
-                    fptr.tag == f"{_METS}fptr"
-                    and fptr.get("FILEID") in removed_ids
-                ):
-                    div.remove(fptr)
-    return ET.tostring(root, encoding="UTF-8", xml_declaration=True)
-
-
-def scrub_mets(df, removals: list[str], payload_col: str = "mets_xml"):
-    """Arrow-batched pre-shred scrub stage: (doc_id, mets_xml) -> same shape
-    with blacklisted fileGrps removed."""
-    import pandas as pd
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            out = pdf.copy()
-            out[payload_col] = [
-                scrub_file_groups(x, removals).decode("utf-8")
-                for x in out[payload_col]
-            ]
-            yield out
-
-    return df.mapInPandas(run, schema=df.schema)

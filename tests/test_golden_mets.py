@@ -123,37 +123,6 @@ def test_mets_validation_channel(spark):
     assert "contains no physical pages" in v2
 
 
-def test_scrub_file_groups(spark):
-    """modify_mets_groups analogue: blacklisted fileGrps removed, their
-    fptrs unlinked, surviving groups untouched."""
-    import xml.etree.ElementTree as ET
-
-    from ocrd_odem_spark.metsparse import parse_mets, scrub_file_groups, scrub_mets
-
-    raw = open(os.path.join(RES, "1981185920_33908.xml"), "rb").read()
-    M = "{http://www.loc.gov/METS/}"
-    before = {g.get("USE") for g in ET.fromstring(raw).iter(f"{M}fileGrp")}
-    assert {"DOWNLOAD", "THUMBS", "DEFAULT", "MAX"} <= before
-
-    scrubbed = scrub_file_groups(raw, ["DOWNLOAD", "THUMBS", "DEFAULT"])
-    root = ET.fromstring(scrubbed)
-    after = {g.get("USE") for g in root.iter(f"{M}fileGrp")}
-    assert "DOWNLOAD" not in after and "THUMBS" not in after and "DEFAULT" not in after
-    assert "MAX" in after
-    # fptrs referencing removed files are unlinked
-    live_ids = {f.get("ID") for f in root.iter(f"{M}file")}
-    for fptr in root.iter(f"{M}fptr"):
-        assert fptr.get("FILEID") in live_ids
-    # the MAX-driven page linking still yields all 21 pages
-    assert len(parse_mets(scrubbed)["pages"]) == 21
-
-    # Spark stage form keeps schema and applies the same scrub
-    df = _mets_df(spark, "1981185920_33908", "1981185920_33908.xml")
-    out = scrub_mets(df, ["DOWNLOAD", "THUMBS", "DEFAULT"]).collect()[0]
-    root2 = ET.fromstring(out["mets_xml"].encode("utf-8"))
-    assert {g.get("USE") for g in root2.iter(f"{M}fileGrp")} == after
-
-
 def test_golden_integrate_ocr_linking_4_of_4(spark):
     """integrate_ocr_file golden (4 linked, 0 passed): every 42296 ALTO
     page links to exactly one MAX image by stem containment
