@@ -1,57 +1,14 @@
-"""Structured Streaming ingestion for the span corpus.
+"""Event-time windowed aggregation over the ``events`` table shape.
 
-The reference is a cron-driven batch worker (one record per invocation,
-``cli_record_server_client.py``); its streaming story is a work queue.  The
-Spark-native equivalent is incremental batch: a file-source stream of span
-parquet, ``Trigger.AvailableNow``-style draining, and ``foreachBatch``
-running the SAME narrow extraction plan with the SAME watermark store — so
-continuous and backfill ingestion share one code path and one exactly-once
-protocol (stream checkpoint for source offsets + bucket state for output
-visibility).
-
-``events_rollup`` shows the watermark/window aggregation surface over the
-``events`` table shape (late data tolerated up to the watermark bound).
+``events_rollup`` counts events and sums their values per event type per
+time window (q12, q31).  It runs unchanged on a static DataFrame and on a
+streaming one; a streaming input gets an event-time watermark, so late
+data is tolerated up to that bound.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
-
-from ..plans import pipeline
-from ..schema import DOCS_SCHEMA
-
-
-def stream_extract(
-    spark: SparkSession,
-    source_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    dehyphenate: bool = True,
-    max_files_per_trigger: int = 16,
-):
-    """File-source stream of nested (doc_id, spans) parquet -> extraction.
-
-    Returns the started StreamingQuery (caller awaits/stops).  Each
-    micro-batch runs the narrow extract plan and appends to the output
-    table; source progress lives in the stream checkpoint, so restarts
-    resume exactly where they stopped.
-    """
-    stream = (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-    )
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        out = pipeline.extract(batch_df, dehyphenate=dehyphenate)
-        out.write.mode("append").parquet(output_dir)
-
-    return (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+from pyspark.sql import DataFrame, functions as F
 
 
 def events_rollup(

@@ -1,40 +1,8 @@
-"""Streaming ingestion: availableNow drain == batch extraction; restart resumes."""
+"""Windowed event rollup on static and streaming inputs."""
 
 from __future__ import annotations
 
-import tempfile
-
-from pyspark.sql import functions as F
-
-from ocrd_odem_spark.plans import pipeline
-from ocrd_odem_spark.schema import DOCS_SCHEMA
 from ocrd_odem_spark.streaming import ingest
-
-
-def test_stream_extract_equals_batch(spark, docs_df, corpus):
-    with tempfile.TemporaryDirectory() as tmp:
-        src, out, ckpt = f"{tmp}/src", f"{tmp}/out", f"{tmp}/ckpt"
-        half = len(corpus) // 2
-        spark.createDataFrame(corpus[:half], DOCS_SCHEMA).write.parquet(src)
-
-        q = ingest.stream_extract(spark, src, out, ckpt)
-        q.awaitTermination(120)
-
-        got1 = spark.read.parquet(out).count()
-        assert got1 == half
-
-        # new files arrive; restart drains ONLY the delta (checkpoint resume)
-        spark.createDataFrame(corpus[half:], DOCS_SCHEMA).write.mode("append").parquet(src)
-        q2 = ingest.stream_extract(spark, src, out, ckpt)
-        q2.awaitTermination(120)
-
-        stream_out = spark.read.parquet(out)
-        assert stream_out.count() == len(corpus)
-
-        batch_out = pipeline.extract(docs_df, dehyphenate=True)
-        a = {r["doc_id"]: [tuple(s) for s in r["spans"]] for r in stream_out.collect()}
-        b = {r["doc_id"]: [tuple(s) for s in r["spans"]] for r in batch_out.collect()}
-        assert a == b
 
 
 def test_events_rollup_static(spark):
