@@ -20,15 +20,15 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 
 def page_text_stats_flat(flat: DataFrame, minlen: int = 2) -> DataFrame:
-    """``page_text_stats`` over FLAT text spans
-    ``(doc_id, media_ref, offset, text)``.
+    """A3/A4 dataset: one row per page with the reference's
+    ``(file_string, n_lines, n_normalized, n_sparse, n_dense)`` tuple.
 
-    The per-page pipeline (order lines, wrap-merge fold, char scrub,
-    densify) runs as ``oracle.textlines_to_data`` — the pinned ground-truth
-    loop — inside one ``mapInPandas`` stage after a single codegen
-    ``collect_list`` regroup.  Flat input also lets callers that already
-    hold flat spans (q34/q42) skip the nest-then-explode round trip,
-    halving the exchanges.
+    Input: FLAT text spans ``(doc_id, media_ref, offset, text)``; nested
+    documents get there with ``pipeline.to_flat`` and a ``kind == 'text'``
+    filter.  The per-page pipeline (order lines, wrap-merge fold, char
+    scrub, densify) runs as ``oracle.textlines_to_data`` — the pinned
+    ground-truth loop — inside one ``mapInPandas`` stage after a single
+    codegen ``collect_list`` regroup, the one shuffle.
     """
     import pandas as pd
 
@@ -62,22 +62,6 @@ def page_text_stats_flat(flat: DataFrame, minlen: int = 2) -> DataFrame:
         run,
         schema="doc_id string, media_ref string, file_string string, "
         "n_lines long, n_normalized long, n_sparse long, n_dense long",
-    )
-
-
-def page_text_stats(docs: DataFrame, minlen: int = 2) -> DataFrame:
-    """A3/A4 dataset: one row per page with the reference's
-    ``(file_string, n_lines, n_normalized, n_sparse, n_dense)`` tuple.
-
-    Input: nested (doc_id, spans), exploded to its text spans and run
-    through ``page_text_stats_flat``.  One shuffle (page regroup);
-    everything else is narrow per-page work.
-    """
-    return page_text_stats_flat(
-        docs.select("doc_id", F.explode("spans").alias("s"))
-        .where(F.col("s.kind") == "text")
-        .select("doc_id", "s.media_ref", "s.offset", "s.text"),
-        minlen,
     )
 
 

@@ -509,9 +509,9 @@ def from_flat(flat: DataFrame, sort: bool = True) -> DataFrame:
     offset-first struct (codegen-friendly field comparison) instead of the
     interpreted per-comparison lambda; same order wherever offsets are
     unique per document (the span contract).  ``sort=False`` skips the
-    ordering for consumers that re-sort anyway (``extract``,
-    ``page_text_stats``) — array order is then partition-dependent, so only
-    use it when the next operator imposes its own order.
+    ordering for consumers that re-sort anyway (``extract`` sorts each
+    document's spans by offset) — array order is then partition-dependent,
+    so only use it when the next operator imposes its own order.
     """
     collected = F.collect_list(
         F.struct(

@@ -11,6 +11,8 @@ from __future__ import annotations
 
 import time
 
+from pyspark.sql import functions as F
+
 from ocrd_odem_spark import gen, oracle
 from ocrd_odem_spark.plans import pipeline
 from ocrd_odem_spark.schema import DOCS_SCHEMA
@@ -100,10 +102,10 @@ def test_giant_chainy_doc_linear_marks_tier(spark):
 
 
 def test_giant_single_page_stats_linear(spark):
-    """A 10^4-line SINGLE page runs through page_text_stats in linear
+    """A 10^4-line SINGLE page runs through page_text_stats_flat in linear
     time (an O(n²) per-page fold would take minutes) and matches the
     oracle exactly."""
-    from ocrd_odem_spark.operators.quality import page_text_stats
+    from ocrd_odem_spark.operators.quality import page_text_stats_flat
 
     n = 10_000
     lines = []
@@ -124,7 +126,8 @@ def test_giant_single_page_stats_linear(spark):
     doc = {"doc_id": "giantpage", "spans": spans}
     df = spark.createDataFrame([doc], DOCS_SCHEMA)
     t0 = time.time()
-    rows = page_text_stats(df).collect()
+    text = pipeline.to_flat(df).where(F.col("kind") == "text")
+    rows = page_text_stats_flat(text).collect()
     elapsed = time.time() - t0
     assert len(rows) == 1
     st = oracle.textlines_to_data([t for t in lines if len(t) > 0])

@@ -112,13 +112,15 @@ def test_golden_text_bundle_126(spark):
 
 
 def test_golden_textlines2data_500_gray(spark):
-    from ocrd_odem_spark.operators.quality import page_text_stats
+    from ocrd_odem_spark.operators.quality import page_text_stats_flat
+    from ocrd_odem_spark.plans.pipeline import to_flat
     from ocrd_odem_spark.xmlparse import parsed_to_spans
 
     rows = [Row(doc_id="500_gray00003", media_ref="00000003",
                 xml=_read("500_gray00003.xml").decode("utf-8"))]
     docs = parsed_to_spans(shred_xml(spark.createDataFrame(rows)))
-    stats = page_text_stats(docs).collect()
+    text = to_flat(docs).where(F.col("kind") == "text")
+    stats = page_text_stats_flat(text).collect()
     assert len(stats) == 1
     row = stats[0]
     # reference: n_lines == 360, n_lines_out == 346 (test_odem_ocr_pipeline.py:595-606)

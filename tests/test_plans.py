@@ -106,10 +106,12 @@ def test_cosine_topk_broadcasts_queries(spark):
 
 
 def test_page_stats_single_fact_shuffle(spark, docs_parquet):
-    from ocrd_odem_spark.operators.quality import page_text_stats
+    from ocrd_odem_spark.operators.quality import page_text_stats_flat
+    from ocrd_odem_spark.plans.pipeline import to_flat
 
     docs = spark.read.parquet(docs_parquet)
-    plan = _plan(page_text_stats(docs))
+    text = to_flat(docs).where(F.col("kind") == "text")
+    plan = _plan(page_text_stats_flat(text))
     # exactly one hash exchange of the fact rows (the page regroup)
     n_exchanges = plan.count("Exchange hashpartitioning")
     assert n_exchanges == 1, plan
@@ -122,11 +124,12 @@ def test_quality_vocab_not_force_broadcast(spark, docs_parquet):
     bounded dictionaries."""
     from ocrd_odem_spark.operators.quality import (
         estimate_page_quality,
-        page_text_stats,
+        page_text_stats_flat,
     )
+    from ocrd_odem_spark.plans.pipeline import to_flat
 
     docs = spark.read.parquet(docs_parquet)
-    ps = page_text_stats(docs)
+    ps = page_text_stats_flat(to_flat(docs).where(F.col("kind") == "text"))
     vocab = spark.createDataFrame(
         [("der",), ("und",), ("die",)], "word string"
     )

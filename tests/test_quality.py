@@ -1,14 +1,18 @@
-"""Quality-path parity: page_text_stats vs the oracle's textlines2data."""
+"""Quality-path parity: page_text_stats_flat vs the oracle's textlines2data."""
 
 from __future__ import annotations
+
+from pyspark.sql import functions as F
 
 from ocrd_odem_spark import oracle
 from ocrd_odem_spark.constants import KIND_TEXT
 from ocrd_odem_spark.operators import quality
+from ocrd_odem_spark.plans.pipeline import to_flat
 
 
 def test_page_text_stats_matches_oracle(spark, corpus, docs_df):
-    rows = quality.page_text_stats(docs_df).collect()
+    text = to_flat(docs_df).where(F.col("kind") == KIND_TEXT)
+    rows = quality.page_text_stats_flat(text).collect()
     actual = {
         (r["doc_id"], r["media_ref"]): (
             r["file_string"], r["n_lines"], r["n_normalized"], r["n_sparse"], r["n_dense"]

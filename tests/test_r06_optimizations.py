@@ -290,17 +290,20 @@ def test_ivf_arrow_assignment_matches_literal_ranking(spark):
 
 
 def test_page_text_stats_arrow_matches_hof(spark):
-    """page_text_stats == ``oracle.textlines_to_data`` per page, value for
+    """page_text_stats_flat == ``oracle.textlines_to_data`` per page, value for
     value, over the derived sf0.001 corpus (empty lines, wraps, sanitize
     edge chars).  (Named for the HOF tier it pinned first; that is gone.)"""
     from ocrd_odem_spark import oracle
-    from ocrd_odem_spark.operators.quality import page_text_stats
+    from ocrd_odem_spark.operators.quality import page_text_stats_flat
     from ocrd_odem_spark.plans import queries
+    from ocrd_odem_spark.plans.pipeline import to_flat
 
     docs = queries.docs_nested_df(spark, "/root/testdata/sf0.001")
     got = {
         (r["doc_id"], r["media_ref"]): tuple(r)[2:]
-        for r in page_text_stats(docs).collect()
+        for r in page_text_stats_flat(
+            to_flat(docs).where(F.col("kind") == "text")
+        ).collect()
     }
     want = {}
     for r in docs.collect():
