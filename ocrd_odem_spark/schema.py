@@ -53,16 +53,3 @@ PAGE_META_SCHEMA = T.StructType(
         T.StructField("log_types", T.ArrayType(T.StringType()), True),
     ]
 )
-
-#: per-partition checkpoint/watermark state table (S1/S9 resume protocol)
-STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("partition_key", T.StringType(), False),
-        T.StructField("state", T.StringType(), False),
-        T.StructField("n_docs", T.LongType(), True),
-        T.StructField("n_spans_out", T.LongType(), True),
-        T.StructField("n_pages", T.LongType(), True),
-        T.StructField("n_dehyphenated", T.LongType(), True),
-        T.StructField("run_id", T.StringType(), True),
-    ]
-)

@@ -1,14 +1,15 @@
-"""Every package module, and every function in ``functions/``, has a
+"""Every package module, and every top-level package function, has a
 caller outside the tests.
 
 A module that no query, job or benchmark imports is dead weight: it is
 deleted rather than kept green by its own tests.  This walks the imports of
 all non-test code with ``ast`` and asserts each ``ocrd_odem_spark`` module
-is imported by some file other than itself.  The same holds one level down
-for the operator modules in ``ocrd_odem_spark/functions``: each top-level
-``def`` there must be referenced by non-test code (as a name, an attribute
-or an imported name), so a second form of an operator that only its
-equivalence test calls cannot linger.
+is imported by some file other than itself.  The same holds one level down:
+each top-level ``def`` in ``ocrd_odem_spark/**/*.py`` must be referenced by
+non-test code (as a name, an attribute or an imported name), so a second
+form of an operator, or a stage that only its own test runs, cannot linger.
+``oracle.py`` (the reference the tests compare against) and the modules in
+``KEEP`` are exempt.
 """
 
 from __future__ import annotations
@@ -21,7 +22,8 @@ PKG = "ocrd_odem_spark"
 
 # Modules only tests import, kept on purpose: geometry and salting are
 # reference semantics; pngdec and tiffdec are standalone reference decoders
-# (jpegdec needs no entry: tiffdec imports it for JPEG-in-TIFF).
+# (jpegdec needs no entry: tiffdec imports it for JPEG-in-TIFF); schema is
+# the input contract callers build DataFrames with.
 _CODEC = (
     "standalone pure-numpy codec with exact round-trip tests (TIFF "
     "cross-checked against libtiff); an image workload such as JPEG-DC "
@@ -35,6 +37,10 @@ KEEP = {
     ),
     "ocrd_odem_spark.operators.salting": (
         "the scale contract for skewed keys; to be wired into q43/q44/q47"
+    ),
+    "ocrd_odem_spark.schema": (
+        "the nested (doc_id, spans) and meta input schemas callers build "
+        "DataFrames with; the engine reads whatever its parquet carries"
     ),
 }
 
@@ -108,23 +114,32 @@ def test_keep_entries_exist_and_are_still_unimported():
         )
 
 
-# Top-level functions in ``functions/`` that no non-test code references,
-# kept on purpose: the entry points of the standalone decoders above.
+# Top-level functions that no non-test code references, kept on purpose.
 _DECODER = "entry point of a standalone codec module kept in KEEP above"
 KEEP_FUNCTIONS = {
-    "decode_jpeg_gray": _DECODER,
-    "decode_png_gray": _DECODER,
-    "decode_tiff_gray": _DECODER,
+    "ocrd_odem_spark.functions.jpegdec.decode_jpeg_gray": _DECODER,
+    "ocrd_odem_spark.plans.queries.retired_relational": (
+        "the oracle-verified single forms of q10/q12 that "
+        "tests/test_oracle_parity.py parametrizes over; the driver registry "
+        "caps at 50 queries"
+    ),
 }
 
+# the reference that tests compare against, not an engine capability
+ORACLE = f"{PKG}.oracle"
 
-def _functions_defs() -> dict[str, str]:
-    """Top-level ``def`` name -> defining module, over ``functions/*.py``."""
+
+def _package_defs() -> dict[str, str]:
+    """Dotted ``module.function`` -> function name, over every top-level
+    ``def`` of the package but ``oracle`` and the modules in ``KEEP``."""
     out: dict[str, str] = {}
-    for path in sorted((ROOT / PKG / "functions").glob("*.py")):
+    for path in sorted((ROOT / PKG).rglob("*.py")):
+        mod = _module_name(path)
+        if mod == ORACLE or mod in KEEP:
+            continue
         for node in ast.parse(path.read_text(), str(path)).body:
             if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
-                out[node.name] = _module_name(path)
+                out[f"{mod}.{node.name}"] = node.name
     return out
 
 
@@ -143,11 +158,11 @@ def _referenced_names() -> set[str]:
     return out
 
 
-def test_every_functions_def_has_a_non_test_reference():
+def test_every_package_def_has_a_non_test_reference():
     used = _referenced_names()
     unused = sorted(
-        f"{mod}.{name}" for name, mod in _functions_defs().items()
-        if name not in used and name not in KEEP_FUNCTIONS
+        qual for qual, name in _package_defs().items()
+        if name not in used and qual not in KEEP_FUNCTIONS
     )
     assert not unused, (
         f"referenced only by tests (delete, or list in KEEP_FUNCTIONS): {unused}"
@@ -155,8 +170,10 @@ def test_every_functions_def_has_a_non_test_reference():
 
 
 def test_keep_functions_exist_and_are_still_unreferenced():
-    defs = _functions_defs()
+    defs = _package_defs()
     used = _referenced_names()
-    for name in KEEP_FUNCTIONS:
-        assert name in defs, f"KEEP_FUNCTIONS names a missing function: {name}"
-        assert name not in used, f"{name} is referenced; drop it from KEEP_FUNCTIONS"
+    for qual in KEEP_FUNCTIONS:
+        assert qual in defs, f"KEEP_FUNCTIONS names a missing function: {qual}"
+        assert defs[qual] not in used, (
+            f"{qual} is referenced; drop it from KEEP_FUNCTIONS"
+        )
