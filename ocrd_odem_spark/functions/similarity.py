@@ -20,6 +20,8 @@ batch, not per row), and rounding and ranking stay JVM-side.
 
 from __future__ import annotations
 
+from functools import lru_cache
+
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 
@@ -161,27 +163,49 @@ def portable_int_planes(
     ]
 
 
-def _int_signatures_arrow(df: DataFrame, id_col: str, vec_col: str, tables) -> DataFrame:
+@lru_cache(maxsize=None)
+def _plane_array(dim: int, n_planes: int, n_tables: int):
+    """``portable_int_planes`` as a read-only float64 array of shape
+    (n_tables, n_planes, dim), built once per width in each Python worker."""
+    import numpy as np
+
+    planes = np.asarray(
+        portable_int_planes(dim, n_planes, n_tables), dtype=np.float64
+    ).reshape(n_tables, n_planes, dim)
+    planes.setflags(write=False)
+    return planes
+
+
+def _int_signatures_arrow(
+    df: DataFrame, id_col: str, vec_col: str, n_planes: int, n_tables: int
+) -> DataFrame:
     """Signature stage over integer planes: quantize to floor(v * 2^20) and
-    take exact integer dot-product signs (see ``portable_int_planes``), one
-    numpy matmul per Arrow batch per table."""
+    take exact integer dot-product signs against
+    ``portable_int_planes(width, n_planes, n_tables)``, ``width`` being the
+    length of the batch's vectors; one numpy matmul per Arrow batch per
+    table.  Vectors of different lengths in one batch raise ``ValueError``."""
     import numpy as np
     import pandas as pd
 
-    planes = np.asarray(tables, dtype=np.float64)  # (T, n_planes, dim)
-    weights = 1 << np.arange(planes.shape[1], dtype=np.int64)
+    weights = 1 << np.arange(n_planes, dtype=np.int64)
 
     def run(batches):
         for pdf in batches:
             if len(pdf) == 0:
                 yield pd.DataFrame({"id": [], "vec": [], "sigs": []})
                 continue
-            vecs = np.floor(
-                np.asarray(pdf[vec_col].tolist(), dtype=np.float64) * 1048576.0
-            )
+            vals = pdf[vec_col].tolist()
+            widths = set(map(len, vals))
+            if len(widths) > 1:
+                raise ValueError(
+                    f"{vec_col}: vectors of lengths {sorted(widths)} in one "
+                    "batch; LSH signatures need one vector width"
+                )
+            vecs = np.floor(np.asarray(vals, dtype=np.float64) * 1048576.0)
+            planes = _plane_array(widths.pop(), n_planes, n_tables)
             sigs = [
                 ((vecs @ planes[t].T >= 0).astype(np.int64) * weights).sum(axis=1)
-                for t in range(planes.shape[0])
+                for t in range(n_tables)
             ]
             yield pd.DataFrame(
                 {
@@ -208,11 +232,9 @@ def cosine_near_duplicates(
     (any shared (table, signature) bucket), never an all-pairs cross join —
     at 10^12 rows the shuffled payload is (id, vec, T signatures), and the
     cosine runs only on bucket collisions.  The buckets come from 8 tables
-    of 6 integer planes over 64 dimensions (``portable_int_planes``), so
-    they are exactly reproducible cross-engine."""
-    sigs = _int_signatures_arrow(
-        corpus, id_col, vec_col, portable_int_planes(64, 6, 8)
-    )
+    of 6 integer planes as wide as the vectors (``portable_int_planes``),
+    so they are exactly reproducible cross-engine."""
+    sigs = _int_signatures_arrow(corpus, id_col, vec_col, 6, 8)
     # r6 restructure (guide §2.4/§4.2): the old shape was a (t, sig)
     # self-join -> 25M-row ``distinct`` exchange -> two attach joins -> one
     # cosine per pair (~40 s at the driver's sf1.0).  Now each (table,
@@ -311,20 +333,18 @@ def lsh_cosine_topk(
     vec_col: str = "embedding",
     n_planes: int = 6,
     n_tables: int = 8,
-    dim: int = 64,
 ) -> DataFrame:
     """Bucketed ANN with OR-construction: ``n_tables`` independent
     sign-signature tables; a candidate pair needs a full match in ANY
     table.  Recall dial = (n_planes down, n_tables up); cost dial = the
     reverse.  Same output shape as ``cosine_topk`` but approximate.
 
-    The planes are ``portable_int_planes(dim, n_planes, n_tables)``, so
-    the buckets are exact and reproducible in any engine (q30's oracle
-    recomputes them in DuckDB)."""
-    tables = portable_int_planes(dim, n_planes, n_tables)
+    The planes are ``portable_int_planes(width, n_planes, n_tables)`` for
+    the vectors' own width, so the buckets are exact and reproducible in
+    any engine (q30's oracle recomputes them in DuckDB)."""
 
     def with_buckets(df: DataFrame, idc: str, alias: str) -> DataFrame:
-        sigs = _int_signatures_arrow(df, id_col, vec_col, tables)
+        sigs = _int_signatures_arrow(df, id_col, vec_col, n_planes, n_tables)
         return sigs.select(
             F.col("id").alias(idc),
             F.col("vec").alias(alias),

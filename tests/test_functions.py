@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import math
 
+import pytest
+
 from ocrd_odem_spark.functions import dedup, multimodal, similarity, textstats
 
 DOCS = [
@@ -297,7 +299,9 @@ def test_megapixel_histogram(spark):
 
 def test_cosine_near_duplicates(spark):
     """Planted near-duplicates are found via bucket collisions; the pair
-    set never contains self-pairs or sub-threshold similarity."""
+    set never contains self-pairs or sub-threshold similarity.  Planes
+    follow the vector width (4-dim twins match brute force in both LSH
+    operators), and ragged vectors raise."""
     import math
     import random
 
@@ -315,6 +319,29 @@ def test_cosine_near_duplicates(spark):
     assert (0, 1) in pairs and pairs[(0, 1)] > 0.99
     for (a, b), sim in pairs.items():
         assert a < b and sim >= 0.9
+
+    # the plane width follows the vectors: on three 4-dim twin pairs both
+    # LSH operators agree with brute force
+    twins = [
+        (0, [1.0, 0.01, 0.0, 0.0]), (1, [1.0, 0.02, 0.01, 0.0]),
+        (2, [0.0, 1.0, 0.01, 0.0]), (3, [0.01, 1.0, 0.0, 0.02]),
+        (4, [0.0, 0.0, 1.0, 0.01]), (5, [0.0, 0.01, 1.0, 0.03]),
+    ]
+    emb4 = spark.createDataFrame(twins, "vec_id long, embedding array<float>")
+    exact = sorted(map(tuple, similarity.cosine_topk(emb4, emb4, k=1).collect()))
+    assert [(q, n) for q, n, _, _ in exact] == [
+        (0, 1), (1, 0), (2, 3), (3, 2), (4, 5), (5, 4)
+    ]
+    lsh = similarity.lsh_cosine_topk(emb4, emb4, k=1).collect()
+    assert sorted(map(tuple, lsh)) == exact
+    dups = similarity.cosine_near_duplicates(emb4, threshold=0.99).collect()
+    assert sorted(map(tuple, dups)) == [(q, n, sim) for q, n, sim, _ in exact if q < n]
+
+    ragged = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [1.0, 0.0, 0.0])], "vec_id long, embedding array<float>"
+    ).coalesce(1)
+    with pytest.raises(Exception, match="one vector width"):
+        similarity.cosine_near_duplicates(ragged).collect()
 
 
 def test_train_centroids_deterministic_and_exact(spark):
