@@ -3,12 +3,12 @@
 Design: the whole extract path is NARROW per-document work over the nested
 ``spans`` array — sort, token post-process, empty-line drop, optional
 de-hyphenation, re-offset — run as one columnar ``mapInArrow`` stage that
-executes the oracle's line functions (``extract_arrow``).  The only wide
+executes the oracle's line functions (``extract``).  The only wide
 operations are broadcast joins against the (small) document relevance and
 page-blacklist dimensions.  At 100 TB this means: zero shuffles of the
 fact table, linear scaling with input splits (an input smaller than one
 split reaches the Python stage as one task per core, see
-``extract_arrow``), and skew from oversized "book" documents bounded by
+``extract``), and skew from oversized "book" documents bounded by
 single-row cost rather than hot shuffle keys.
 
 Stage order reproduces the reference (``ocr_files.py:62-91``): blacklist
@@ -52,10 +52,11 @@ def extract(
 ) -> DataFrame:
     """Full extraction plan: (doc_id, spans) -> (doc_id, spans[, metrics]).
 
-    One columnar ``mapInArrow`` stage (``extract_arrow``) runs the oracle's
-    line functions; per doc the output equals ``oracle.extract_document``
-    (``extract_document_dehyphenated`` with ``dehyphenate``) over the spans
-    that survive the metadata filters below.
+    One columnar ``mapInArrow`` stage runs the oracle's line functions
+    over each batch's flat columnar buffers; per doc the output equals
+    ``oracle.extract_document`` (``extract_document_dehyphenated`` with
+    ``dehyphenate``) over the spans that survive the metadata filters
+    below.
 
     * ``page_meta``: optional page dimension with ``label`` / ``log_types``;
       blacklisted pages (Colorchecker/Leerseite labels, cover_* log types)
@@ -83,25 +84,6 @@ def extract(
     ``ValueError``.  It stays only because the benchmark workloads still
     pass ``mode="arrow"``: removing the keyword would make those calls
     raise ``TypeError``.
-    """
-    if mode != "arrow":
-        raise ValueError(f"unknown mode {mode!r}: only 'arrow' is supported")
-    return extract_arrow(
-        docs, page_meta, doc_meta, dehyphenate, with_metrics, steps
-    )
-
-
-def extract_arrow(
-    docs: DataFrame,
-    page_meta: DataFrame | None = None,
-    doc_meta: DataFrame | None = None,
-    dehyphenate: bool = False,
-    with_metrics: bool = False,
-    steps=EXTRACT_STEPS,
-) -> DataFrame:
-    """Arrow-batched extraction: ``mapInArrow`` running the exact oracle
-    line functions over each batch's flat columnar buffers (see
-    ``extract`` for the arguments).
 
     Why Arrow and not Catalyst expressions: Spark's higher-order array
     functions are CodegenFallback (interpreted, per-element object churn),
@@ -149,6 +131,9 @@ def extract_arrow(
     22k-span batch of ``gen.make_corpus`` the function takes ~60-75 ms on
     4 vCPUs, about 45 ms of which is ``postprocess_line_tokens`` itself.
     """
+    if mode != "arrow":
+        raise ValueError(f"unknown mode {mode!r}: only 'arrow' is supported")
+
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -338,7 +323,7 @@ def extract_arrow(
 def _python_sized(df: DataFrame) -> DataFrame:
     """``df`` coalesced to ``defaultParallelism`` tasks when it is read
     straight from its source and its estimated size is at most one scan
-    split; otherwise ``df`` itself (see ``extract_arrow``).  An unknown
+    split; otherwise ``df`` itself (see ``extract``).  An unknown
     size is estimated at ``Long.MaxValue`` and so never coalesced."""
     jdf = df._jdf
     node = jdf.queryExecution().optimizedPlan()
