@@ -2,8 +2,7 @@
 
 Reimplements the reference's OCR-format line extraction
 (``lib/odem/ocr/ocr_model.py``) over byte payloads inside an Arrow-batched
-``mapInPandas`` stage — the only Python in the engine, and it is batched,
-never per-row-interpreted by Spark:
+``mapInPandas`` stage, one Python call per batch rather than per row:
 
 * namespace sniffing across ALTO v3/v4 and PAGE 2013/2019
   (``ocr_model.py:16-20,175-177``),
