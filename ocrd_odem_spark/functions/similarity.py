@@ -169,9 +169,7 @@ def _plane_array(dim: int, n_planes: int, n_tables: int):
     (n_tables, n_planes, dim), built once per width in each Python worker."""
     import numpy as np
 
-    planes = np.asarray(
-        portable_int_planes(dim, n_planes, n_tables), dtype=np.float64
-    ).reshape(n_tables, n_planes, dim)
+    planes = np.asarray(portable_int_planes(dim, n_planes, n_tables), dtype=np.float64)
     planes.setflags(write=False)
     return planes
 
