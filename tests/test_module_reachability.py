@@ -120,7 +120,7 @@ KEEP_FUNCTIONS = {
     "ocrd_odem_spark.functions.jpegdec.decode_jpeg_gray": _DECODER,
     "ocrd_odem_spark.plans.queries.retired_relational": (
         "the oracle-verified single forms of q10/q12 that "
-        "tests/test_oracle_parity.py parametrizes over; the driver registry "
+        "tests/test_oracle_parity.py parametrizes over; the query registry "
         "caps at 50 queries"
     ),
 }
