@@ -48,25 +48,18 @@ def minhash_signature(shingles: Column, num_hashes: int = 64) -> Column:
 
 
 def md5_minhash_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_seeds: int = 8,
-    shingle_k: int = 3,
+    df: DataFrame, n_seeds: int = 8, shingle_k: int = 3
 ) -> DataFrame:
-    """Portable md5-min MinHash signatures (id, s0..s{n-1}) as ONE Arrow
-    stage — the vectorised form of the q25 SQL tier.
+    """Portable md5-min MinHash signatures (doc_id, s0..s{n-1}) as ONE
+    Arrow stage.
 
-    Bit-exact mirror of the expression form: shingles are the k-token
+    Bit-exact mirror of q25's DuckDB SQL: shingles are the k-token
     windows of ``split(text, ' ')`` (``max(n_tokens - k + 1, 1)`` of them,
     the tail window shorter when the line has < k tokens), each seed's
     signature is ``min(substr(md5('{seed}|' || shingle), 1, 16))`` over the
-    DISTINCT shingles.  hashlib.md5 over UTF-8 equals Spark/DuckDB md5;
-    hex-string min is bytewise on ASCII, identical in all three engines.
-    The interpreted HOF form evaluated slice+array_join per window and
-    md5 per (seed, shingle) inside per-element lambdas (~13 s at the
-    driver's sf1.0); the loop form is ~8x faster (guide §4.2).
-    A null text yields null signatures, like the expression form.
+    DISTINCT shingles.  hashlib.md5 over UTF-8 equals DuckDB's md5, and
+    hex-string min is bytewise on ASCII in both.  A null text yields null
+    signatures.
     """
     import pandas as pd
 
@@ -80,7 +73,7 @@ def md5_minhash_signatures(
         for pdf in batches:
             out_ids = []
             out_sigs: list[list] = [[] for _ in range(n_seeds)]
-            for did, text in zip(pdf[id_col], pdf[text_col]):
+            for did, text in zip(pdf["doc_id"], pdf["text"]):
                 out_ids.append(did)
                 if text is None:
                     for s in range(n_seeds):
@@ -96,20 +89,14 @@ def md5_minhash_signatures(
                         min(md5(pre + e).hexdigest()[:16] for e in enc)
                     )
             yield pd.DataFrame(
-                {id_col: out_ids, **{c: out_sigs[i] for i, c in enumerate(cols)}}
+                {"doc_id": out_ids, **{c: out_sigs[i] for i, c in enumerate(cols)}}
             )
 
-    schema = f"{id_col} long, " + ", ".join(f"{c} string" for c in cols)
-    return df.select(id_col, text_col).mapInPandas(run, schema=schema)
+    schema = "doc_id long, " + ", ".join(f"{c} string" for c in cols)
+    return df.select("doc_id", "text").mapInPandas(run, schema=schema)
 
 
-def exact_duplicates(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_group: int = 64,
-    with_stats: bool = False,
-):
+def exact_duplicates(df: DataFrame, max_group: int = 64, with_stats: bool = False):
     """(text_hash, n_docs, keep_id, all_ids) for every duplicated text.
 
     ``n_docs`` is the TRUE group size; ``all_ids`` is a bounded sample — the
@@ -131,7 +118,7 @@ def exact_duplicates(
     from pyspark.sql import Window
 
     hashed = df.select(
-        F.md5(F.col(text_col)).alias("text_hash"), F.col(id_col).alias("_id")
+        F.md5(F.col("text")).alias("text_hash"), F.col("doc_id").alias("_id")
     )
     w = Window.partitionBy("text_hash").orderBy("_id")
     w_full = Window.partitionBy("text_hash")
@@ -266,14 +253,11 @@ def jaccard_verify(
 ) -> DataFrame:
     """True n-gram Jaccard on candidate pairs; keeps pairs >= threshold.
 
-    r6 (guide §4.2): shingling + set intersection runs as ONE Arrow stage
-    over the attached pair rows instead of the interpreted
-    ``token_shingles`` HOF (per-window slice/array_join lambdas) plus
-    ``array_intersect``/``array_union`` over string arrays.  Exact same
-    values: the Python shingle set mirrors the expression tier string for
-    string (same construction as ``md5_minhash_signatures``), the ratio is
-    one IEEE division either way, and rounding stays JVM-side so
-    ``F.round`` semantics (HALF_UP) are untouched.
+    Shingling and set intersection run as ONE Arrow stage over the
+    attached pair rows.  The Python shingle set mirrors q49's DuckDB SQL
+    string for string (same construction as ``md5_minhash_signatures``),
+    the ratio is one IEEE division in both, and rounding stays JVM-side
+    (``F.round``, HALF_UP).
     """
     import pandas as pd
 
@@ -311,7 +295,7 @@ def jaccard_verify(
     )
 
 
-def _simhash64_md5_arrow(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+def _simhash64_md5_arrow(df: DataFrame) -> DataFrame:
     """(id, sh): the 64-bit SimHash of each document's distinct whitespace
     tokens, as ONE Arrow stage of per-document numpy bit counting.
 
@@ -320,7 +304,7 @@ def _simhash64_md5_arrow(df: DataFrame, text_col: str, id_col: str) -> DataFrame
     ``('0x' || substr(md5(tok), 1, 15))::BIGINT``; bit b of ``sh`` is set
     when more tokens have bit b set than not.  Votes and the sign threshold
     are integer arithmetic, so q29's DuckDB oracle reproduces every ``sh``
-    exactly.  ``id`` keeps the type of ``id_col``; a null text produces no
+    exactly.  ``id`` keeps the type of ``doc_id``; a null text produces no
     row.
     """
     import pandas as pd
@@ -332,9 +316,9 @@ def _simhash64_md5_arrow(df: DataFrame, text_col: str, id_col: str) -> DataFrame
         shifts = np.arange(64, dtype=np.int64)
         weights = np.uint64(1) << np.arange(64, dtype=np.uint64)
         for pdf in batches:
-            pdf = pdf[pdf[text_col].notna()]
+            pdf = pdf[pdf["text"].notna()]
             sh_out = []
-            for text in pdf[text_col]:
+            for text in pdf["text"]:
                 toks = set(text.split(" "))
                 h = np.fromiter(
                     (
@@ -355,21 +339,17 @@ def _simhash64_md5_arrow(df: DataFrame, text_col: str, id_col: str) -> DataFrame
                 sh_out.append(sh)
             yield pd.DataFrame(
                 {
-                    "id": pdf[id_col].to_numpy(),
+                    "id": pdf["doc_id"].to_numpy(),
                     "sh": np.asarray(sh_out, dtype=np.int64),
                 }
             )
 
-    schema = f"id {df.schema[id_col].dataType.simpleString()}, sh long"
-    return df.select(id_col, text_col).mapInPandas(run, schema=schema)
+    schema = f"id {df.schema['doc_id'].dataType.simpleString()}, sh long"
+    return df.select("doc_id", "text").mapInPandas(run, schema=schema)
 
 
 def simhash_near_duplicates(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-    block_bits: int = 16,
+    df: DataFrame, max_hamming: int = 3, block_bits: int = 16
 ) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance <= max_hamming.
 
@@ -391,7 +371,7 @@ def simhash_near_duplicates(
     # pass, both expansion joins and the same-cluster self-join, and the
     # simhash computation would otherwise recompute per consumer (the
     # DataFrame mirror of 'write the signature table first').
-    sim = _simhash64_md5_arrow(df, text_col, id_col).localCheckpoint(eager=True)
+    sim = _simhash64_md5_arrow(df).localCheckpoint(eager=True)
 
     # r6 restructure (guide §2.4/§2.5): the old shape blocked the per-DOC
     # rows and self-joined them — near-dup clusters share identical
@@ -521,12 +501,7 @@ def simhash_near_duplicates(
     return cross.unionByName(same)
 
 
-def neardup_components(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_rounds: int = 25,
-) -> DataFrame:
+def neardup_components(pairs: DataFrame, max_rounds: int = 25) -> DataFrame:
     """Connected components over near-duplicate candidate pairs:
     ``(node, component)`` for every node appearing in ``pairs``, where
     ``component`` is the minimum id reachable through the pair graph.
@@ -558,8 +533,8 @@ def neardup_components(
     exactly (`lib/odem/commons.py` record states), not transitively.
     """
     edges = (
-        pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
-        .union(pairs.select(F.col(id_b).alias("u"), F.col(id_a).alias("v")))
+        pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
+        .union(pairs.select(F.col("id_b").alias("u"), F.col("id_a").alias("v")))
         .distinct()
         .localCheckpoint(eager=True)
     )
@@ -630,18 +605,14 @@ def neardup_components(
 
 
 def dedup_keep_canonical(
-    docs: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    id_a: str = "id_a",
-    id_b: str = "id_b",
+    docs: DataFrame, pairs: DataFrame, id_col: str = "doc_id"
 ) -> DataFrame:
     """Annotate ``docs`` with its near-dup ``component`` and an
     ``is_duplicate`` flag: the minimum id of each connected component is
     the canonical survivor; docs in no pair are their own (singleton)
     component.  The docs table joins the tiny ``(node, component)``
     relation — document payloads never shuffle beyond that hash join."""
-    comp = neardup_components(pairs, id_a=id_a, id_b=id_b)
+    comp = neardup_components(pairs)
     joined = docs.join(
         comp, docs[id_col] == comp["node"], "left"
     ).drop("node")

@@ -113,8 +113,6 @@ def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact top-k: (query_id, neighbor_id, sim, rank); excludes self-match.
 
@@ -122,9 +120,11 @@ def cosine_topk(
     even under floating-point summation-order differences.
     """
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv")
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("_cv")
     )
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv"))
+    q = queries.select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("_qv")
+    )
     paired = c.crossJoin(F.broadcast(q)).where(
         F.col("neighbor_id") != F.col("query_id")
     ).select("query_id", "neighbor_id", "_cv", "_qv")
@@ -141,11 +141,11 @@ def cosine_topk(
 
 
 def portable_int_planes(
-    dim: int, n_planes: int, n_tables: int, key: str = "ann"
+    dim: int, n_planes: int, n_tables: int
 ) -> list[list[list[int]]]:
     """Deterministic INTEGER hyperplane weights in [-9, 9], derived from
     md5 so any SQL engine reproduces them bit-for-bit:
-    ``('0x' || substr(md5('{key}_t_p_d'), 1, 13))::BIGINT % 19 - 9``.
+    ``('0x' || substr(md5('ann_t_p_d'), 1, 13))::BIGINT % 19 - 9``.
 
     With vectors quantized to ``floor(v * 2^20)`` int64, the plane dot
     products stay integers < 2^53, so the sign computation is EXACT and
@@ -154,7 +154,7 @@ def portable_int_planes(
     import hashlib
 
     def w(t: int, p: int, d: int) -> int:
-        h = hashlib.md5(f"{key}_{t}_{p}_{d}".encode()).hexdigest()[:13]
+        h = hashlib.md5(f"ann_{t}_{p}_{d}".encode()).hexdigest()[:13]
         return int(h, 16) % 19 - 9
 
     return [
@@ -174,14 +174,12 @@ def _plane_array(dim: int, n_planes: int, n_tables: int):
     return planes
 
 
-def _int_signatures_arrow(
-    df: DataFrame, id_col: str, vec_col: str, n_planes: int, n_tables: int
-) -> DataFrame:
+def _int_signatures_arrow(df: DataFrame, n_planes: int) -> DataFrame:
     """Signature stage over integer planes: quantize to floor(v * 2^20) and
     take exact integer dot-product signs against
-    ``portable_int_planes(width, n_planes, n_tables)``, ``width`` being the
+    ``portable_int_planes(width, n_planes, 8)``, ``width`` being the
     length of the batch's vectors; one numpy matmul per Arrow batch per
-    table.  Vectors of different lengths in one batch raise ``ValueError``."""
+    table, 8 tables.  Vectors of different lengths in one batch raise ``ValueError``."""
     import numpy as np
     import pandas as pd
 
@@ -192,38 +190,33 @@ def _int_signatures_arrow(
             if len(pdf) == 0:
                 yield pd.DataFrame({"id": [], "vec": [], "sigs": []})
                 continue
-            vals = pdf[vec_col].tolist()
+            vals = pdf["embedding"].tolist()
             widths = set(map(len, vals))
             if len(widths) > 1:
                 raise ValueError(
-                    f"{vec_col}: vectors of lengths {sorted(widths)} in one "
+                    f"embedding: vectors of lengths {sorted(widths)} in one "
                     "batch; LSH signatures need one vector width"
                 )
             vecs = np.floor(np.asarray(vals, dtype=np.float64) * 1048576.0)
-            planes = _plane_array(widths.pop(), n_planes, n_tables)
+            planes = _plane_array(widths.pop(), n_planes, 8)
             sigs = [
-                ((vecs @ planes[t].T >= 0).astype(np.int64) * weights).sum(axis=1)
-                for t in range(n_tables)
+                ((vecs @ plane.T >= 0).astype(np.int64) * weights).sum(axis=1)
+                for plane in planes
             ]
             yield pd.DataFrame(
                 {
-                    "id": pdf[id_col],
-                    "vec": pdf[vec_col],
+                    "id": pdf["vec_id"],
+                    "vec": pdf["embedding"],
                     "sigs": list(map(list, zip(*sigs))),
                 }
             )
 
-    return df.select(id_col, vec_col).mapInPandas(
+    return df.select("vec_id", "embedding").mapInPandas(
         run, schema="id long, vec array<float>, sigs array<long>"
     )
 
 
-def cosine_near_duplicates(
-    corpus: DataFrame,
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def cosine_near_duplicates(corpus: DataFrame, threshold: float = 0.95) -> DataFrame:
     """Embedding-cosine near-duplicate PAIRS (id_a < id_b, sim >= threshold).
 
     Scale path: candidates come from the sign-signature bucket equi-join
@@ -232,7 +225,7 @@ def cosine_near_duplicates(
     cosine runs only on bucket collisions.  The buckets come from 8 tables
     of 6 integer planes as wide as the vectors (``portable_int_planes``),
     so they are exactly reproducible cross-engine."""
-    sigs = _int_signatures_arrow(corpus, id_col, vec_col, 6, 8)
+    sigs = _int_signatures_arrow(corpus, 6)
     # r6 restructure (guide §2.4/§4.2): the old shape was a (t, sig)
     # self-join -> 25M-row ``distinct`` exchange -> two attach joins -> one
     # cosine per pair (~40 s at the driver's sf1.0).  Now each (table,
@@ -327,22 +320,19 @@ def lsh_cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_planes: int = 6,
-    n_tables: int = 8,
 ) -> DataFrame:
-    """Bucketed ANN with OR-construction: ``n_tables`` independent
-    sign-signature tables; a candidate pair needs a full match in ANY
-    table.  Recall dial = (n_planes down, n_tables up); cost dial = the
-    reverse.  Same output shape as ``cosine_topk`` but approximate.
+    """Bucketed ANN with OR-construction: 8 independent sign-signature
+    tables; a candidate pair needs a full match in ANY table.  Recall
+    dial = ``n_planes`` down; cost dial = the reverse.  Same output shape
+    as ``cosine_topk`` but approximate.
 
-    The planes are ``portable_int_planes(width, n_planes, n_tables)`` for
+    The planes are ``portable_int_planes(width, n_planes, 8)`` for
     the vectors' own width, so the buckets are exact and reproducible in
     any engine (q30's oracle recomputes them in DuckDB)."""
 
     def with_buckets(df: DataFrame, idc: str, alias: str) -> DataFrame:
-        sigs = _int_signatures_arrow(df, id_col, vec_col, n_planes, n_tables)
+        sigs = _int_signatures_arrow(df, n_planes)
         return sigs.select(
             F.col("id").alias(idc),
             F.col("vec").alias(alias),
@@ -383,11 +373,7 @@ def _quantized(vec: Column) -> Column:
 
 
 def _ranked_cells_arrow(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    centroids: list[tuple[int, list[float]]],
-    n_keep: int,
+    df: DataFrame, centroids: list[tuple[int, list[float]]], n_keep: int
 ) -> DataFrame:
     """(id, vec, cids) with the first ``n_keep`` centroid ids ranked by
     quantized inner product DESC (tie -> lowest cid): vectors and
@@ -413,19 +399,19 @@ def _ranked_cells_arrow(
                 yield pd.DataFrame({"id": [], "vec": [], "cids": []})
                 continue
             V = np.floor(
-                np.asarray(pdf[vec_col].tolist(), dtype=np.float64) * _Q_SCALE
+                np.asarray(pdf["embedding"].tolist(), dtype=np.float64) * _Q_SCALE
             ).astype(np.int64)
             dots = V @ C.T  # exact: |vq| < 2^20, dim 64 -> |dot| < 2^46
             order = np.argsort(-dots, axis=1, kind="stable")[:, :n_keep]
             yield pd.DataFrame(
                 {
-                    "id": pdf[id_col],
-                    "vec": pdf[vec_col],
+                    "id": pdf["vec_id"],
+                    "vec": pdf["embedding"],
                     "cids": [list(map(int, cid_arr[row])) for row in order],
                 }
             )
 
-    return df.select(id_col, vec_col).mapInPandas(
+    return df.select("vec_id", "embedding").mapInPandas(
         run, schema="id long, vec array<float>, cids array<int>"
     )
 
@@ -436,8 +422,6 @@ def ivf_topk(
     centroids: list[tuple[int, list[float]]],
     k: int = 5,
     n_probe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF ANN: corpus vectors are assigned to their nearest coarse
     centroid (a shuffle-free projection); each query probes its
@@ -449,13 +433,13 @@ def ivf_topk(
     """
     # the corpus/query cell assignment is a narrow projection
     # (mapInPandas adds no exchange)
-    ranked_c = _ranked_cells_arrow(corpus, id_col, vec_col, centroids, 1)
+    ranked_c = _ranked_cells_arrow(corpus, centroids, 1)
     c = ranked_c.select(
         F.col("id").alias("neighbor_id"),
         F.col("vec").alias("_cv"),
         F.get("cids", 0).alias("cid"),
     )
-    ranked_q = _ranked_cells_arrow(queries, id_col, vec_col, centroids, n_probe)
+    ranked_q = _ranked_cells_arrow(queries, centroids, n_probe)
     q = ranked_q.select(
         F.col("id").alias("query_id"),
         F.col("vec").alias("_qv"),
@@ -479,8 +463,6 @@ def train_centroids(
     df: DataFrame,
     k: int = 8,
     n_iter: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     sample_mod: int | None = None,
 ) -> list[tuple[int, list[float]]]:
     """Offline coarse-quantizer trainer: driver-coordinated Lloyd
@@ -521,7 +503,7 @@ def train_centroids(
     if k < 1 or n_iter < 0:
         raise ValueError("k >= 1 and n_iter >= 0 required")
     base = df.select(
-        F.col(id_col).alias("_id"), _quantized(F.col(vec_col)).alias("vq")
+        F.col("vec_id").alias("_id"), _quantized(F.col("embedding")).alias("vq")
     )
     if sample_mod is not None:
         base = base.where(F.pmod(F.xxhash64(F.col("_id")), F.lit(sample_mod)) == 0)

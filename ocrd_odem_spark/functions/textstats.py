@@ -48,16 +48,32 @@ def language_scores(text: Column) -> Column:
     )
 
 
-def predict_language(text: Column, default: str = "und") -> Column:
-    """argmax language with deterministic tie-break (lexicographic)."""
+def predict_language(text: Column) -> Column:
+    """argmax language with deterministic tie-break (lexicographic); 'und'
+    when no stopword hits."""
     scores = language_scores(text)
-    pred = F.lit(default)
+    pred = F.lit("und")
     best = F.lit(0).cast("long")
     for lang in sorted(_STOPWORDS):
         better = scores[lang] > best
         pred = F.when(better, F.lit(lang)).otherwise(pred)
         best = F.when(better, scores[lang]).otherwise(best)
     return pred
+
+
+def portable_round(x: Column, k: int) -> Column:
+    """``round(x, k)`` by DuckDB's rule for doubles: scale by ``10**k``,
+    round half away from zero, unscale.  Spark's ``F.round`` instead rounds
+    the double's shortest decimal string HALF_UP, so a product such as
+    ``0.14805`` (stored as ``0.148049999…``, scaled ``1480.4999999999998``)
+    rounds up in Spark and down in DuckDB.  The fractional part
+    ``scaled - floor(scaled)`` is exact in binary, so the half-way test
+    reads the scaled double itself."""
+    scaled = x.cast("double") * F.lit(float(10**k))
+    low = F.floor(scaled)
+    frac = scaled - low
+    up = (frac > 0.5) | ((frac == 0.5) & (scaled > 0))
+    return F.when(up, low + 1).otherwise(low) / F.lit(float(10**k))
 
 
 def quality_features(text: Column) -> Column:
@@ -72,9 +88,9 @@ def quality_features(text: Column) -> Column:
     return F.struct(
         n_chars.cast("long").alias("n_chars"),
         n_tok.alias("n_tokens"),
-        F.round(n_packed / F.greatest(n_tok, F.lit(1)), 4).alias("mean_token_len"),
-        F.round(n_punct / safe, 4).alias("punct_ratio"),
-        F.round(n_digit / safe, 4).alias("digit_ratio"),
+        portable_round(n_packed / F.greatest(n_tok, F.lit(1)), 4).alias("mean_token_len"),
+        portable_round(n_punct / safe, 4).alias("punct_ratio"),
+        portable_round(n_digit / safe, 4).alias("digit_ratio"),
     )
 
 
@@ -83,7 +99,7 @@ def quality_score(text: Column) -> Column:
     feats = quality_features(text)
     length_term = F.least(F.lit(1.0), feats["n_tokens"] / F.lit(100.0))
     noise = feats["punct_ratio"] + feats["digit_ratio"]
-    return F.round(
+    return portable_round(
         F.greatest(F.lit(0.0), length_term * (F.lit(1.0) - noise)), 4
     )
 
@@ -94,9 +110,9 @@ def fingerprint(text: Column) -> Column:
     return F.md5(normalized)
 
 
-def document_profile(df: DataFrame, text_col: str = "text") -> DataFrame:
+def document_profile(df: DataFrame) -> DataFrame:
     """One profiling row per document (the curation feature table)."""
-    text = F.col(text_col)
+    text = F.col("text")
     feats = quality_features(text)
     return df.select(
         "doc_id",

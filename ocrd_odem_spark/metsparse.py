@@ -165,7 +165,7 @@ def parse_mets(payload: bytes | str, file_group: str = "MAX") -> dict:
     }
 
 
-def shred_mets(df, payload_col: str = "mets_xml", file_group: str = "MAX"):
+def shred_mets(df, file_group: str = "MAX"):
     """(doc_id, mets_xml) -> (doc_meta_df, page_meta_df), error channels.
 
     Two Arrow-batched passes over the same input (Catalyst caches the scan;
@@ -178,7 +178,7 @@ def shred_mets(df, payload_col: str = "mets_xml", file_group: str = "MAX"):
             rows = []
             for rec in pdf.itertuples(index=False):
                 try:
-                    parsed = parse_mets(getattr(rec, payload_col), file_group)
+                    parsed = parse_mets(rec.mets_xml, file_group)
                     d = parsed["doc"]
                     rows.append(
                         (rec.doc_id, d["mets_type"], d["pica_type"],
@@ -197,7 +197,7 @@ def shred_mets(df, payload_col: str = "mets_xml", file_group: str = "MAX"):
             rows = []
             for rec in pdf.itertuples(index=False):
                 try:
-                    for p in parse_mets(getattr(rec, payload_col), file_group)["pages"]:
+                    for p in parse_mets(rec.mets_xml, file_group)["pages"]:
                         rows.append(
                             (rec.doc_id, p["media_ref"], p["phys_id"],
                              p["label"], p["log_types"], p["link_error"])

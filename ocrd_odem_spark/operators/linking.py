@@ -34,9 +34,7 @@ def pages_with_log_types(page_meta: DataFrame) -> DataFrame:
     )
 
 
-def link_ocr_to_media(
-    ocr_files: DataFrame, media: DataFrame, broadcast_media: bool = False
-) -> DataFrame:
+def link_ocr_to_media(ocr_files: DataFrame, media: DataFrame) -> DataFrame:
     """J3: link OCR results to media by stem containment, first match wins.
 
     ``ocr_files``: (doc_id, ocr_stem); ``media``: (doc_id, media_ref,
@@ -46,13 +44,9 @@ def link_ocr_to_media(
 
     The join is keyed on ``doc_id`` (equi-join; the containment is a
     post-filter), so the media table — which grows WITH the corpus — is
-    not broadcast by default: AQE broadcasts small inputs on its own and
-    shuffle-joins big ones.  ``broadcast_media=True`` opts in when the
-    caller knows media is a bounded dimension (e.g. one document's file
-    group).
+    never force-broadcast: AQE broadcasts small inputs on its own and
+    shuffle-joins big ones.
     """
-    if broadcast_media:
-        media = F.broadcast(media)
     joined = ocr_files.join(media, "doc_id").where(
         F.col("href").contains(F.col("ocr_stem"))
     )
@@ -103,19 +97,17 @@ def loss_set(candidates: DataFrame, results: DataFrame) -> DataFrame:
     )
 
 
-def latest_agent(
-    agents: DataFrame, agent_col: str = "agent", ts_col: str = "ts"
-) -> DataFrame:
+def latest_agent(agents: DataFrame) -> DataFrame:
     """O5: newest agent entry per document.
 
     The reference sorts METS agent notes by date and reads the LATEST
     Derivans entry (``mets.py:483-489``); here that is one window pass —
     ties on timestamp break deterministically by agent name."""
-    w = Window.partitionBy("doc_id").orderBy(F.desc(ts_col), F.desc(agent_col))
+    w = Window.partitionBy("doc_id").orderBy(F.desc("ts"), F.desc("agent"))
     return (
         agents.withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)
-        .select("doc_id", agent_col, ts_col)
+        .select("doc_id", "agent", "ts")
     )
 
 
@@ -131,9 +123,7 @@ def resolve_identifier(doc_meta: DataFrame) -> DataFrame:
     )
 
 
-def language_model_config(
-    doc_meta: DataFrame, model_map: dict[str, str], default: str | None = "gt4hist"
-) -> DataFrame:
+def language_model_config(doc_meta: DataFrame, model_map: dict[str, str]) -> DataFrame:
     """J4: language list -> OCR model chain via broadcast map lookup,
     '+'-composed in language order (reference ``odem_process_impl.py:173-254``).
 
@@ -141,17 +131,16 @@ def language_model_config(
     reference raises ``ODEMModelMissingException`` for a language without a
     model (``odem_process_impl.py:193``), so rows with unknown languages get
     a ``model_error`` listing them (J2 pattern) for the caller to route to
-    the fail path.  ``default`` (when not None) is still applied so the
-    config column stays usable for callers that WANT the legacy fallback —
-    but the error column makes the divergence visible either way.
+    the fail path.  ``model_config`` still falls back to ``gt4hist`` for
+    an unmapped language, so the config column stays usable, but the error
+    column makes the divergence visible.
     """
     mapping = F.create_map(
         *[F.lit(x) for kv in model_map.items() for x in kv]
     )
     unmapped = F.filter(F.col("languages"), lambda lang: mapping[lang].isNull())
-    fallback = F.lit(default) if default is not None else F.lit(None).cast("string")
     models = F.transform(
-        F.col("languages"), lambda lang: F.coalesce(mapping[lang], fallback)
+        F.col("languages"), lambda lang: F.coalesce(mapping[lang], F.lit("gt4hist"))
     )
     return doc_meta.select(
         "doc_id",

@@ -3,7 +3,7 @@
 Reproduces the reference's ``textlines2data`` dataset construction
 (``lib/odem/ocr/ocr_pipeline.py:402-422``): per page, drop empty lines,
 de-hyphenate wraps, scrub characters (``_sanitize_chars``,
-``ocr_pipeline.py:450-467``), then split into dense (len > minlen) and
+``ocr_pipeline.py:450-467``), then split into dense (len > 2) and
 sparse lines.  Estimation binning follows ``analyze``
 (``ocr_pipeline.py:663-682``): mean + 5 fixed-width bins of step 15 with the
 last bin clamping.
@@ -19,9 +19,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 
-def page_text_stats_flat(flat: DataFrame, minlen: int = 2) -> DataFrame:
+def page_text_stats_flat(flat: DataFrame) -> DataFrame:
     """A3/A4 dataset: one row per page with the reference's
-    ``(file_string, n_lines, n_normalized, n_sparse, n_dense)`` tuple.
+    ``(file_string, n_lines, n_normalized, n_sparse, n_dense)`` tuple,
+    dense lines being those longer than 2 characters.
 
     Input: FLAT text spans ``(doc_id, media_ref, offset, text)``; nested
     documents get there with ``pipeline.to_flat`` and a ``kind == 'text'``
@@ -47,7 +48,7 @@ def page_text_stats_flat(flat: DataFrame, minlen: int = 2) -> DataFrame:
                 lines = [
                     it["t"] for it in sorted(rec.items, key=lambda x: x["o"])
                 ]
-                st = textlines_to_data(lines, minlen)
+                st = textlines_to_data(lines)
                 rows.append(
                     (rec.doc_id, rec.media_ref, st.file_string, st.n_lines,
                      st.n_normalized, st.n_sparse, st.n_dense)
@@ -82,9 +83,7 @@ def quality_ratio(n_words: Column, n_errs: Column) -> Column:
 
 
 def estimate_page_quality(
-    page_stats: DataFrame,
-    known_words: DataFrame | None = None,
-    broadcast_vocab: bool = False,
+    page_stats: DataFrame, known_words: DataFrame | None = None
 ) -> DataFrame:
     """A4: per-page quality ratio ``(n_words - n_errs) / n_words * 100``
     rounded to 3 (reference ``StepEstimateOCR.postprocess_response``,
@@ -98,12 +97,10 @@ def estimate_page_quality(
     keeps the ratio math and binning exactly reproducible.
 
     A corpus vocabulary is UNBOUNDED (it grows with the corpus — the q42
-    query builds it from 10% of all documents), so it is NOT broadcast by
-    default: the tok-join is left to Catalyst/AQE, which broadcasts small
+    query builds it from 10% of all documents), so it is never force-
+    broadcast: the tok-join is left to Catalyst/AQE, which broadcasts small
     vocabularies on its own (spark.sql.autoBroadcastJoinThreshold) and
-    shuffle-joins big ones instead of OOM-ing the driver.  Pass
-    ``broadcast_vocab=True`` only when the caller KNOWS the vocabulary is a
-    bounded dimension (e.g. a fixed dictionary).
+    shuffle-joins big ones instead of OOM-ing the driver.
     """
     toks = F.filter(F.split(F.col("file_string"), " "), lambda t: t != "")
     pages = page_stats.select(
@@ -115,11 +112,8 @@ def estimate_page_quality(
         # per-page aggregation — an anti-join against the vocabulary drops
         # every known token before the exchange, so the groupBy shuffles
         # the (usually tiny) miss set instead of one row per token.  The
-        # join strategy still belongs to AQE (no forced broadcast unless
-        # the caller opts in); n_errs values are unchanged.
+        # join strategy still belongs to AQE; n_errs values are unchanged.
         vocab = known_words.select(F.col("word").alias("tok")).distinct()
-        if broadcast_vocab:
-            vocab = F.broadcast(vocab)
         errs = (
             pages.select(
                 "doc_id", "media_ref", F.explode("_toks").alias("tok")
@@ -146,12 +140,10 @@ def estimate_page_quality(
     )
 
 
-def estimation_bins(scores: DataFrame, score_col: str = "score",
-                    bins: int = 5, step: int = 15) -> DataFrame:
-    """A5: fixed-width binning with last-bin clamp; one row per bin."""
+def estimation_bins(scores: DataFrame) -> DataFrame:
+    """A5: 5 bins of width 15 over ``score``, the last clamping every
+    higher score; one row per bin."""
     binned = scores.select(
-        F.least(
-            F.floor(F.col(score_col) / step).cast("int"), F.lit(bins - 1)
-        ).alias("bin")
+        F.least(F.floor(F.col("score") / 15).cast("int"), F.lit(4)).alias("bin")
     )
     return binned.groupBy("bin").agg(F.count("*").cast("long").alias("n"))

@@ -76,7 +76,7 @@ def punct_literal(dialect: str) -> str:
     return sql_str(ODEM_PUNCTUATIONS, dialect)
 
 
-def spans_cte(dialect: str, documents: str = "documents") -> str:
+def spans_cte(dialect: str) -> str:
     """CTE body deriving the flat spans view from ``documents``.
 
     Emits relation ``spans_input(doc_id string, kind, text, media_ref,
@@ -90,7 +90,7 @@ _sp_toks AS (
   SELECT doc_id AS src_id,
          concat('synth_', lpad({d['str']('doc_id')}, 6, '0')) AS doc_key,
          {d['split']('text', ' ')} AS tk
-  FROM {documents}
+  FROM documents
 ),
 _sp_nl AS (
   SELECT *, greatest(1, cast(ceil({d['size']('tk')} / 8.0) AS int)) AS n_lines
@@ -123,7 +123,7 @@ spans_input AS (
 )"""
 
 
-def meta_cte(dialect: str, documents: str = "documents") -> str:
+def meta_cte(dialect: str) -> str:
     """CTE body deriving the METADATA dimensions from ``documents`` —
     identically in both dialects, pure integer arithmetic keyed on the
     source doc_id.
@@ -149,7 +149,7 @@ _mt_base AS (
   SELECT doc_id AS src_id,
          concat('synth_', lpad({s('doc_id')}, 6, '0')) AS doc_key,
          greatest(1, cast(ceil({d['size'](d['split']('text', ' '))} / 8.0) AS int)) AS n_lines
-  FROM {documents}
+  FROM documents
 ),
 _mt_docs AS (
   SELECT src_id, doc_key,

@@ -345,15 +345,12 @@ def relevance_filter(doc_meta: DataFrame) -> DataFrame:
     )
 
 
-def page_blacklist_flag(
-    label_tokens: tuple[str, ...] = BLACKLIST_LABELS,
-    type_tokens: tuple[str, ...] = BLACKLIST_LOG_TYPES,
-) -> Column:
+def page_blacklist_flag(type_tokens: tuple[str, ...] = BLACKLIST_LOG_TYPES) -> Column:
     """Boolean column: this page row hits the label or logical-type
     blacklist (substring on labels, exact membership on type lists —
     reference ``is_in``, ``mets.py:417-420``)."""
     label_hit = F.exists(
-        F.array(*[F.lit(t) for t in label_tokens]),
+        F.array(*[F.lit(t) for t in BLACKLIST_LABELS]),
         lambda t: F.col("label").contains(t),
     )
     type_hit = F.arrays_overlap(
@@ -364,7 +361,6 @@ def page_blacklist_flag(
 
 def blacklisted_pages(
     page_meta: DataFrame,
-    label_tokens: tuple[str, ...] = BLACKLIST_LABELS,
     type_tokens: tuple[str, ...] = BLACKLIST_LOG_TYPES,
     ref_col: str = "media_ref",
 ) -> DataFrame:
@@ -379,7 +375,7 @@ def blacklisted_pages(
     hrefs can collapse every page to the same basename stem).
     """
     return (
-        page_meta.filter(page_blacklist_flag(label_tokens, type_tokens))
+        page_meta.filter(page_blacklist_flag(type_tokens))
         .groupBy("doc_id")
         .agg(F.collect_list(ref_col).alias("_blacklisted_refs"))
     )

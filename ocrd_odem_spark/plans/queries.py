@@ -560,25 +560,15 @@ FROM documents"""
 _N_SEEDS = 8
 
 
-def _q25_cte(dialect: str) -> str:
-    d = derive.dialect(dialect)
-    toks = d["split"]("text", " ")
-    if dialect == SPARK:
-        shingles = (
-            f"array_distinct(transform(sequence(0, greatest(size(tk) - 2, 1) - 1), "
-            f"i -> array_join(slice(tk, i + 1, 3), ' ')))"
-        )
-        minhash = (
-            "array_min(transform(sh, s -> substr(md5(concat('{seed}|', s)), 1, 16)))"
-        )
-    else:
-        shingles = (
-            f"list_distinct(list_transform(range(0, greatest(len(tk) - 2, 1)), "
-            f"i -> array_to_string(list_slice(tk, i + 1, i + 3), ' ')))"
-        )
-        minhash = (
-            "list_min(list_transform(sh, s -> substr(md5(concat('{seed}|', s)), 1, 16)))"
-        )
+def _q25_cte() -> str:
+    toks = derive.dialect(DUCKDB)["split"]("text", " ")
+    shingles = (
+        "list_distinct(list_transform(range(0, greatest(len(tk) - 2, 1)), "
+        "i -> array_to_string(list_slice(tk, i + 1, i + 3), ' ')))"
+    )
+    minhash = (
+        "list_min(list_transform(sh, s -> substr(md5(concat('{seed}|', s)), 1, 16)))"
+    )
     sig_cols = ",\n         ".join(
         minhash.replace("{seed}", str(seed)) + f" AS s{seed}" for seed in range(_N_SEEDS)
     )
@@ -595,12 +585,12 @@ _mh_sig AS (
 )"""
 
 
-def _q25(dialect: str) -> str:
+def _q25() -> str:
     cols = ", ".join(f"s{i}" for i in range(_N_SEEDS))
-    return f"WITH {_q25_cte(dialect)} SELECT doc_id, {cols} FROM _mh_sig"
+    return f"WITH {_q25_cte()} SELECT doc_id, {cols} FROM _mh_sig"
 
 
-def _q26(dialect: str) -> str:
+def _q26() -> str:
     """LSH candidates: docs sharing a 2-seed band (4 bands of 2).
 
     One equi-join per band UNIONed, then shared-band counting — an OR of
@@ -612,7 +602,7 @@ def _q26(dialect: str) -> str:
     ON a.s{2*i} = b.s{2*i} AND a.s{2*i+1} = b.s{2*i+1} AND a.doc_id < b.doc_id"""
         for i in range(4)
     )
-    return f"""WITH {_q25_cte(dialect)},
+    return f"""WITH {_q25_cte()},
 _cand AS (
 {joins}
 )
@@ -626,8 +616,9 @@ FROM _cand GROUP BY id_a, id_b"""
 
 
 def q25_spark(spark, sf_dir):
-    """MinHash signatures via the vectorised Arrow stage (r6) — identical
-    strings to the HOF SQL tier (``dedup.md5_minhash_signatures``)."""
+    """MinHash signatures via the Arrow stage
+    ``dedup.md5_minhash_signatures``, string for string the values of the
+    DuckDB SQL in ``_q25``."""
     from ..functions.dedup import md5_minhash_signatures
 
     load_views(spark, sf_dir)
@@ -642,8 +633,8 @@ def q26_spark(spark, sf_dir):
     Spark inlines multiply-referenced plans, so the signature stage would
     recompute once per join branch (8x); localCheckpoint materializes it
     once — the DataFrame mirror of 'write the signature table first' at
-    production scale.  r6: signatures come from the vectorised Arrow stage
-    instead of the interpreted HOF SQL (same values, ~8x faster)."""
+    production scale.  The signatures come from the Arrow stage
+    ``dedup.md5_minhash_signatures``, whose DuckDB mirror is ``_q25``."""
     from functools import reduce
 
     from pyspark.sql import DataFrame
@@ -1994,10 +1985,11 @@ def q56_ivf_topk_spark(spark, sf_dir):
     return ivf_topk(emb, emb.where(F.col("vec_id") < 10), cents, k=3, n_probe=2)
 
 
-def _kmeans_ctes(k: int = 8, n_iter: int = 2) -> str:
-    """Unrolled Lloyd iterations mirroring ``train_centroids`` bit-exactly:
-    quantized integer grid, argmin(cc - 2*dot) assignment with low-cid tie
-    break, floor(sum/n) double-division update, emptied cluster keeps its
+def _kmeans_ctes() -> str:
+    """Unrolled Lloyd iterations mirroring ``train_centroids`` bit-exactly
+    at ``_trained_centroids``' k=8 and two iterations: quantized integer
+    grid, argmin(cc - 2*dot) assignment with low-cid tie break,
+    floor(sum/n) double-division update, emptied cluster keeps its
     previous centroid.  Produces ``_cent(cid, cq)``."""
     parts = [
         """_v AS (
@@ -2011,10 +2003,10 @@ _gs AS (
 _c0 AS (
   SELECT cast(row_number() OVER (ORDER BY vec_id) - 1 AS int) AS cid,
          vq AS cq, list_dot_product(vq, vq) AS cc
-  FROM (SELECT vec_id, vq FROM _v ORDER BY vec_id LIMIT """ + str(k) + """)
+  FROM (SELECT vec_id, vq FROM _v ORDER BY vec_id LIMIT 8)
 )"""
     ]
-    for t in range(1, n_iter + 1):
+    for t in (1, 2):
         p = t - 1
         parts.append(f"""_r{t} AS (
   SELECT v.vec_id, v.vq, c.cid,
@@ -2034,7 +2026,7 @@ _c{t} AS (
          list_dot_product(coalesce(n.cq, p.cq), coalesce(n.cq, p.cq)) AS cc
   FROM _c{p} p LEFT JOIN _m{t} n ON n.cid = p.cid
 )""")
-    parts.append(f"_cent AS (SELECT cid, cq FROM _c{n_iter})")
+    parts.append("_cent AS (SELECT cid, cq FROM _c2)")
     return ",\n".join(parts)
 
 
@@ -2139,8 +2131,8 @@ def registry() -> dict[str, tuple[Callable[[SparkSession, str], DataFrame], str 
     # r6: Spark side runs the Arrow signature stage (same values as the
     # SQL tier — dedup.md5_minhash_signatures); the DuckDB oracle text is
     # unchanged
-    reg["q25_minhash_signature"] = (q25_spark, _q25(DUCKDB))
-    reg["q26_lsh_candidate_pairs"] = (q26_spark, _q26(DUCKDB))
+    reg["q25_minhash_signature"] = (q25_spark, _q25())
+    reg["q26_lsh_candidate_pairs"] = (q26_spark, _q26())
     reg["q27_knn_cosine"] = (q27_spark, Q27_ORACLE)
     reg["q28_document_profile"] = (q28_spark, _q28_oracle())
     reg["q29_simhash_neardup"] = (q29_simhash_spark, Q29_ORACLE)

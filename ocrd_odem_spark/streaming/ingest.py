@@ -11,24 +11,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 
-def events_rollup(
-    events: DataFrame,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
+def events_rollup(events: DataFrame) -> DataFrame:
     """Windowed event aggregation with late-data watermarking.
 
     Works identically on a static DataFrame (tests) and a streaming one
-    (production): per event_type per window, count + value sum.
+    (production): per event_type per 1-hour window, count + value sum; a
+    stream tolerates events up to 2 hours late.
     """
     src = events
     if events.isStreaming:
         # event-time watermarks need TIMESTAMP (ltz); parquet often carries ntz
         src = events.withColumn("ts", F.col("ts").cast("timestamp")).withWatermark(
-            "ts", watermark
+            "ts", "2 hours"
         )
     return (
-        src.groupBy(F.window("ts", window).alias("w"), "event_type")
+        src.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count("*").cast("long").alias("n_events"),
             F.round(F.sum("value"), 4).alias("sum_value"),

@@ -169,7 +169,7 @@ def parse_ocr_payload(
     return dialect, parse_page_lines(root, ns_uri, min_len, reorder)
 
 
-def shred_xml(df, min_len: int = 2, payload_col: str = "xml", reorder_col: str | None = None):
+def shred_xml(df, min_len: int = 2, reorder_col: str | None = None):
     """Spark stage: (doc_id, media_ref, xml[, reorder]) -> parsed line rows.
 
     Arrow-batched ``mapInPandas``; one output row per extracted line, or a
@@ -188,7 +188,7 @@ def shred_xml(df, min_len: int = 2, payload_col: str = "xml", reorder_col: str |
                 reorder = bool(getattr(rec, reorder_col)) if use_reorder else False
                 try:
                     dialect, lines = parse_ocr_payload(
-                        getattr(rec, payload_col), min_len=min_len, reorder=reorder
+                        rec.xml, min_len=min_len, reorder=reorder
                     )
                     for order, (line_id, text) in enumerate(lines):
                         rows.append(

@@ -136,7 +136,7 @@ def test_md5_hash60_matches_duckdb(spark):
     docs = spark.createDataFrame(list(enumerate(toks)), "doc_id long, text string")
     got = {
         toks[r["id"]]: r["sh"]
-        for r in dedup._simhash64_md5_arrow(docs, "text", "doc_id").collect()
+        for r in dedup._simhash64_md5_arrow(docs).collect()
     }
     assert len(got) == len(toks)
     con = duckdb.connect()
@@ -262,6 +262,28 @@ def test_textstats_profile(spark):
     one = spark.createDataFrame([(9, "ab12cd, x!")], "doc_id long, text string")
     r = textstats.document_profile(one).collect()[0]
     assert r["n_subwords"] == 6  # ab / 12 / cd / , / x / !
+
+
+def test_profile_half_way_rounding_matches_duckdb(spark):
+    """q28 rounds like its DuckDB oracle on a half-way product: 15 tokens
+    and 13 '.' in 1,000 packed characters score 0.15 * (1 - 0.013), which
+    prints as 0.14805 but is stored just below it, so DuckDB rounds it to
+    0.148 (Spark's ``F.round`` gave 0.1481)."""
+    import duckdb
+
+    from ocrd_odem_spark.plans.queries import _q28_oracle
+
+    text = " ".join(["x" * 66 + "."] * 13 + ["x" * 65, "x" * 64])
+    assert len(text.replace(" ", "")) == 1000
+    df = spark.createDataFrame([(1, text)], "doc_id long, text string")
+    got = textstats.document_profile(df).collect()[0].asDict()
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.execute("INSERT INTO documents VALUES (?, ?)", [1, text])
+    rel = con.sql(_q28_oracle())
+    want = dict(zip(rel.columns, rel.fetchone()))
+    assert want["quality"] == 0.148
+    assert got == want
 
 
 def test_multimodal_plumbing(spark):

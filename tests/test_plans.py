@@ -120,8 +120,7 @@ def test_page_stats_single_fact_shuffle(spark, docs_parquet):
 def test_quality_vocab_not_force_broadcast(spark, docs_parquet):
     """estimate_page_quality must NOT force-broadcast the vocabulary: a
     corpus vocab is unbounded, so the join strategy belongs to AQE
-    (VERDICT r2 item 1a).  The opt-in flag still plants the hint for
-    bounded dictionaries."""
+    (VERDICT r2 item 1a)."""
     from ocrd_odem_spark.operators.quality import (
         estimate_page_quality,
         page_text_stats_flat,
@@ -136,7 +135,3 @@ def test_quality_vocab_not_force_broadcast(spark, docs_parquet):
     default = estimate_page_quality(ps, known_words=vocab)
     logical = default._jdf.queryExecution().logical().toString()
     assert "ResolvedHint" not in logical and "UnresolvedHint" not in logical, logical
-
-    forced = estimate_page_quality(ps, known_words=vocab, broadcast_vocab=True)
-    logical_forced = forced._jdf.queryExecution().logical().toString()
-    assert "UnresolvedHint broadcast" in logical_forced or "ResolvedHint" in logical_forced

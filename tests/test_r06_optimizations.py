@@ -66,7 +66,7 @@ def test_simhash_md5_arrow_matches_agg(spark, docs):
     oracle = dict(con.execute(f"{ctes}\nSELECT doc_id, sh FROM _sh").fetchall())
     arrow = {
         r["id"]: r["sh"]
-        for r in dedup._simhash64_md5_arrow(docs, "text", "doc_id").collect()
+        for r in dedup._simhash64_md5_arrow(docs).collect()
     }
     assert len(arrow) == docs.count()
     assert arrow == oracle
@@ -74,7 +74,7 @@ def test_simhash_md5_arrow_matches_agg(spark, docs):
 
 def test_simhash_pairs_match_join_form(spark, docs):
     """Value-compressed pair derivation == the naive blocked self-join."""
-    sim = dedup._simhash64_md5_arrow(docs, "text", "doc_id")
+    sim = dedup._simhash64_md5_arrow(docs)
     blocked = sim.select(
         "id",
         "sh",
@@ -282,9 +282,7 @@ def test_ivf_arrow_assignment_matches_literal_ranking(spark):
     assert (0, 3) in want.values()  # the tie is exercised
     fast = {
         r["id"]: tuple(r["cids"])
-        for r in similarity._ranked_cells_arrow(
-            emb, "vec_id", "embedding", cents, 2
-        ).collect()
+        for r in similarity._ranked_cells_arrow(emb, cents, 2).collect()
     }
     assert fast == want
 
