@@ -330,7 +330,6 @@ def _run_with_checkpoint_locked(
     # visibility events; on S3-like storage rename is copy+delete and a
     # crash mid-loop left a torn, reader-visible prefix.)
     published = []
-    truncated = False
     data_dir = os.path.join(output_path, _DATA_DIR, run_id)
     if bucket_dirs:
         os.makedirs(data_dir, exist_ok=True)
@@ -339,7 +338,6 @@ def _run_with_checkpoint_locked(
         shutil.move(os.path.join(staging, name), os.path.join(data_dir, name))
         published.append(b)
         if fail_after_buckets is not None and len(published) >= fail_after_buckets:
-            truncated = True
             break
     if fail_before_commit:
         # test hook: crash AFTER the data move, BEFORE the manifest commit —
@@ -349,7 +347,6 @@ def _run_with_checkpoint_locked(
         return {"published": 0, "skipped": len(done), "run_id": run_id}
     if published:
         _commit_manifest(output_path, run_id, published, stats_by_bucket)
-    if published:
         store.mark_done(
             spark,
             [
@@ -364,9 +361,6 @@ def _run_with_checkpoint_locked(
             ],
             run_id,
         )
-    if truncated:
-        shutil.rmtree(staging, ignore_errors=True)
-        return {"published": len(published), "skipped": len(done), "run_id": run_id}
     shutil.rmtree(staging, ignore_errors=True)
     return {"published": len(published), "skipped": len(done), "run_id": run_id}
 
