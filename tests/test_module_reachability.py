@@ -8,8 +8,10 @@ is imported by some file other than itself.  The same holds one level down:
 each top-level ``def`` in ``ocrd_odem_spark/**/*.py`` must be referenced by
 non-test code (as a name, an attribute or an imported name), so a second
 form of an operator, or a stage that only its own test runs, cannot linger.
-``oracle.py`` (the reference the tests compare against) and the modules in
-``KEEP`` are exempt.
+And each defaulted parameter of those functions must be set by some non-test
+call, so an option with one value in use cannot linger either.  ``oracle.py``
+(the reference the tests compare against) and the modules in ``KEEP`` are
+exempt.
 """
 
 from __future__ import annotations
@@ -129,17 +131,17 @@ KEEP_FUNCTIONS = {
 ORACLE = f"{PKG}.oracle"
 
 
-def _package_defs() -> dict[str, str]:
-    """Dotted ``module.function`` -> function name, over every top-level
+def _package_defs() -> dict[str, ast.FunctionDef]:
+    """Dotted ``module.function`` -> its ``def``, over every top-level
     ``def`` of the package but ``oracle`` and the modules in ``KEEP``."""
-    out: dict[str, str] = {}
+    out: dict[str, ast.FunctionDef] = {}
     for path in sorted((ROOT / PKG).rglob("*.py")):
         mod = _module_name(path)
         if mod == ORACLE or mod in KEEP:
             continue
         for node in ast.parse(path.read_text(), str(path)).body:
             if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
-                out[f"{mod}.{node.name}"] = node.name
+                out[f"{mod}.{node.name}"] = node
     return out
 
 
@@ -161,8 +163,8 @@ def _referenced_names() -> set[str]:
 def test_every_package_def_has_a_non_test_reference():
     used = _referenced_names()
     unused = sorted(
-        qual for qual, name in _package_defs().items()
-        if name not in used and qual not in KEEP_FUNCTIONS
+        qual for qual, node in _package_defs().items()
+        if node.name not in used and qual not in KEEP_FUNCTIONS
     )
     assert not unused, (
         f"referenced only by tests (delete, or list in KEEP_FUNCTIONS): {unused}"
@@ -174,6 +176,105 @@ def test_keep_functions_exist_and_are_still_unreferenced():
     used = _referenced_names()
     for qual in KEEP_FUNCTIONS:
         assert qual in defs, f"KEEP_FUNCTIONS names a missing function: {qual}"
-        assert defs[qual] not in used, (
+        assert defs[qual].name not in used, (
             f"{qual} is referenced; drop it from KEEP_FUNCTIONS"
+        )
+
+
+# Defaulted parameters that no non-test call sets, kept on purpose.
+_FIXTURE = "reference-fixture behaviour the golden METS/export tests pin"
+_READING_ORDER = "PAGE reading-order reconstruction, named in the paper"
+KEEP_OPTIONS = {
+    "ocrd_odem_spark.sources.state.run_with_checkpoint.fail_before_commit": (
+        "crash injection between the data move and the manifest commit"
+    ),
+    "ocrd_odem_spark.functions.dedup.neardup_components.max_rounds": (
+        "the non-convergence error test lowers it"
+    ),
+    "ocrd_odem_spark.functions.dedup.exact_duplicates.with_stats": (
+        "the truncation report of the capped id sample"
+    ),
+    "ocrd_odem_spark.functions.similarity.lsh_cosine_topk.n_planes": (
+        "the recall test widens the buckets with it"
+    ),
+    "ocrd_odem_spark.plans.pipeline.blacklisted_pages.type_tokens": _FIXTURE,
+    "ocrd_odem_spark.plans.pipeline.blacklisted_pages.ref_col": _FIXTURE,
+    "ocrd_odem_spark.metsparse.shred_mets.file_group": _FIXTURE,
+    "ocrd_odem_spark.operators.replace.media_file_name.ext": _FIXTURE,
+    "ocrd_odem_spark.operators.replace.normalize_page_ref.prefix": _FIXTURE,
+    "ocrd_odem_spark.sources.export.export_documents.mets_col": _FIXTURE,
+    "ocrd_odem_spark.xmlparse.parse_page_lines.vertical": _READING_ORDER,
+    "ocrd_odem_spark.xmlparse.shred_xml.reorder_col": _READING_ORDER,
+}
+
+
+def _package_options() -> dict[str, tuple[str, str, int | None]]:
+    """Dotted ``module.function.parameter`` -> (function name, parameter,
+    positional index or None for keyword-only), over every defaulted
+    parameter of the defs ``_package_defs`` covers."""
+    out: dict[str, tuple[str, str, int | None]] = {}
+    for qual, node in _package_defs().items():
+        a = node.args
+        positional = a.posonlyargs + a.args
+        defaulted = [
+            (p.arg, i)
+            for i, p in enumerate(positional)
+            if i >= len(positional) - len(a.defaults)
+        ]
+        defaulted += [
+            (p.arg, None) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None
+        ]
+        for name, index in defaulted:
+            out[f"{qual}.{name}"] = (node.name, name, index)
+    return out
+
+
+def _non_test_calls() -> dict[str, list[tuple[int, set[str], bool]]]:
+    """Called name (``f(...)`` or ``x.f(...)``) -> one ``(positional
+    argument count, keyword names, has a * or ** splat)`` per non-test
+    call."""
+    out: dict[str, list[tuple[int, set[str], bool]]] = {}
+    for path in _sources():
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+            if name is None:
+                continue
+            splat = any(isinstance(x, ast.Starred) for x in node.args) or any(
+                k.arg is None for k in node.keywords
+            )
+            out.setdefault(name, []).append(
+                (len(node.args), {k.arg for k in node.keywords}, splat)
+            )
+    return out
+
+
+def _is_set(calls, fn: str, param: str, index: int | None) -> bool:
+    return any(
+        splat or param in keywords or (index is not None and n_pos > index)
+        for n_pos, keywords, splat in calls.get(fn, ())
+    )
+
+
+def test_every_package_option_is_set_outside_tests():
+    calls = _non_test_calls()
+    unset = sorted(
+        qual for qual, (fn, param, index) in _package_options().items()
+        if not _is_set(calls, fn, param, index) and qual not in KEEP_OPTIONS
+    )
+    assert not unset, (
+        "options no non-test call sets (make them constants, or list in "
+        f"KEEP_OPTIONS): {unset}"
+    )
+
+
+def test_keep_options_exist_and_are_still_unset():
+    options = _package_options()
+    calls = _non_test_calls()
+    for qual in KEEP_OPTIONS:
+        assert qual in options, f"KEEP_OPTIONS names a missing option: {qual}"
+        assert not _is_set(calls, *options[qual]), (
+            f"{qual} is set by non-test code; drop it from KEEP_OPTIONS"
         )
