@@ -98,10 +98,10 @@ def quality_score(text: Column) -> Column:
     """[0,1] curation score: length saturation minus noise penalties."""
     feats = quality_features(text)
     length_term = F.least(F.lit(1.0), feats["n_tokens"] / F.lit(100.0))
-    noise = feats["punct_ratio"] + feats["digit_ratio"]
-    return portable_round(
-        F.greatest(F.lit(0.0), length_term * (F.lit(1.0) - noise)), 4
-    )
+    # subtract one ratio after the other, as q28's oracle does: 1 - (p + d)
+    # can differ from 1 - p - d in the last bit and split the rounding
+    clean = F.lit(1.0) - feats["punct_ratio"] - feats["digit_ratio"]
+    return portable_round(F.greatest(F.lit(0.0), length_term * clean), 4)
 
 
 def fingerprint(text: Column) -> Column:

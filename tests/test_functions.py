@@ -265,24 +265,31 @@ def test_textstats_profile(spark):
 
 
 def test_profile_half_way_rounding_matches_duckdb(spark):
-    """q28 rounds like its DuckDB oracle on a half-way product: 15 tokens
-    and 13 '.' in 1,000 packed characters score 0.15 * (1 - 0.013), which
-    prints as 0.14805 but is stored just below it, so DuckDB rounds it to
-    0.148 (Spark's ``F.round`` gave 0.1481)."""
+    """q28 scores like its DuckDB oracle on rows where Spark's arithmetic
+    split from it.  Doc 1 (15 tokens, 13 '.' in 1,000 packed characters)
+    scores 0.15 * (1 - 0.013), which prints as 0.14805 but is stored just
+    below it, so DuckDB rounds it to 0.148 (Spark's ``F.round`` gave
+    0.1481).  Doc 2 (2 tokens, 7 '.' and 168 digits in 10,000 packed
+    characters) scores 0.0196 as ``1 - punct - digit``; ``1 - (punct +
+    digit)`` gave 0.0197."""
     import duckdb
 
     from ocrd_odem_spark.plans.queries import _q28_oracle
 
-    text = " ".join(["x" * 66 + "."] * 13 + ["x" * 65, "x" * 64])
-    assert len(text.replace(" ", "")) == 1000
-    df = spark.createDataFrame([(1, text)], "doc_id long, text string")
-    got = textstats.document_profile(df).collect()[0].asDict()
+    docs = [
+        (1, " ".join(["x" * 66 + "."] * 13 + ["x" * 65, "x" * 64])),
+        (2, "x" * 4825 + "." * 7 + "1" * 168 + " " + "x" * 5000),
+    ]
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    prof = textstats.document_profile(df)
+    got = sorted(tuple(r) for r in prof.collect())
     con = duckdb.connect()
     con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
-    con.execute("INSERT INTO documents VALUES (?, ?)", [1, text])
+    con.executemany("INSERT INTO documents VALUES (?, ?)", docs)
     rel = con.sql(_q28_oracle())
-    want = dict(zip(rel.columns, rel.fetchone()))
-    assert want["quality"] == 0.148
+    assert rel.columns == prof.columns
+    want = sorted(rel.fetchall())
+    assert [r[rel.columns.index("quality")] for r in want] == [0.148, 0.0196]
     assert got == want
 
 
