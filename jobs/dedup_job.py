@@ -53,6 +53,9 @@ def main(argv: list[str] | None = None) -> int:
     spark.sparkContext.setLogLevel("WARN")
 
     from ocrd_odem_spark.functions import dedup
+    from ocrd_odem_spark.session import _stop_promptly
+
+    _stop_promptly(spark.sparkContext)
 
     docs = spark.read.parquet(args.input)
     cand, cstats = dedup.minhash_lsh_candidates(

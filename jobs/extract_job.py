@@ -51,7 +51,10 @@ def main(argv: list[str] | None = None) -> int:
     spark.sparkContext.setLogLevel("WARN")
 
     from ocrd_odem_spark.plans import pipeline
+    from ocrd_odem_spark.session import _stop_promptly
     from ocrd_odem_spark.sources import state
+
+    _stop_promptly(spark.sparkContext)
 
     docs = spark.read.parquet(args.input)
     if args.range_partitions:

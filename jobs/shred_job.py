@@ -34,6 +34,9 @@ def main(argv: list[str] | None = None) -> int:
     spark.sparkContext.setLogLevel("WARN")
 
     from ocrd_odem_spark import metsparse, xmlparse
+    from ocrd_odem_spark.session import _stop_promptly
+
+    _stop_promptly(spark.sparkContext)
 
     parsed = xmlparse.shred_xml(spark.read.parquet(args.xml), min_len=args.min_len)
     parsed = parsed.persist()

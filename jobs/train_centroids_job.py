@@ -39,6 +39,9 @@ def main() -> None:
     )
     try:
         from ocrd_odem_spark.plans import queries as Q
+        from ocrd_odem_spark.session import _stop_promptly
+
+        _stop_promptly(spark.sparkContext)
 
         store = Q._centroid_store(args.sf_dir, args.k, args.n_iter)
         if store.exists():

@@ -12,9 +12,16 @@ CPython 3.11 re-read each cached zip importer's central directory: 0.2-0.5 s
 per task, more than a 250-document extract task spends in the extract's
 own ``mapInArrow`` function (README "Python workers" splits such a task by
 phase).  The daemon imports ``pyspark`` from the installed package instead.
-The ``jobs/*.py`` spark-submit entry points build their own session and are
-left alone: they ship this package with ``--py-files``, so it is not
-importable when a worker daemon starts.
+The ``jobs/*.py`` spark-submit entry points build their own session and keep
+Spark's worker daemon: they ship this package with ``--py-files``, so it is
+not importable when a worker daemon starts.
+
+``get_spark`` (and each job) also swaps the context's accumulator update
+handler for one that returns as soon as the session stops: PySpark's own
+``select``s the JVM's connection in 1-s steps, and the JVM opens that
+connection at the first Python task's merge, so each ``SparkSession.stop()``
+after a Python stage waited ~1 s for it (README "Python workers", "Session
+stop").
 
 Spark's ``pythonInitTime`` SQL metric also counts the time a reused worker
 waits for its next task, so it is not pure worker set-up time.
@@ -23,8 +30,50 @@ waits for its next task, so it is not pure worker set-up time.
 from __future__ import annotations
 
 import os
+import select
 
+from pyspark import SparkContext
+from pyspark.accumulators import UpdateRequestHandler, _accumulatorRegistry, pickleSer
+from pyspark.serializers import read_int
 from pyspark.sql import SparkSession
+
+#: how often the accumulator handler checks whether its server is stopping
+_ACCUMULATOR_POLL_S = 0.02
+
+
+class _PromptStopHandler(UpdateRequestHandler):
+    """PySpark's accumulator update handler, stopping within ~20 ms.
+
+    The protocol is PySpark's: the auth token once (none on a Unix socket),
+    then per merge an ``int`` count of pickled ``(aid, update)`` pairs, each
+    added into ``_accumulatorRegistry``, and a 1-byte ack.  The loop ends on
+    ``BaseServer.shutdown``'s own flag, not on ``server_shutdown``, which is
+    set before it: a handler that returned in between would send
+    ``serve_forever`` back into its 0.5-s poll.
+    """
+
+    def handle(self) -> None:
+        server = self.server
+        token = server.auth_token
+        while not server._BaseServer__shutdown_request:
+            if not select.select([self.rfile], [], [], _ACCUMULATOR_POLL_S)[0]:
+                continue
+            if token is not None:
+                if self.rfile.read(len(token)) != token.encode("utf-8"):
+                    raise ValueError(
+                        "The value of the provided token to the "
+                        "AccumulatorServer is not correct."
+                    )
+                token = None
+            for _ in range(read_int(self.rfile)):
+                aid, update = pickleSer._read_with_length(self.rfile)
+                _accumulatorRegistry[aid] += update
+            self.wfile.write(b"\x01")
+
+
+def _stop_promptly(sc: SparkContext) -> None:
+    """Serve ``sc``'s accumulator updates with ``_PromptStopHandler``."""
+    sc._accumulatorServer.RequestHandlerClass = _PromptStopHandler
 
 
 def get_spark(
@@ -71,4 +120,6 @@ def get_spark(
         builder = builder.config("spark.driver.extraJavaOptions", java_opts)
     for key, val in (extra_conf or {}).items():
         builder = builder.config(key, val)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    _stop_promptly(spark.sparkContext)
+    return spark
